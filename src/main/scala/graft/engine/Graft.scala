@@ -87,15 +87,4 @@ object Graft {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
-
-  /** Apply the engine's pinned SQL configs to an existing session
-    * (used when the driver owns session construction, e.g. Verify). */
-  def pin(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-    spark
-  }
 }

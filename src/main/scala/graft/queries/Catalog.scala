@@ -7252,7 +7252,7 @@ object Catalog {
           .select($"epoch", $"doc_id", $"verdict", $"match_id", $"j_r")
           .orderBy($"epoch", $"doc_id")
         // verdicts are eagerly checkpointed; the scratch state can go
-        graft.streaming.NearDedupIngest.deleteRecursively(root)
+        graft.streaming.FsUtil.deleteRecursively(java.nio.file.Paths.get(root))
         out
       },
       Some("""WITH d AS (SELECT doc_id, text, CAST(substr(source, 4) AS INT) AS src_n

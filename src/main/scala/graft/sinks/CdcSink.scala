@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.CdcMerge
-import graft.streaming.CdcStream
+import graft.streaming.{CdcStream, ManifestState}
 
 /** The CDC state-sink seam: where each decoded micro-batch lands.
   *
@@ -16,12 +16,13 @@ import graft.streaming.CdcStream
   * a crash between merge and checkpoint commit replays the batch, and
   * the state must not change on the second application.
   *
-  * Local/test implementations store state as parquet snapshots
-  * ([[ParquetSnapshotSink]], [[BucketedParquetSink]]); the production
-  * implementation point is [[MergeIntoSink]] — MERGE INTO on a
-  * transactional v2 table (Delta/Iceberg-style), same latest-wins
-  * plan, with the table format supplying the file pruning that
-  * [[BucketedParquetSink]] approximates with hash buckets.
+  * Local implementations store state as parquet: a whole snapshot
+  * ([[ParquetSnapshotSink]]) or manifest-committed hash buckets
+  * ([[BucketedParquetSink]]); the production implementation point is
+  * [[MergeIntoSink]] — MERGE INTO on a transactional v2 table
+  * (Delta/Iceberg-style), same latest-wins plan, with the table format
+  * supplying the file pruning that [[BucketedParquetSink]]
+  * approximates with hash buckets.
   */
 trait CdcSink extends Serializable {
   /** Merge one decoded micro-batch ([[CdcStream.classify]] schema). */
@@ -41,14 +42,16 @@ final class ParquetSnapshotSink(stateDir: String) extends CdcSink {
     spark.read.parquet(stateDir)
 }
 
-/** Hash-bucketed parquet state: a batch rewrites only the buckets its
-  * keys touch — O(delta + touched buckets) per merge, the plain-file
-  * approximation of transactional MERGE file pruning. */
+/** Hash-bucketed parquet state committed through [[ManifestState]]: a
+  * batch rewrites only the buckets its keys touch — O(delta + touched
+  * buckets) per merge, the plain-file approximation of transactional
+  * MERGE file pruning — and readers see exactly the committed
+  * versions, so concurrent writers and readers stay consistent. */
 final class BucketedParquetSink(stateDir: String, nBuckets: Int) extends CdcSink {
   override def merge(batch: DataFrame): Unit =
-    CdcStream.mergeBatchBucketed(batch, stateDir, nBuckets)
+    ManifestState.mergeBatch(batch, stateDir, nBuckets)
   override def state(spark: SparkSession): DataFrame =
-    spark.read.parquet(stateDir).drop("b")
+    ManifestState.read(spark, stateDir)
 }
 
 /** MERGE INTO on a transactional catalog table — the production sink.

@@ -410,52 +410,10 @@ object CdcStream {
     replace(Paths.get(tmp), statePath)
   }
 
-  /** Bucketed incremental merge: state lives as `stateDir/b=<n>`
-    * partitions keyed by hash(id) % nBuckets; a micro-batch reads and
-    * rewrites ONLY the buckets its keys touch — per-batch cost is
-    * O(delta + touched-bucket rows), not O(total state). This is the
-    * plain-parquet approximation of transactional MERGE INTO file
-    * pruning, and lifts the measured O(state) throughput plateau of
-    * [[mergeBatch]] for small-delta / large-state workloads.
-    * Same latest-wins + retained-tombstones semantics.
-    */
-  def mergeBatchBucketed(batch: DataFrame, stateDir: String, nBuckets: Int): Unit = synchronized {
-    require(nBuckets > 0)
-    val spark = batch.sparkSession
-    val delta = batch.filter(col("event_type") =!= Malformed)
-      .withColumn("b", pmod(xxhash64(col("id")), lit(nBuckets)).cast("int"))
-      .cache()
-    try {
-      val affected = delta.select("b").distinct().collect().map(_.getInt(0)).sorted
-      if (affected.nonEmpty) {
-        val existingPaths = affected.map(b => s"$stateDir/b=$b")
-          .filter(p => statePresent(Paths.get(p)))
-        val unioned =
-          if (existingPaths.nonEmpty)
-            spark.read.option("basePath", stateDir).parquet(existingPaths: _*)
-              .unionByName(delta)
-          else delta
-        val newState = CdcMerge.latestWins(
-          unioned, Seq("id"),
-          Seq(col("lsn").desc_nulls_last, col("ts_ms").desc_nulls_last))
-        val tmp = stateDir + ".tmpb"
-        // repartition by bucket before partitionBy: one writer and ONE
-        // file per bucket per merge — otherwise every task opens a
-        // writer per bucket and the state degrades into thousands of
-        // tiny files that compound across batches
-        newState.repartition(col("b"))
-          .write.mode("overwrite").partitionBy("b").parquet(tmp)
-        Files.createDirectories(Paths.get(stateDir))
-        affected.foreach { b =>
-          val src = Paths.get(s"$tmp/b=$b")
-          if (Files.exists(src)) swapDirs(src, Paths.get(s"$stateDir/b=$b"))
-        }
-        deleteRecursively(Paths.get(tmp))
-      }
-    } finally delta.unpersist()
-  }
-
-  /** File-source stream variant using the bucketed merge. */
+  /** File-source stream variant over the bucketed manifest state
+    * ([[graft.sinks.BucketedParquetSink]]): a micro-batch rewrites only
+    * the buckets its keys touch — O(delta + touched buckets), not
+    * O(state). */
   def runFileStreamBucketed(spark: SparkSession, inputDir: String, checkpointDir: String,
                             stateDir: String, nBuckets: Int,
                             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
@@ -473,11 +431,19 @@ object CdcStream {
       .orderBy(col("create_time").desc, col("id"))
 
   /** Read the materialized view (state minus tombstones) with proper
-    * timestamp columns. An empty stream produces no state snapshot —
-    * that's an empty view, not an error. */
+    * timestamp columns, from either state layout: a root holding a
+    * `MANIFEST` is bucketed state and reads through [[ManifestState]]
+    * (exactly the committed versions), anything else is a whole
+    * snapshot. An empty stream produces no state — that's an empty
+    * view, not an error. */
   def readView(spark: SparkSession, stateDir: String): DataFrame = {
+    val root = Paths.get(stateDir)
+    val stored =
+      if (Files.exists(root.resolve("MANIFEST"))) ManifestState.read(spark, stateDir)
+      else if (statePresent(root)) spark.read.parquet(stateDir)
+      else spark.emptyDataFrame
     val state =
-      if (statePresent(Paths.get(stateDir))) spark.read.parquet(stateDir)
+      if (stored.columns.nonEmpty) stored
       else spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](),
         StructType(StructField("event_type", StringType) +: rowSchema.fields.toSeq))
@@ -489,7 +455,8 @@ object CdcStream {
               col("message"), col("username"))
   }
 
-  /** Crash-safe directory swap shared by the snapshot-state writers.
+  /** Crash-safe directory swap shared by the whole-snapshot state
+    * writers (bucketed state commits through [[ManifestState]]).
     *
     * The naive delete-then-move loses the ENTIRE state if the process
     * dies between the two calls (the reader then sees "no state" and
@@ -514,10 +481,10 @@ object CdcStream {
   /** Heal `p` from a crash between replace()'s two renames: if the
     * live dir is missing but its `.*.old` backup exists, restore it.
     * When the live dir exists the backup is left alone — the next
-    * [[replace]] of `p` clears it, and its underscore prefix keeps
-    * every Spark reader from ever seeing it (deleting it here would
-    * race the writer's backup→install window and could drop the only
-    * complete copy). */
+    * [[replace]] of `p` clears it, and its dot prefix keeps every
+    * Spark reader from ever seeing it (deleting it here would race the
+    * writer's backup→install window and could drop the only complete
+    * copy). */
   private[streaming] def healDir(p: Path): Unit = {
     val old = backupOf(p)
     val legacy = legacyBackupOf(p)
@@ -537,89 +504,47 @@ object CdcStream {
              _: java.nio.file.DirectoryNotEmptyException => ()
       }
     // live dir present + stranded legacy backup: nothing ever clears
-    // it (replace() only clears the dot-prefixed name) and partition
-    // discovery WOULD index it — delete it here. Cannot race a writer:
-    // current code never creates the legacy name.
+    // it (replace() only clears the dot-prefixed name) and a reader of
+    // the parent dir would see it — delete it here. Cannot race a
+    // writer: current code never creates the legacy name.
     if (Files.exists(p) && Files.exists(legacy))
-      try deleteRecursively(legacy)
+      try FsUtil.deleteRecursively(legacy)
       catch { case _: java.io.IOException => () } // concurrent healer won
   }
 
-  /** The state-read gate: heal first, then report existence. For a
-    * bucketed root this also restores any bucket whose swap crashed
-    * mid-rename (live `b=N` gone, `.b=N.old` stranded) — without it a
-    * full-view `spark.read.parquet(root)` would silently miss that
-    * bucket's rows until the next merge touched it. */
+  /** The state-read gate: heal first, then report existence. */
   private[streaming] def statePresent(p: Path): Boolean = {
     healDir(p)
-    healBuckets(p)
     Files.exists(p)
   }
 
-  /** Restore every `.<name>.old` child of `root` whose live sibling is
-    * missing. A no-op on plain (non-bucketed) state dirs: parquet part
-    * files never match the backup naming. */
-  private[streaming] def healBuckets(root: Path): Unit =
-    if (Files.isDirectory(root)) {
-      // Files.list holds an open directory fd until closed — and this
-      // runs on EVERY state read (statePresent), so an unclosed stream
-      // leaks one fd per poll until the JVM hits its ulimit.
-      val s = Files.list(root)
-      try s.forEach { c =>
-        val n = c.getFileName.toString
-        // both backup generations: current `.b=N.old` and legacy
-        // `b=N.old` (healDir restores-or-deletes as appropriate)
-        if (n.endsWith(".old")) {
-          val live =
-            if (n.startsWith(".")) n.stripPrefix(".").stripSuffix(".old")
-            else n.stripSuffix(".old")
-          healDir(c.resolveSibling(live))
-        }
-      } finally s.close()
-    }
-
-  /** Backup path for `p`. The leading dot is load-bearing: bucketed
-    * state roots are read with partition discovery
-    * (`spark.read.parquet(stateDir)`), and a sibling named `b=5.old`
-    * would be indexed as partition `b='5.old'` — serving the stale
-    * backup rows as live data. Spark's file index
-    * (`HadoopFSUtils.shouldFilterOutPathName`) skips dot-prefixed
-    * paths unconditionally — but NOT underscore-prefixed ones whose
-    * name contains `=` — so `.b=5.old` is invisible to every reader no
-    * matter when a crash strands it. */
+  /** Backup path for `p`. The leading dot is load-bearing: Spark's
+    * file index (`HadoopFSUtils.shouldFilterOutPathName`) skips
+    * dot-prefixed paths unconditionally, so a backup stranded by a
+    * crash is invisible to every reader of the parent dir. */
   private[streaming] def backupOf(p: Path): Path =
     p.resolveSibling("." + p.getFileName.toString + ".old")
 
   /** The PRE-dot-prefix backup name (`<name>.old`) earlier builds
     * wrote. Never created anymore, but a crash under the old naming
-    * can have stranded one — and for a bucketed root, partition
-    * discovery would index `b=5.old` as partition b='5.old' and serve
-    * its stale rows as live data (the exact bug the dot prefix
-    * fixed). [[healDir]] still honors it: restore when the live dir
-    * is missing, delete when the live dir exists. Deleting on the
-    * read path is safe precisely BECAUSE current code never writes
-    * this name — it cannot be a racing writer's in-flight backup. */
+    * can have stranded one. [[healDir]] still honors it: restore when
+    * the live dir is missing, delete when the live dir exists.
+    * Deleting on the read path is safe precisely BECAUSE current code
+    * never writes this name — it cannot be a racing writer's in-flight
+    * backup. */
   private[streaming] def legacyBackupOf(p: Path): Path =
     p.resolveSibling(p.getFileName.toString + ".old")
-
-  private[streaming] def deleteRecursively(p: Path): Unit = if (Files.exists(p)) {
-    if (Files.isDirectory(p)) {
-      val s = Files.list(p)
-      try s.forEach(c => deleteRecursively(c)) finally s.close()
-    }
-    Files.delete(p)
-  }
 
   private def replace(src: Path, dst: Path): Unit = {
     val old = backupOf(dst)
     var attempts = 0
     while (true) {
-      healDir(dst)            // recover a prior crash before touching anything
-      deleteRecursively(old)  // stale backup from a completed earlier swap
+      healDir(dst)                   // recover a prior crash before touching anything
+      FsUtil.deleteRecursively(old)  // stale backup from a completed earlier swap
       if (Files.exists(dst)) Files.move(dst, old, StandardCopyOption.ATOMIC_MOVE)
       try {
         Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
-        deleteRecursively(old)
+        FsUtil.deleteRecursively(old)
         return
       } catch {
         // A racing reader's healDir restored the backup between our

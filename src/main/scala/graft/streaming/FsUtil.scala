@@ -1,12 +1,13 @@
 package graft.streaming
 
+import java.nio.file.Files
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** Filesystem helpers shared by the ingest twins ([[IngestDedup]],
-  * [[WinnowIngest]], [[DupSpanIngest]]).
+/** Filesystem helpers shared by the streaming state writers.
   *
-  * Their state reads must probe existence through Spark's Hadoop
+  * State reads must probe existence through Spark's Hadoop
   * FileSystem layer — the SAME layer the writes go through — not
   * `java.io.File`, which only resolves local paths: an HDFS/S3 index
   * directory would always look absent to a local-file probe, and the
@@ -46,4 +47,32 @@ object FsUtil {
     require(!hasTopLevelParquet(spark, dir),
       s"$dir holds append-mode parquet fragments but no manifest — " +
       s"not a bucketed state; $migrate")
+
+  /** Refuse a manifest-less root whose `b=<n>/` dirs hold parquet
+    * files directly — the layout of the retired in-place bucket merge,
+    * which [[ManifestState]] (buckets hold only `v-<epoch>-…/` version
+    * dirs) would read as empty, silently resetting the view. The twin
+    * of [[requireNotAppendLayout]] for the bucketed views; call only
+    * when the manifest has no buckets. */
+  def requireNotInPlaceBuckets(spark: SparkSession, dir: String): Unit = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    require(!(fs.exists(p) && fs.listStatus(p).exists(b =>
+      b.isDirectory && b.getPath.getName.matches("b=\\d+") &&
+        fs.listStatus(b.getPath).exists(s =>
+          s.isFile && s.getPath.getName.endsWith(".parquet")))),
+      s"$dir holds b=<n> buckets from the retired in-place bucketed " +
+      "merge but no MANIFEST; re-bootstrap it into a fresh root by " +
+      "merging its rows (spark.read.parquet(<old root>).drop(\"b\")) " +
+      "as one batch, the way CdcStream.bootstrapFromTable seeds a view")
+  }
+
+  /** Local-filesystem recursive delete; a missing path is a no-op. */
+  def deleteRecursively(p: java.nio.file.Path): Unit = if (Files.exists(p)) {
+    if (Files.isDirectory(p)) {
+      val s = Files.list(p)
+      try s.forEach(c => deleteRecursively(c)) finally s.close()
+    }
+    Files.delete(p)
+  }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Measures the O(state)-vs-O(delta) difference between the snapshot
-  * merge and the bucketed incremental merge: build a large state once,
+  * merge and the bucketed manifest merge: build a large state once,
   * then apply many small update batches to both and time them.
   *
   * Usage: runMain graft.streaming.IncrementalMergeBench [stateKeys] [batches] [batchSize]
@@ -34,14 +34,13 @@ object IncrementalMergeBench {
     val spark = graft.engine.Graft.session(s"local[$cpus]", cpus.toInt)
 
     val root = Files.createTempDirectory("incmerge").toString
-    val plainDir = s"$root/plain"; val bktDir = s"$root/bucketed"
+    val plainDir = s"$root/plain"
     val mfDir = s"$root/manifest"
     val nBuckets = 1024
 
-    // seed all three states with the same bulk load
+    // seed both states with the same bulk load
     val base = changes(spark, 0, stateKeys, stateKeys)
     CdcStream.mergeBatch(base, plainDir)
-    CdcStream.mergeBatchBucketed(base, bktDir, nBuckets)
     ManifestState.mergeBatch(base, mfDir, nBuckets)
 
     def applyDeltas(merge: DataFrame => Unit): Double = {
@@ -53,16 +52,12 @@ object IncrementalMergeBench {
     }
 
     val plainSec = applyDeltas(b => CdcStream.mergeBatch(b, plainDir))
-    val bktSec = applyDeltas(b => CdcStream.mergeBatchBucketed(b, bktDir, nBuckets))
-    // manifest mode = bucketed + snapshot isolation + commit protocol;
-    // its delta vs bucketed is the price of multi-writer safety
     val mfSec = applyDeltas(b => ManifestState.mergeBatch(b, mfDir, nBuckets))
 
-    // row-identity check point: all three modes have seen exactly the
-    // same deltas HERE (the concurrent phase below adds further
-    // batches to the manifest state only)
+    // row-identity check point: both modes have seen exactly the same
+    // deltas HERE (the concurrent phase below adds further batches to
+    // the manifest state only)
     val a = spark.read.parquet(plainDir).count()
-    val b = spark.read.parquet(bktDir).count()
     val c = ManifestState.read(spark, mfDir).count()
 
     // concurrent manifest writers: same TOTAL batch count split over 2
@@ -111,7 +106,7 @@ object IncrementalMergeBench {
     if (dataFiles > fileBound)
       println(s"""{"bench_error":"file_bound","msg":"bucketed-state file count $dataFiles exceeds the GC bound $fileBound"}""")
 
-    println(f"""{"metric":"incremental_merge","state_keys":$stateKeys,"batches":$batches,"batch_size":$batchSize,"plain_sec_per_batch":${plainSec / batches}%.3f,"bucketed_sec_per_batch":${bktSec / batches}%.3f,"manifest_sec_per_batch":${mfSec / batches}%.3f,"manifest_2writer_sec_per_batch":${mfcSec / math.max(1, concBatches)}%.3f,"speedup":${plainSec / bktSec}%.1f,"rows_plain":$a,"rows_bucketed":$b,"rows_manifest":$c,"manifest_data_files":$dataFiles,"file_bound":$fileBound}""")
+    println(f"""{"metric":"incremental_merge","state_keys":$stateKeys,"batches":$batches,"batch_size":$batchSize,"plain_sec_per_batch":${plainSec / batches}%.3f,"manifest_sec_per_batch":${mfSec / batches}%.3f,"manifest_2writer_sec_per_batch":${mfcSec / math.max(1, concBatches)}%.3f,"speedup":${plainSec / mfSec}%.1f,"rows_plain":$a,"rows_manifest":$c,"manifest_data_files":$dataFiles,"file_bound":$fileBound}""")
     spark.stop()
   }
 }

@@ -9,14 +9,16 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.CdcMerge
 
-/** Multi-writer-safe bucketed CDC state: versioned bucket directories
+/** The engine's one bucketed-state layer: versioned bucket directories
   * committed through a single manifest file — the plain-filesystem
   * approximation of a transactional table format's snapshot +
-  * optimistic-commit protocol.
+  * optimistic-commit protocol. Every bucketed state commits here: the
+  * CDC view ([[graft.sinks.BucketedParquetSink]]), the snapshot-diff,
+  * join and SCD2 views, and the ingest twins.
   *
-  * [[CdcStream.mergeBatchBucketed]] swaps bucket directories in place,
-  * which is only safe under one `synchronized` JVM: a second writer
-  * interleaves swaps, and a reader can catch a bucket mid-move. Here:
+  * Swapping bucket directories in place would only be safe under one
+  * `synchronized` JVM: a second writer interleaves swaps, and a reader
+  * can catch a bucket mid-move. Here:
   *
   *  - Layout: `root/b=<k>/v-<epoch>-<writer>/part-*.parquet` —
   *    versions are immutable once written; `root/MANIFEST` maps each
@@ -286,9 +288,14 @@ object ManifestState {
     if (paths.isEmpty) spark.emptyDataFrame else spark.read.parquet(paths: _*)
   }
 
-  /** Read the current state (latest committed snapshot). */
-  def read(spark: SparkSession, root: String): DataFrame =
-    readSnapshot(spark, root, readManifest(root))
+  /** Read the current state (latest committed snapshot). A root that
+    * holds buckets but no manifest fails loud instead of reading empty
+    * ([[FsUtil.requireNotInPlaceBuckets]]). */
+  def read(spark: SparkSession, root: String): DataFrame = {
+    val m = readManifest(root)
+    if (m.buckets.isEmpty) FsUtil.requireNotInPlaceBuckets(spark, root)
+    readSnapshot(spark, root, m)
+  }
 
   /** Time travel: the state exactly as of commit `epoch`. Valid while
     * the versions that manifest references survive GC — i.e. for the
@@ -444,6 +451,7 @@ object ManifestState {
       base.nb.foreach(n => require(n == nBuckets,
         s"bucketed state at $root was committed with nBuckets=$n; " +
         s"this merge passed $nBuckets"))
+      if (base.buckets.isEmpty) FsUtil.requireNotInPlaceBuckets(spark, root)
       val version = s"v-${base.epoch + 1}-$callId-$attempt"
       // drop THIS attempt's on-disk artifacts: the stage tmp dir (a
       // heavy-phase exception can leave it mid-write) and any version
@@ -451,9 +459,9 @@ object ManifestState {
       // against the steady-state file bound forever. Shared by the
       // lost-race retry and the fail-fast rethrow below.
       def dropAttemptArtifacts(): Unit = {
-        CdcStream.deleteRecursively(Paths.get(s"$root/.stage-$version"))
+        FsUtil.deleteRecursively(Paths.get(s"$root/.stage-$version"))
         affected.foreach { k =>
-          CdcStream.deleteRecursively(Paths.get(versionPath(root, k, version)))
+          FsUtil.deleteRecursively(Paths.get(versionPath(root, k, version)))
         }
       }
       try {
@@ -482,7 +490,7 @@ object ManifestState {
           } else false
         }
         val emptied = affected.diff(written)
-        CdcStream.deleteRecursively(Paths.get(tmp))
+        FsUtil.deleteRecursively(Paths.get(tmp))
 
         // commit phase — lock guards only the manifest compare+swap.
         // Conflict detection is PER-BUCKET: a concurrent commit to
@@ -562,7 +570,7 @@ object ManifestState {
           .filter(v => versionEpoch(v) < versionEpoch(live))
           .sortBy(versionEpoch)
         superseded.dropRight(math.max(1, keepGenerations)).foreach(v =>
-          CdcStream.deleteRecursively(Paths.get(versionPath(root, k, v))))
+          FsUtil.deleteRecursively(Paths.get(versionPath(root, k, v))))
       }
     }
   }

@@ -137,19 +137,6 @@ object NearDedupIngest {
     * specs can crash at every prefix and assert replay convergence. */
   private[graft] var onPatchCommitted: () => Unit = () => ()
 
-  /** Local-filesystem recursive delete for SCRATCH state (the q180
-    * catalog spelling runs the twin against throwaway temp dirs and
-    * discards them once the verdict frame is checkpointed). */
-  private[graft] def deleteRecursively(root: String): Unit = {
-    val p = java.nio.file.Paths.get(root)
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
-      finally walk.close()
-    }
-  }
-
   // ---- thr/ngram are state semantics: record once, refuse drift ----
 
   private def metaPath(indexDir: String) = new Path(s"$indexDir/META")

@@ -70,51 +70,26 @@ object SnapshotDiffView {
         "sync (checkpoint dir wiped while state was kept?); refusing to " +
         "silently drop batches")
 
-    // Per-key batch winner by the (ts, event_id) total order; value
-    // rides in the struct but never decides (the pair is unique).
-    val delta = batch
-      .groupBy(col("user_id"))
-      .agg(max(struct(col("ts"), col("event_id"), col("value"))).as("d"))
-
+    val delta = batchWinners(batch)
     val old =
       if (Files.exists(statePath)) spark.read.parquet(stateDir) // healed by the fence check above
       else emptyState(spark)
-
-    val touchedOld = old.join(delta.select(col("user_id")), Seq("user_id"), "left_semi")
-      .select(col("user_id"), struct(col("ts"), col("event_id"), col("value")).as("o"))
-
-    val merged = delta.join(touchedOld, Seq("user_id"), "left")
-      .select(col("user_id"), col("o"),
-        when(col("o").isNull || col("d") > col("o"), col("d")).otherwise(col("o")).as("n"))
+    val merged = mergeWinners(delta, old)
       .localCheckpoint() // read twice: diff emission + state rewrite
+    writeDiff(merged, diffDir, batchId)
 
-    val diff = merged.select(
-      col("user_id"),
-      round(col("o.value"), 4).as("v1_r"),
-      round(col("n.value"), 4).as("v2_r"),
-      when(col("o").isNull, lit("added"))
-        .when(col("o.value") === col("n.value"), lit("same"))
-        .otherwise(lit("changed")).as("status"),
-      round(col("n.value") - col("o.value"), 4).as("delta_r"))
-    diff.write.mode("overwrite").parquet(s"$diffDir/batch_seq=$batchId")
-
-    val carryover = old.join(delta.select(col("user_id")), Seq("user_id"), "left_anti")
-    val nextState = carryover.unionByName(
-      merged.select(col("user_id"), col("n.ts").as("ts"),
-        col("n.event_id").as("event_id"), col("n.value").as("value")))
     val tmp = stateDir + ".tmp"
-    nextState.write.mode("overwrite").parquet(tmp)
+    nextState(old, merged).write.mode("overwrite").parquet(tmp)
     Files.write(Paths.get(tmp, AppliedMarker), batchId.toString.getBytes)
     CdcStream.swapDirs(Paths.get(tmp), statePath)
     graft.operators.Iterate.unpersistCheckpoint(merged)
   }
 
   /** Bucketed merge — the 100 TB layout the plain [[mergeBatch]]'s
-    * O(state) carryover rewrite approximates: state lives as
-    * `stateDir/b=<n>` partitions keyed by hash(user_id) % nBuckets,
-    * and a micro-batch reads and rewrites ONLY its touched buckets
-    * (the [[CdcStream.mergeBatchBucketed]] discipline, with per-bucket
-    * crash-safe swaps).
+    * O(state) carryover rewrite approximates: state is a
+    * [[ManifestState]] root bucketed by hash(user_id) % nBuckets, and a
+    * micro-batch reads and rewrites ONLY its touched buckets
+    * ([[ManifestState.patchBuckets]]).
     *
     * Replay protocol differs from the plain merge BY CONSTRUCTION
     * rather than by fence: the bucket merge is idempotent (a re-merged
@@ -122,92 +97,78 @@ object SnapshotDiffView {
     * (ts, event_id) order — and an id-regressed delta simply loses to
     * newer state), so only the DIFF needs protection: a slice that
     * already committed (its `_SUCCESS` marker exists) is never
-    * rewritten, because a replay after a partial bucket swap would
-    * recompute it against half-updated state and degrade `changed`
-    * rows to `same`. Diff first, bucket swaps after — every crash
-    * window replays clean.
+    * rewritten, because a replay after the state commit would
+    * recompute it against post-batch state and degrade `changed` rows
+    * to `same`. The diff is written inside the patch's heavy phase,
+    * against the bucket snapshot the commit replaces and before the
+    * manifest commit — every crash window replays clean, and a commit
+    * retried after a lost race rewrites the slice against the fresh
+    * snapshot.
     */
   def mergeBatchBucketed(batch: DataFrame, stateDir: String, diffDir: String,
                          batchId: Long, nBuckets: Int): Unit = synchronized {
     require(nBuckets > 0)
     val spark = batch.sparkSession
-    val delta = batch
-      .groupBy(col("user_id"))
-      .agg(max(struct(col("ts"), col("event_id"), col("value"))).as("d"))
-      .withColumn("b", pmod(xxhash64(col("user_id")), lit(nBuckets)).cast("int"))
-      .localCheckpoint() // affected-bucket list + two joins below
+    val replay = diffCommitted(diffDir, batchId)
+    val delta = batchWinners(batch).localCheckpoint() // bucket list + winner join
+    var pinned = List(delta)
     try {
-      val affected = delta.select("b").distinct().collect().map(_.getInt(0)).sorted
-      if (affected.isEmpty) {
-        if (!diffCommitted(diffDir, batchId))
-          emptyDiff(spark).write.mode("overwrite")
-            .parquet(s"$diffDir/batch_seq=$batchId")
-        return
+      val committed = ManifestState.patchBuckets(stateDir, nBuckets, "user_id",
+          delta.select(col("user_id")), emptyState(spark)) { current =>
+        val merged = mergeWinners(delta, current)
+          .localCheckpoint() // diff emission + bucket rewrite
+        pinned ::= merged
+        if (!replay) writeDiff(merged, diffDir, batchId)
+        nextState(current, merged)
       }
-      val existing = affected.map(b => s"$stateDir/b=$b")
-        .filter(p => CdcStream.statePresent(Paths.get(p)))
-      val old =
-        if (existing.nonEmpty)
-          spark.read.option("basePath", stateDir).parquet(existing: _*)
-        else emptyState(spark).withColumn("b", lit(0).cast("int"))
-
-      val touchedOld = old.join(delta.select(col("user_id")), Seq("user_id"), "left_semi")
-        .select(col("user_id"), struct(col("ts"), col("event_id"), col("value")).as("o"))
-      val merged = delta.join(touchedOld, Seq("user_id"), "left")
-        .select(col("user_id"), col("b"), col("o"),
-          when(col("o").isNull || col("d") > col("o"), col("d")).otherwise(col("o")).as("n"))
-        .localCheckpoint() // diff emission + bucket rewrite
-
-      try {
-        if (!diffCommitted(diffDir, batchId))
-          merged.select(
-            col("user_id"),
-            round(col("o.value"), 4).as("v1_r"),
-            round(col("n.value"), 4).as("v2_r"),
-            when(col("o").isNull, lit("added"))
-              .when(col("o.value") === col("n.value"), lit("same"))
-              .otherwise(lit("changed")).as("status"),
-            round(col("n.value") - col("o.value"), 4).as("delta_r"))
-            .write.mode("overwrite").parquet(s"$diffDir/batch_seq=$batchId")
-
-        // Touched buckets rewrite: their untouched keys carry over,
-        // merged winners replace the touched keys. One writer and one
-        // file per bucket (repartition before partitionBy).
-        val rewritten = old
-          .join(delta.select(col("user_id")), Seq("user_id"), "left_anti")
-          .unionByName(merged.select(col("user_id"), col("n.ts").as("ts"),
-            col("n.event_id").as("event_id"), col("n.value").as("value"), col("b")))
-        val tmp = stateDir + ".tmpb"
-        rewritten.repartition(col("b"))
-          .write.mode("overwrite").partitionBy("b").parquet(tmp)
-        Files.createDirectories(Paths.get(stateDir))
-        affected.foreach { b =>
-          val src = Paths.get(s"$tmp/b=$b")
-          if (Files.exists(src)) CdcStream.swapDirs(src, Paths.get(s"$stateDir/b=$b"))
-        }
-        CdcStream.deleteRecursively(Paths.get(tmp))
-      } finally graft.operators.Iterate.unpersistCheckpoint(merged)
-    } finally graft.operators.Iterate.unpersistCheckpoint(delta)
+      // a batch that touched no key still leaves its (empty) slice
+      if (!committed && !replay) writeDiff(mergeWinners(delta, emptyState(spark)), diffDir, batchId)
+    } finally pinned.foreach(graft.operators.Iterate.unpersistCheckpoint)
   }
+
+  /** Per-key batch winner by the (ts, event_id) total order; value
+    * rides in the struct but never decides (the pair is unique). */
+  private def batchWinners(batch: DataFrame): DataFrame =
+    batch.groupBy(col("user_id"))
+      .agg(max(struct(col("ts"), col("event_id"), col("value"))).as("d"))
+
+  /** The batch's touched keys with their prior row `o` (null when new)
+    * and their winner `n` — a late event that loses keeps `o`. */
+  private def mergeWinners(delta: DataFrame, state: DataFrame): DataFrame = {
+    val touchedOld = state.join(delta.select(col("user_id")), Seq("user_id"), "left_semi")
+      .select(col("user_id"), struct(col("ts"), col("event_id"), col("value")).as("o"))
+    delta.join(touchedOld, Seq("user_id"), "left")
+      .select(col("user_id"), col("o"),
+        when(col("o").isNull || col("d") > col("o"), col("d")).otherwise(col("o")).as("n"))
+  }
+
+  /** Overwrite batch `batchId`'s diff slice from [[mergeWinners]] rows. */
+  private def writeDiff(merged: DataFrame, diffDir: String, batchId: Long): Unit =
+    merged.select(
+      col("user_id"),
+      round(col("o.value"), 4).as("v1_r"),
+      round(col("n.value"), 4).as("v2_r"),
+      when(col("o").isNull, lit("added"))
+        .when(col("o.value") === col("n.value"), lit("same"))
+        .otherwise(lit("changed")).as("status"),
+      round(col("n.value") - col("o.value"), 4).as("delta_r"))
+      .write.mode("overwrite").parquet(s"$diffDir/batch_seq=$batchId")
+
+  /** `state` with the touched keys' rows replaced by their
+    * [[mergeWinners]] winners; untouched keys carry over. */
+  private def nextState(state: DataFrame, merged: DataFrame): DataFrame =
+    state.join(merged.select(col("user_id")), Seq("user_id"), "left_anti")
+      .unionByName(merged.select(col("user_id"), col("n.ts").as("ts"),
+        col("n.event_id").as("event_id"), col("n.value").as("value")))
 
   private def diffCommitted(diffDir: String, batchId: Long): Boolean =
     Files.exists(Paths.get(s"$diffDir/batch_seq=$batchId", "_SUCCESS"))
 
-  private def emptyDiff(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      StructType(Seq(
-        StructField("user_id", LongType), StructField("v1_r", DoubleType),
-        StructField("v2_r", DoubleType), StructField("status", StringType),
-        StructField("delta_r", DoubleType))))
+  /** The bucketed view: the committed manifest snapshot. */
+  def readViewBucketed(spark: SparkSession, stateDir: String): DataFrame = {
+    val s = ManifestState.read(spark, stateDir)
+    if (s.columns.isEmpty) emptyState(spark) else s
   }
-
-  /** The bucketed view (partition column dropped). Goes through the
-    * state-read gate so a bucket stranded mid-swap is healed first. */
-  def readViewBucketed(spark: SparkSession, stateDir: String): DataFrame =
-    if (CdcStream.statePresent(Paths.get(stateDir)))
-      spark.read.parquet(stateDir).drop("b")
-    else emptyState(spark)
 
   private val AppliedMarker = "_applied_batch"
 

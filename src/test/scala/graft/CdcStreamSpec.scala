@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.streaming.CdcStream
+import graft.streaming.{CdcStream, ManifestState}
 
 /** End-to-end CDC round-trip, porting the reference's single
   * integration test (`CdcApplicationTests.kt:21-44`) to the file-source
@@ -191,12 +191,13 @@ class CdcStreamSpec extends SparkSpec {
         env("y", 2, 200, 200, 200, "two", "u"),
         tombstone("x", 3, 300)).toDS())
     val decoded = CdcStream.decodeFile(batch)
-    CdcStream.mergeBatchBucketed(decoded, s"$root/state", 8)
-    val first = spark.read.parquet(s"$root/state").orderBy("id", "lsn")
+    val sink = new graft.sinks.BucketedParquetSink(s"$root/state", 8)
+    sink.merge(decoded)
+    val first = ManifestState.read(spark, s"$root/state").orderBy("id", "lsn")
       .collect().map(_.toString).toSeq
     // at-least-once redelivery of the SAME batch
-    CdcStream.mergeBatchBucketed(decoded, s"$root/state", 8)
-    val second = spark.read.parquet(s"$root/state").orderBy("id", "lsn")
+    sink.merge(decoded)
+    val second = ManifestState.read(spark, s"$root/state").orderBy("id", "lsn")
       .collect().map(_.toString).toSeq
     assert(first == second)
   }

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
 import graft.streaming.{CdcStream, ManifestState}
 
 /** Manifest-committed bucketed CDC state: snapshot-isolated reads and
-  * optimistic multi-writer commits — the property the in-place
-  * directory-swap merge cannot provide beyond one JVM.
+  * optimistic multi-writer commits — the property a directory-swap
+  * merge cannot provide beyond one JVM.
   */
 class ManifestStateSpec extends SparkSpec {
 
@@ -29,15 +29,17 @@ class ManifestStateSpec extends SparkSpec {
 
   test("sequential merges equal the single-writer bucketed merge") {
     val rootA = Files.createTempDirectory("mstate").toString
-    val rootB = Files.createTempDirectory("bstate").toString
+    val rootB = Files.createTempDirectory("bstate").resolve("state").toString
     val batches = Seq(
       Seq(up("a", 1), up("b", 2), up("c", 3)),
       Seq(up("a", 4), del("b", 5), up("d", 6)),
       Seq(del("d", 7), up("b", 8), up("a", 2) /* stale redelivery */ ))
 
+    // the reference is the single-writer whole-snapshot merge: same
+    // latest-wins rows, no buckets
     batches.foreach { b =>
       ManifestState.mergeBatch(changes(b), rootA, nBuckets = 4)
-      CdcStream.mergeBatchBucketed(changes(b), rootB, nBuckets = 4)
+      CdcStream.mergeBatch(changes(b), rootB)
     }
     val got = ManifestState.read(spark, rootA)
       .select("id", "event_type", "lsn").collect()
@@ -326,5 +328,34 @@ class ManifestStateSpec extends SparkSpec {
     Files.createDirectories(Paths.get(s"$root/.stage-v-2-w2-1/b=0"))
     Files.write(Paths.get(s"$root/.stage-v-2-w2-1/b=0/part-0.parquet"), Array[Byte](1))
     assert(ManifestState.dataFileCount(root) == 1L)
+  }
+
+  test("a root left by the retired in-place bucket merge fails loud instead of reading empty") {
+    val root = Files.createTempDirectory("mstate-inplace").toString
+    // the retired layout: root/b=<n>/part-*.parquet, no MANIFEST
+    changes(Seq(up("a", 1), up("b", 2)))
+      .withColumn("b", pmod(xxhash64(col("id")), lit(4)).cast("int"))
+      .write.partitionBy("b").parquet(s"$root/old")
+    def refused(f: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](f)
+      assert(e.getMessage.contains("no MANIFEST") && e.getMessage.contains("re-bootstrap"),
+        e.getMessage)
+    }
+    refused(ManifestState.read(spark, s"$root/old"))
+    refused(new graft.sinks.BucketedParquetSink(s"$root/old", 4).state(spark))
+    refused(ManifestState.mergeBatch(changes(Seq(up("c", 3))), s"$root/old", 4))
+    refused(graft.streaming.SnapshotDiffView.readViewBucketed(spark, s"$root/old"))
+    assert(!Files.exists(Paths.get(root, "old", "MANIFEST")), "a refused merge committed")
+
+    // the documented migration: its rows merged as one batch into a
+    // fresh root reproduce the state exactly
+    val old = spark.read.parquet(s"$root/old").drop("b")
+    ManifestState.mergeBatch(old, s"$root/new", 4)
+    def rows(df: DataFrame) = df.select("id", "event_type", "lsn").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).sorted.toSeq
+    assert(rows(ManifestState.read(spark, s"$root/new")) == rows(old))
+    // a committed manifest state and a fresh root never trip the guard
+    ManifestState.mergeBatch(changes(Seq(up("c", 3))), s"$root/new", 4)
+    assert(ManifestState.read(spark, s"$root/fresh").columns.isEmpty)
   }
 }

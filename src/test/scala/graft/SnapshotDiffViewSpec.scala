@@ -142,102 +142,38 @@ class SnapshotDiffViewSpec extends SparkSpec {
       == naiveView(b1 ++ b2))
   }
 
-  test("a stranded bucket backup is invisible to readers (crash after install, before cleanup)") {
-    import java.nio.file.{Paths => JPaths}
-    val root = Files.createTempDirectory("snapdiffb3").toString
-    val (st, df) = (s"$root/state", s"$root/diff")
-    import spark.implicits._
-
-    SnapshotDiffView.mergeBatchBucketed(ev(b1), st, df, 0L, nBuckets = 8)
-    val live = new java.io.File(st).listFiles()
-      .filter(_.getName.startsWith("b=")).head
-    // Simulate a crash between replace()'s install rename and its
-    // backup cleanup: a complete stale copy of the bucket sits beside
-    // the live dir under the backup name, carrying rows that
-    // contradict live state. Partition discovery must skip it — a
-    // visible sibling like `b=5.old` would be read as partition
-    // b='5.old' and serve the stale rows (duplicate keys, b column
-    // degraded to string).
-    val stale = JPaths.get(st, "." + live.getName + ".old")
-    Seq((1L, Timestamp.valueOf("1999-01-01 00:00:00"), 1L, -999.0),
-        (2L, Timestamp.valueOf("1999-01-01 00:00:00"), 2L, -999.0),
-        (3L, Timestamp.valueOf("1999-01-01 00:00:00"), 3L, -999.0))
-      .toDF("user_id", "ts", "event_id", "value")
-      .write.parquet(stale.toString)
-
-    val view = SnapshotDiffView.readViewBucketed(spark, st)
-      .select($"user_id", $"value").as[(Long, Double)].collect()
-    assert(view.length == view.toMap.size, "duplicate keys served from the backup")
-    assert(view.toMap == naiveView(b1), "stale backup rows leaked into the view")
-
-    // merging onward stays correct with the leftover in place
-    SnapshotDiffView.mergeBatchBucketed(ev(b2), st, df, 1L, nBuckets = 8)
-    assert(SnapshotDiffView.readViewBucketed(spark, st)
-      .select($"user_id", $"value").as[(Long, Double)].collect().toMap
-      == naiveView(b1 ++ b2))
-  }
-
-  test("a bucket stranded mid-swap (live gone, backup left) heals on full-view read") {
+  test("a snapshot stranded under the LEGACY backup naming still heals when live is gone") {
     import java.nio.file.{Files => JFiles, Paths => JPaths, StandardCopyOption}
-    val root = Files.createTempDirectory("snapdiffb4").toString
-    val (st, df) = (s"$root/state", s"$root/diff")
+    val root = Files.createTempDirectory("snapdiff7").toString
+    val (stateDir, diffDir) = (s"$root/state", s"$root/diff")
     import spark.implicits._
 
-    SnapshotDiffView.mergeBatchBucketed(ev(b1), st, df, 0L, nBuckets = 8)
-    val live = new java.io.File(st).listFiles()
-      .filter(f => f.getName.startsWith("b=") && f.listFiles().exists(_.getName.endsWith(".parquet")))
-      .head
-    // crash between the swap's two renames: this bucket exists only
-    // as its backup; a full-view read must restore it, not skip it
-    JFiles.move(live.toPath, JPaths.get(st, "." + live.getName + ".old"),
-      StandardCopyOption.ATOMIC_MOVE)
-    assert(SnapshotDiffView.readViewBucketed(spark, st)
+    SnapshotDiffView.mergeBatch(ev(b1), stateDir, diffDir, 0L)
+    // pre-upgrade crash between the old swap's renames: the state
+    // survives ONLY as `state.old` (no dot prefix) — restore it rather
+    // than losing it
+    val legacy = JPaths.get(s"$root/state.old")
+    JFiles.move(JPaths.get(stateDir), legacy, StandardCopyOption.ATOMIC_MOVE)
+    assert(SnapshotDiffView.readView(spark, stateDir)
       .select($"user_id", $"value").as[(Long, Double)].collect().toMap
-      == naiveView(b1), "stranded bucket was not healed on read")
-  }
+      == naiveView(b1), "legacy-named stranded state was not healed on read")
 
-  test("a LEGACY (pre-dot-prefix) stranded bucket backup is deleted, not served as a partition") {
-    import java.nio.file.{Paths => JPaths}
-    val root = Files.createTempDirectory("snapdiffb5").toString
-    val (st, df) = (s"$root/state", s"$root/diff")
-    import spark.implicits._
-
-    SnapshotDiffView.mergeBatchBucketed(ev(b1), st, df, 0L, nBuckets = 8)
-    val live = new java.io.File(st).listFiles()
-      .filter(_.getName.startsWith("b=")).head
-    // a crash under the OLD backup naming stranded `b=N.old` beside a
-    // live dir: partition discovery would index it as partition
-    // b='N.old' and serve its stale rows — the read path must delete
-    // it (current code never writes this name, so it cannot be a
-    // racing writer's in-flight backup)
-    val stale = JPaths.get(st, live.getName + ".old")
+    // a legacy backup beside a LIVE state is debris: the read path
+    // deletes it (current code never writes that name, so it cannot be
+    // a racing writer's in-flight backup) and never serves its rows
     Seq((1L, Timestamp.valueOf("1999-01-01 00:00:00"), 1L, -999.0))
       .toDF("user_id", "ts", "event_id", "value")
-      .write.parquet(stale.toString)
-
-    val view = SnapshotDiffView.readViewBucketed(spark, st)
-      .select($"user_id", $"value").as[(Long, Double)].collect()
-    assert(view.toMap == naiveView(b1), "legacy backup rows leaked into the view")
-    assert(!java.nio.file.Files.exists(stale), "legacy backup not cleaned up")
-  }
-
-  test("a bucket stranded under the LEGACY backup naming still heals when live is gone") {
-    import java.nio.file.{Files => JFiles, Paths => JPaths, StandardCopyOption}
-    val root = Files.createTempDirectory("snapdiffb6").toString
-    val (st, df) = (s"$root/state", s"$root/diff")
-    import spark.implicits._
-
-    SnapshotDiffView.mergeBatchBucketed(ev(b1), st, df, 0L, nBuckets = 8)
-    val live = new java.io.File(st).listFiles()
-      .filter(f => f.getName.startsWith("b=") && f.listFiles().exists(_.getName.endsWith(".parquet")))
-      .head
-    // pre-upgrade crash between the old swap's renames: the bucket
-    // survives ONLY as `b=N.old` — restore it rather than losing it
-    JFiles.move(live.toPath, JPaths.get(st, live.getName + ".old"),
-      StandardCopyOption.ATOMIC_MOVE)
-    assert(SnapshotDiffView.readViewBucketed(spark, st)
+      .write.parquet(legacy.toString)
+    assert(SnapshotDiffView.readView(spark, stateDir)
       .select($"user_id", $"value").as[(Long, Double)].collect().toMap
-      == naiveView(b1), "legacy-named stranded bucket was not healed on read")
+      == naiveView(b1), "legacy backup rows leaked into the view")
+    assert(!JFiles.exists(legacy), "legacy backup not cleaned up")
+
+    // and the next merge proceeds from the healed state, fence intact
+    SnapshotDiffView.mergeBatch(ev(b2), stateDir, diffDir, 1L)
+    assert(SnapshotDiffView.readView(spark, stateDir)
+      .select($"user_id", $"value").as[(Long, Double)].collect().toMap
+      == naiveView(b1 ++ b2))
   }
 
   test("a batch id below the applied fence is an error, not a silent skip") {
@@ -273,25 +209,24 @@ class SnapshotDiffViewSpec extends SparkSpec {
   }
 
   test("bucketed merge rewrites only touched buckets and replays idempotently") {
-    import java.io.File
+    import graft.streaming.ManifestState
     val root = Files.createTempDirectory("snapdiffb2").toString
     val (st, df) = (s"$root/state", s"$root/diff")
     import spark.implicits._
 
     SnapshotDiffView.mergeBatchBucketed(ev(b1), st, df, 0L, nBuckets = 8)
-    def bucketFiles(): Map[String, Set[String]] =
-      new File(st).listFiles().filter(_.getName.startsWith("b="))
-        .map(d => d.getName -> d.listFiles().map(_.getName).toSet).toMap
-    val before = bucketFiles()
+    val before = ManifestState.readManifest(st)
 
-    // a single-user batch touches exactly one bucket; parquet part
-    // file names are fresh UUIDs per write, so unchanged file names
-    // prove untouched buckets were never rewritten
+    // a single-user batch touches exactly one bucket; every commit
+    // names a fresh version, so an unchanged manifest entry proves an
+    // untouched bucket was never rewritten
     val one = Seq((1L, "2024-01-15 10:00:00", 500L, 77.0))
     SnapshotDiffView.mergeBatchBucketed(ev(one), st, df, 1L, nBuckets = 8)
-    val after = bucketFiles()
-    val changed = after.keySet.filter(k => before.get(k) != after.get(k))
-    assert(changed.size <= 1, s"more than one bucket rewritten: $changed")
+    val after = ManifestState.readManifest(st)
+    assert(after.epoch == before.epoch + 1)
+    assert(after.buckets.keySet == before.buckets.keySet)
+    val changed = after.buckets.keySet.filter(k => before.buckets(k) != after.buckets(k))
+    assert(changed.size == 1, s"expected exactly one bucket rewritten: $changed")
     assert(SnapshotDiffView.readViewBucketed(spark, st)
       .select($"user_id", $"value").as[(Long, Double)].collect().toMap
       == naiveView(b1 ++ one))
