@@ -66,13 +66,24 @@ object Checkpoints {
     * which is the safe direction. Posture notes: docs/SCALE.md.
     */
   def pinIfSmall(df: DataFrame): DataFrame = {
-    val budget = BigInt(sys.env.getOrElse("SPARK_GRAFT_PIN_BUDGET_MB", "4096").toLong) << 20
+    val budget = BigInt(pinBudgetMb()) << 20
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val pin = est <= budget
     if (sys.env.contains("SPARK_GRAFT_PIN_DEBUG"))
       System.err.println(s"[pinIfSmall] est=$est budget=$budget pin=$pin")
     if (pin) track(df.localCheckpoint(eager = false)) else df
   }
+
+  /** `SPARK_GRAFT_PIN_BUDGET_MB` as a non-negative MB count, default
+    * 4096. `Graft.builder` calls this too, so a malformed value fails
+    * at session build with the variable named, not at the first
+    * [[pinIfSmall]] inside a query. */
+  def pinBudgetMb(env: Map[String, String] = sys.env): Long =
+    env.get("SPARK_GRAFT_PIN_BUDGET_MB").fold(4096L) { raw =>
+      scala.util.Try(raw.trim.toLong).toOption.filter(_ >= 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"SPARK_GRAFT_PIN_BUDGET_MB must be a non-negative integer (MB), got '$raw'"))
+    }
 
   private def drain(q: ConcurrentLinkedQueue[DataFrame]): Unit = {
     var df = q.poll()

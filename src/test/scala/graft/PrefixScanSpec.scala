@@ -230,6 +230,18 @@ class PrefixScanSpec extends SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.size <= before)
   }
 
+  test("SPARK_GRAFT_PIN_BUDGET_MB is validated with the variable named") {
+    import graft.operators.Checkpoints.pinBudgetMb
+    val key = "SPARK_GRAFT_PIN_BUDGET_MB"
+    assert(pinBudgetMb(Map.empty) == 4096L)
+    assert(pinBudgetMb(Map(key -> " 64 ")) == 64L)
+    assert(pinBudgetMb(Map(key -> "0")) == 0L)
+    for (bad <- Seq("4g", "", "-1", "1.5")) {
+      val e = intercept[IllegalArgumentException](pinBudgetMb(Map(key -> bad)))
+      assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"))
+    }
+  }
+
   test("null values: sum matches the window form (skip nulls, null only for all-null frames)") {
     // window sum SKIPS nulls and returns null only when the frame has
     // no non-null value; the decomposition must not null out a row
