@@ -21,7 +21,8 @@ import graft.functions.{VectorFunctions => VF}
   * Everything is deterministic and distributed:
   *   - codebooks train per subspace with Lloyd iterations; initial
   *     codewords are the subvectors of the `k` corpus rows with the
-  *     lowest xxhash64(vec_id) — a seedless stable sample;
+  *     lowest xxhash64(vec_id) — a seedless stable sample, so
+  *     `vec_id` must be unique (a repeated seed id is refused);
   *   - codeword components round to 6 dp so partial-sum order cannot
   *     leak into assignments (q31's contract);
   *   - the asymmetric-distance (ADC) scan is a relational join of
@@ -109,6 +110,9 @@ object PqAnn {
       .orderBy(xxhash64(col("vec_id")), col("vec_id"))
       .limit(k).collect().map(_.get(0))
     if (seedIds.isEmpty) return Seq.empty
+    require(seedIds.distinct.length == seedIds.length,
+      s"PqAnn needs a unique vec_id per corpus row; the codebook seeds " +
+      s"repeat vec_id ${seedIds.diff(seedIds.distinct).distinct.mkString(", ")}")
     val codeOf = map(seedIds.toSeq.zipWithIndex.flatMap {
       case (id, i) => Seq(lit(id), lit(i)) }: _*)
     explodeSubvectors(e.filter(col("vec_id").isin(seedIds.toSeq: _*)), m, subDim)
@@ -148,7 +152,8 @@ object PqAnn {
 
   /** Per-subspace codebooks: (sub, code, cv: array<double>).
     *
-    * @param e (vec_id, v: array<double>) corpus, dim = m * subDim
+    * @param e (vec_id, v: array<double>) corpus, dim = m * subDim;
+    *          `vec_id` unique per row
     */
   def trainCodebooks(e: DataFrame, m: Int, subDim: Int, k: Int,
                      iters: Int): DataFrame = {

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Single/multi-source BFS hop distances over a directed edge list —
   * the reachability operator beside [[ConnectedComponents]] (groups)
@@ -41,11 +42,12 @@ object ShortestPaths {
     *   HOP (frontier checkpoint, emptiness probe, union checkpoint)
     *   collapse to one collect, and per-round job-launch overhead —
     *   which dominates when the graph is tiny — disappears. Distances
-    *   are identical: BFS is deterministic. Oversized probes (or null
-    *   endpoints / a source column typed differently from the edge
-    *   endpoints, where driver equality could diverge from SQL
-    *   equality) fall back to the distributed loop unchanged. 0 (the
-    *   default) never collects. */
+    *   are identical: BFS is deterministic. The driver keys nodes by
+    *   JVM equality of the collected values, so only node types where
+    *   that matches SQL equality qualify ([[driverEqualityMatchesSql]]);
+    *   other node types, oversized probes, null endpoints and a source
+    *   column typed differently from the edge endpoints fall back to
+    *   the distributed loop unchanged. 0 (the default) never collects. */
   def hops(edges: DataFrame, sources: DataFrame, maxHops: Int = 30,
            collectThreshold: Int = 0): DataFrame = {
     require(maxHops > 0)
@@ -58,7 +60,7 @@ object ShortestPaths {
     val srcT = eDistinct.schema("src").dataType
     val typesAlign = srcT == eDistinct.schema("dst").dataType &&
       srcT == sources.schema.head.dataType
-    if (collectThreshold > 0 && typesAlign) {
+    if (collectThreshold > 0 && typesAlign && driverEqualityMatchesSql(srcT)) {
       val probe = eDistinct.limit(collectThreshold + 1).collect()
       if (probe.length <= collectThreshold &&
           probe.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
@@ -103,6 +105,17 @@ object ShortestPaths {
     dist
   }
 
+  /** Node types whose collected values are equal on the JVM exactly
+    * when SQL equality holds: integral, default-collation string, date
+    * and timestamp. Binary values compare by array reference, doubles
+    * and floats tell -0.0 from 0.0 (which Spark's join equality
+    * normalizes), and a collated string compares by its collation. */
+  private[graft] def driverEqualityMatchesSql(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case DateType | TimestampType | TimestampNTZType => true
+    case _ => t == StringType
+  }
+
   /** Driver-side frontier BFS over collected grain-level edges — the
     * same algorithm the distributed loop runs (frontier expansion
     * against the settled set; BFS discovers every node at its minimum
@@ -112,7 +125,7 @@ object ShortestPaths {
                         edgeRows: Array[org.apache.spark.sql.Row],
                         srcRows: Array[org.apache.spark.sql.Row],
                         maxHops: Int,
-                        nodeType: org.apache.spark.sql.types.DataType): DataFrame = {
+                        nodeType: DataType): DataFrame = {
     val adj = edgeRows.groupBy(_.get(0)).map { case (k, rs) => k -> rs.map(_.get(1)) }
     val dist = scala.collection.mutable.HashMap[Any, Long]()
     var frontier = srcRows.map(_.get(0)).toSet
@@ -126,10 +139,9 @@ object ShortestPaths {
       next.foreach(n => dist(n) = hop)
       frontier = next
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node", nodeType, nullable = true),
-      org.apache.spark.sql.types.StructField("dist",
-        org.apache.spark.sql.types.LongType, nullable = false)))
+    val schema = StructType(Seq(
+      StructField("node", nodeType, nullable = true),
+      StructField("dist", LongType, nullable = false)))
     val rows = dist.toSeq.map { case (n, d) =>
       org.apache.spark.sql.Row(n, d) }
     spark.createDataFrame(

@@ -67,6 +67,12 @@ object CdcStream {
     StructField("key", keySchema),
     StructField("value", envelopeSchema)))
 
+  /** A decoded change row ([[decodeFile]], [[decodeKafka]]) as state
+    * stores it: what an empty change state reads as. */
+  val changeSchema: StructType = StructType(
+    StructField("event_type", StringType) +: rowSchema.fields.toSeq :+
+      StructField("lsn", LongType) :+ StructField("ts_ms", LongType))
+
   final val Upsert = "UPSERT"
   final val Delete = "DELETE"
   final val Malformed = "MALFORMED"
@@ -438,15 +444,10 @@ object CdcStream {
     * view, not an error. */
   def readView(spark: SparkSession, stateDir: String): DataFrame = {
     val root = Paths.get(stateDir)
-    val stored =
+    val state =
       if (Files.exists(root.resolve("MANIFEST"))) ManifestState.read(spark, stateDir)
       else if (statePresent(root)) spark.read.parquet(stateDir)
-      else spark.emptyDataFrame
-    val state =
-      if (stored.columns.nonEmpty) stored
-      else spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType(StructField("event_type", StringType) +: rowSchema.fields.toSeq))
+      else ManifestState.empty(spark, changeSchema)
     state
       .filter(col("event_type") === Upsert)
       .select(col("id"),

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.DupSpans
 
@@ -56,29 +57,16 @@ object DupSpanIngest {
     * batch). */
   val DefaultIndexBuckets = 64
 
-  private def indexTemplate(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, Long, Long)].toDF("h", "min_id", "max_id")
-  }
+  private val IndexSchema =
+    StructType.fromDDL("h BIGINT NOT NULL, min_id BIGINT NOT NULL, max_id BIGINT NOT NULL")
+  private val CovSchema = StructType.fromDDL(
+    "doc_id BIGINT NOT NULL, n_tokens BIGINT NOT NULL, dup_tokens BIGINT NOT NULL")
 
   /** Current gram index: (h, min_id, max_id) — stored pre-merged, one
     * row per gram (the bucketed patch re-merges on write, readers
     * never re-aggregate). Empty if nothing ingested yet. */
-  def index(spark: SparkSession, indexDir: String): DataFrame = {
-    val m = ManifestState.readManifest(indexDir)
-    if (m.buckets.isEmpty) {
-      // loud upgrade guard: a pre-round-14 append-mode index must not
-      // silently read as empty history
-      FsUtil.requireNotAppendLayout(spark, indexDir,
-        "re-aggregate the fragments through a bucketed patch first")
-      indexTemplate(spark)
-    } else ManifestState.readSnapshot(spark, indexDir, m)
-  }
-
-  private def covTemplate(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, Long, Long)].toDF("doc_id", "n_tokens", "dup_tokens")
-  }
+  def index(spark: SparkSession, indexDir: String): DataFrame =
+    ManifestState.read(spark, indexDir, IndexSchema)
 
   /** Coverage rows so far: (doc_id, n_tokens, dup_tokens), one row per
     * ingested doc. The state keeps the MINIMUM dup_tokens per doc —
@@ -100,16 +88,8 @@ object DupSpanIngest {
     * emission would instead accumulate one fragment per batch forever
     * and pay a full-log shuffle per readout (10k batches = 10k
     * fragments re-aggregated on every read). */
-  def coverages(spark: SparkSession, covDir: String): DataFrame = {
-    val m = ManifestState.readManifest(covDir)
-    if (m.buckets.isEmpty) {
-      // loud upgrade guard: a pre-round-15 append-mode coverage log
-      // must not silently read as empty
-      FsUtil.requireNotAppendLayout(spark, covDir,
-        "re-seed the bucketed coverage state from the fragments first")
-      covTemplate(spark)
-    } else ManifestState.readSnapshot(spark, covDir, m)
-  }
+  def coverages(spark: SparkSession, covDir: String): DataFrame =
+    ManifestState.read(spark, covDir, CovSchema)
 
   /** Merge one static micro-batch of documents (idCol, textCol).
     *
@@ -142,15 +122,6 @@ object DupSpanIngest {
                  indexDir: String, covDir: String, k: Int,
                  nBuckets: Int): Unit =
     synchronized {
-      val spark = batch.sparkSession
-      ManifestState.requireBucketCount(indexDir, nBuckets)
-      ManifestState.requireBucketCount(covDir, nBuckets)
-      if (ManifestState.readManifest(indexDir).buckets.isEmpty)
-        FsUtil.requireNotAppendLayout(spark, indexDir,
-          "re-aggregate the fragments through a bucketed patch first")
-      if (ManifestState.readManifest(covDir).buckets.isEmpty)
-        FsUtil.requireNotAppendLayout(spark, covDir,
-          "re-seed the bucketed coverage state from the fragments first")
       // ONE aggregation pass serves both per-gram consumers: the
       // index delta (min/max id) and the within-batch duplicate
       // predicate (distinct-doc count) — two separate groupBys would
@@ -167,7 +138,7 @@ object DupSpanIngest {
       // cost follows the batch's bucket footprint, never index size.
       val buckets = ManifestState.bucketsOf(bagg, "h", nBuckets)
       val hist = ManifestState.readBucketsOf(
-        spark, indexDir, buckets, indexTemplate(spark))
+        batch.sparkSession, indexDir, nBuckets, buckets, IndexSchema)
       val dupPos = g
         .join(perHash, "h")
         .join(hist, Seq("h"), "left")
@@ -194,7 +165,7 @@ object DupSpanIngest {
       // the full emission log — but the state stays one row per doc
       // and the reader never re-aggregates.
       ManifestState.patchBuckets(covDir, nBuckets, "doc_id",
-        rows.select(col("doc_id")), covTemplate(spark)) { current =>
+        rows.select(col("doc_id")), CovSchema) { current =>
         current.unionByName(rows)
           .groupBy(col("doc_id"))
           .agg(min(struct(col("dup_tokens"), col("n_tokens"))).as("m"))
@@ -206,7 +177,7 @@ object DupSpanIngest {
       // idempotent under re-merge, so a replayed batch commits the
       // identical bucket content.
       ManifestState.patchBuckets(indexDir, nBuckets, "h",
-        bagg.select(col("h")), indexTemplate(spark)) { current =>
+        bagg.select(col("h")), IndexSchema) { current =>
         current.unionByName(bagg)
           .groupBy(col("h"))
           .agg(min(col("min_id")).as("min_id"), max(col("max_id")).as("max_id"))

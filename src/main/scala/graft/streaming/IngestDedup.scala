@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.{TextFunctions => TF}
 
@@ -70,24 +71,13 @@ object IngestDedup {
   /** Index buckets (see the object doc's point 2/3). */
   val DefaultIndexBuckets = 64
 
-  private def indexTemplate(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[String].toDF("fp")
-  }
+  private val IndexSchema = StructType.fromDDL("fp STRING")
 
   /** The fingerprint index as a readable set — stored distinct in the
     * bucketed layout, so readers never re-aggregate. Empty frame if
     * nothing has been ingested yet. */
-  def historyIndex(spark: SparkSession, indexDir: String): DataFrame = {
-    val m = ManifestState.readManifest(indexDir)
-    if (m.buckets.isEmpty) {
-      // loud upgrade guard: treating a pre-bucketing append-mode
-      // index as empty would re-ingest every known document
-      FsUtil.requireNotAppendLayout(spark, indexDir,
-        "seed a bucketed index from the fragments via addToIndex first")
-      indexTemplate(spark)
-    } else ManifestState.readSnapshot(spark, indexDir, m)
-  }
+  def historyIndex(spark: SparkSession, indexDir: String): DataFrame =
+    ManifestState.read(spark, indexDir, IndexSchema)
 
   /** Patch fingerprints into the bucketed index — the per-batch
     * advance, and the bootstrap path for seeding the index from an
@@ -97,20 +87,15 @@ object IngestDedup {
     * (append-mode) parquet fragments is refused by default: the first
     * patch would commit a manifest BESIDE the fragments, after which
     * [[historyIndex]]/[[mergeBatch]] see a non-empty manifest, never
-    * fire their own append-layout guard again, and silently ignore
-    * whatever fragment content was not part of the seed. An in-place
-    * migration (read the fragments → seed them → this call) passes
+    * run the legacy-layout check again, and silently ignore whatever
+    * fragment content was not part of the seed. An in-place migration
+    * (read the fragments → seed them → this call) passes
     * `migrateInPlace = true` and must delete the fragments afterwards. */
   def addToIndex(fps: DataFrame, indexDir: String,
                  nBuckets: Int = DefaultIndexBuckets,
                  migrateInPlace: Boolean = false): Unit = {
-    if (!migrateInPlace &&
-        ManifestState.readManifest(indexDir).buckets.isEmpty)
-      FsUtil.requireNotAppendLayout(fps.sparkSession, indexDir,
-        "seeding here would strand the fragments beside a fresh manifest; " +
-        "pass migrateInPlace = true and delete them after the seed")
-    ManifestState.patchBuckets(indexDir, nBuckets, "fp",
-      fps.select(col("fp")), indexTemplate(fps.sparkSession)) { current =>
+    ManifestState.patchBuckets(indexDir, nBuckets, "fp", fps.select(col("fp")),
+      IndexSchema, migrateInPlace = migrateInPlace) { current =>
       current.unionByName(fps.select(col("fp"))).distinct()
     }
     ()
@@ -123,11 +108,6 @@ object IngestDedup {
     * without a MemoryStream harness. */
   def mergeBatch(batch: DataFrame, outDir: String, indexDir: String,
                  nBuckets: Int = DefaultIndexBuckets): Unit = synchronized {
-    val spark = batch.sparkSession
-    ManifestState.requireBucketCount(indexDir, nBuckets)
-    if (ManifestState.readManifest(indexDir).buckets.isEmpty)
-      FsUtil.requireNotAppendLayout(spark, indexDir,
-        "seed a bucketed index from the fragments via addToIndex first")
     // Collapse IN-BATCH duplicates first: the anti-join below screens
     // only against HISTORY, so a batch carrying two rows with one fp
     // would append both, violating the out-is-fp-unique contract. The
@@ -162,7 +142,7 @@ object IngestDedup {
           if (c == "fp") col("fp") else col("_r").getField(c).as(c)): _*)
     val buckets = ManifestState.bucketsOf(batch.select(col("fp")), "fp", nBuckets)
     val hist = ManifestState.readBucketsOf(
-      spark, indexDir, buckets, indexTemplate(spark))
+      batch.sparkSession, indexDir, nBuckets, buckets, IndexSchema)
     val fresh = unique
       .join(hist, Seq("fp"), "left_anti")
       .localCheckpoint() // two writes below; don't recompute the join

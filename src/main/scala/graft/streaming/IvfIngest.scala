@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 
 import graft.functions.{VectorFunctions => VF}
 import graft.operators.IvfAnn
@@ -60,28 +61,21 @@ object IvfIngest {
   val DefaultPostingsBuckets = 64
   private val QuantBuckets = 8 // centroids are nlist rows — tiny state
 
-  private def postingsTemplate(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, Long, Array[Double])].toDF("vec_id", "label", "v")
-  }
-  private def quantTemplate(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, Array[Double])].toDF("c_label", "cv")
-  }
+  private val PostingsSchema = StructType(Seq(
+    StructField("vec_id", LongType, nullable = false),
+    StructField("label", LongType, nullable = false),
+    StructField("v", ArrayType(DoubleType, containsNull = false))))
+  private val QuantSchema = StructType(Seq(
+    StructField("c_label", LongType, nullable = false),
+    StructField("cv", ArrayType(DoubleType, containsNull = false))))
 
   /** The stored quantizer (c_label, cv); empty if never seeded. */
   def centroids(spark: SparkSession, quantDir: String): DataFrame =
-    ManifestState.read(spark, quantDir) match {
-      case df if df.columns.isEmpty => quantTemplate(spark)
-      case df => df
-    }
+    ManifestState.read(spark, quantDir, QuantSchema)
 
   /** The full postings state (vec_id, label, v). */
-  def postings(spark: SparkSession, postingsDir: String): DataFrame = {
-    val m = ManifestState.readManifest(postingsDir)
-    if (m.buckets.isEmpty) postingsTemplate(spark)
-    else ManifestState.readSnapshot(spark, postingsDir, m)
-  }
+  def postings(spark: SparkSession, postingsDir: String): DataFrame =
+    ManifestState.read(spark, postingsDir, PostingsSchema)
 
   private def commitQuantizer(cents: DataFrame, quantDir: String): Unit = {
     // full replacement: touched keys = stored ∪ new labels, closure
@@ -91,7 +85,7 @@ object IvfIngest {
       .unionByName(centroids(spark, quantDir).select(col("c_label")))
       .distinct()
     ManifestState.patchBuckets(quantDir, QuantBuckets, "c_label",
-      touched, quantTemplate(spark)) { _ =>
+      touched, QuantSchema) { _ =>
       cents.select(col("c_label"), col("cv"))
     }
     ()
@@ -104,7 +98,6 @@ object IvfIngest {
   def seed(corpus: DataFrame, postingsDir: String, quantDir: String,
            nlist: Int, iters: Int = 5,
            nBuckets: Int = DefaultPostingsBuckets): Unit = synchronized {
-    val spark = corpus.sparkSession
     require(ManifestState.readManifest(quantDir).buckets.isEmpty,
       s"seed requires an empty quantizer at $quantDir — use refit to re-quantize")
     val (labeled0, cents0) = IvfAnn.fitCellsWithCentroids(corpus, nlist, iters)
@@ -112,7 +105,7 @@ object IvfIngest {
     val cents = cents0.localCheckpoint()
     commitQuantizer(cents, quantDir)
     ManifestState.patchBuckets(postingsDir, nBuckets, "label",
-      labeled.select(col("label")), postingsTemplate(spark))(
+      labeled.select(col("label")), PostingsSchema)(
       _.unionByName(labeled).distinct())
     graft.operators.Checkpoints.releaseAll()
     Seq(labeled, cents).foreach(graft.operators.Iterate.unpersistCheckpoint)
@@ -128,11 +121,10 @@ object IvfIngest {
     val cents = centroids(spark, quantDir)
     require(!ManifestState.readManifest(quantDir).buckets.isEmpty,
       s"no quantizer at $quantDir — seed one first")
-    ManifestState.requireBucketCount(postingsDir, nBuckets)
     val assigned = IvfAnn.assignTo(
       batch.select(col("vec_id"), col("v")), cents).localCheckpoint()
     ManifestState.patchBuckets(postingsDir, nBuckets, "label",
-      assigned.select(col("label")), postingsTemplate(spark))(
+      assigned.select(col("label")), PostingsSchema)(
       _.unionByName(assigned).distinct())
     graft.operators.Iterate.unpersistCheckpoint(assigned)
   }
@@ -157,7 +149,7 @@ object IvfIngest {
       .unionByName(postings(spark, postingsDir).select(col("label")))
       .distinct()
     ManifestState.patchBuckets(postingsDir, nBuckets, "label",
-      touched, postingsTemplate(spark))(_ => relabeled)
+      touched, PostingsSchema)(_ => relabeled)
     graft.operators.Checkpoints.releaseAll()
     Seq(relabeled, cents).foreach(graft.operators.Iterate.unpersistCheckpoint)
   }
@@ -190,9 +182,8 @@ object IvfIngest {
       .select(col("qid"), col("qv"), col("qnrm"), col("c_label").as("label"))
     // file-level pruning: only the probed cells' buckets are read
     val cells = probes.select(col("label")).distinct()
-    val cand = ManifestState.readBucketsOf(spark, postingsDir,
-        ManifestState.bucketsOf(cells, "label", nBuckets),
-        postingsTemplate(spark))
+    val cand = ManifestState.readBucketsOf(spark, postingsDir, nBuckets,
+        ManifestState.bucketsOf(cells, "label", nBuckets), PostingsSchema)
       .join(cells, Seq("label"), "left_semi")
       .withColumn("nrm", sqrt(VF.dot(col("v"), col("v"))))
     val sims = cand

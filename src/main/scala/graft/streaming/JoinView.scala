@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.CdcMerge
 
@@ -46,17 +47,32 @@ import graft.operators.CdcMerge
   */
 object JoinView {
 
-  final case class Side(idCol: String, joinKeyCol: String)
+  /** One side of the join: its id and join-key columns, and `rows`,
+    * the schema of its change rows — what an empty side state reads
+    * as, and what its deltas carry. */
+  final case class Side(idCol: String, joinKeyCol: String, rows: StructType)
 
   private def ordering: Seq[Column] =
     Seq(col("lsn").desc_nulls_last, col("ts_ms").desc_nulls_last)
 
-  private def stateOf(spark: SparkSession, dir: String, schema: DataFrame): DataFrame =
+  private def stateOf(spark: SparkSession, dir: String, schema: StructType): DataFrame =
     if (CdcStream.statePresent(Paths.get(dir))) spark.read.parquet(dir)
-    else schema.limit(0)
+    else ManifestState.empty(spark, schema)
 
   private def live(state: DataFrame): DataFrame =
     state.filter(col("event_type") =!= CdcStream.Delete)
+
+  /** Live side rows with the join key renamed `jk` — the jk copies. */
+  private def liveJk(df: DataFrame, side: Side): DataFrame =
+    live(df).withColumnRenamed(side.joinKeyCol, "jk").filter(col("jk").isNotNull)
+
+  /** Zero jk-copy rows of a side: what its empty jk state reads as. */
+  private def noJkRows(spark: SparkSession, side: Side): DataFrame =
+    liveJk(ManifestState.empty(spark, side.rows), side)
+
+  /** The view's rows: `jk`, then left payload, then right payload. */
+  private def joined(l: DataFrame, r: DataFrame): DataFrame =
+    l.join(r, Seq("jk")).drop("event_type", "lsn", "ts_ms")
 
   /** Join-key values owned by `ids` in `state` (null-safe: tombstones
     * and never-seen ids contribute nothing). */
@@ -74,8 +90,8 @@ object JoinView {
     val lDir = s"$stateDir/left"; val rDir = s"$stateDir/right"
     val vDir = s"$stateDir/view"
 
-    val lOld = stateOf(spark, lDir, leftDelta)
-    val rOld = stateOf(spark, rDir, rightDelta)
+    val lOld = stateOf(spark, lDir, left.rows)
+    val rOld = stateOf(spark, rDir, right.rows)
     val lNew = CdcMerge.latestWins(lOld.unionByName(leftDelta), Seq(left.idCol), ordering)
     val rNew = CdcMerge.latestWins(rOld.unionByName(rightDelta), Seq(right.idCol), ordering)
 
@@ -88,12 +104,10 @@ object JoinView {
       .unionByName(keysOf(rNew, right, rIds))
       .distinct()
 
-    val lLive = live(lNew).withColumnRenamed(left.joinKeyCol, "jk").filter(col("jk").isNotNull)
-    val rLive = live(rNew).withColumnRenamed(right.joinKeyCol, "jk").filter(col("jk").isNotNull)
-    val recompute = lLive.join(broadcast(delta), Seq("jk"), "left_semi")
-      .join(rLive.join(broadcast(delta), Seq("jk"), "left_semi"), Seq("jk"))
-      .drop("event_type", "lsn", "ts_ms")
-    val oldView = stateOf(spark, vDir, recompute)
+    val recompute = joined(
+      liveJk(lNew, left).join(broadcast(delta), Seq("jk"), "left_semi"),
+      liveJk(rNew, right).join(broadcast(delta), Seq("jk"), "left_semi"))
+    val oldView = stateOf(spark, vDir, recompute.schema)
     val newView = oldView.join(broadcast(delta), Seq("jk"), "left_anti")
       .unionByName(recompute)
 
@@ -181,8 +195,6 @@ object JoinView {
                          leftDelta: DataFrame, rightDelta: DataFrame,
                          stateRoot: String, left: Side, right: Side,
                          nBuckets: Int): Unit = synchronized {
-    def liveJk(df: DataFrame, side: Side): DataFrame =
-      live(df).withColumnRenamed(side.joinKeyCol, "jk").filter(col("jk").isNotNull)
     val pinned = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def pin(df: DataFrame): DataFrame = { pinned += df; df.cache() }
 
@@ -190,7 +202,7 @@ object JoinView {
     // patch supersedes the buckets it was read from
     case class SideDelta(side: Side, idRoot: String, jkRoot: String,
                          ids: DataFrame, newTouched: DataFrame,
-                         deltaJk: DataFrame, jkTemplate: DataFrame) {
+                         deltaJk: DataFrame) {
       def empty: Boolean = newTouched == null
     }
 
@@ -201,11 +213,10 @@ object JoinView {
       val ids = pin(delta.select(side.idCol).distinct())
       if (ids.isEmpty)
         return SideDelta(side, idRoot, jkRoot, ids, null,
-          pin(delta.select(col(side.joinKeyCol).as("jk")).limit(0)),
-          liveJk(delta, side))
+          pin(delta.select(col(side.joinKeyCol).as("jk")).limit(0)))
       val idBuckets = ManifestState.bucketsOf(ids, side.idCol, nBuckets)
       val oldTouched = pin(ManifestState
-        .readBucketsOf(spark, idRoot, idBuckets, delta)
+        .readBucketsOf(spark, idRoot, nBuckets, idBuckets, side.rows)
         .join(ids, Seq(side.idCol), "left_semi"))
       val newTouched = pin(CdcMerge.latestWins(
         oldTouched.unionByName(delta), Seq(side.idCol), ordering))
@@ -215,7 +226,7 @@ object JoinView {
         .unionByName(liveJk(newTouched, side).select(col("jk")))
         .filter(col("jk").isNotNull).distinct())
       deltaJk.count() // pin: its inputs' buckets get superseded below
-      SideDelta(side, idRoot, jkRoot, ids, newTouched, deltaJk, liveJk(delta, side))
+      SideDelta(side, idRoot, jkRoot, ids, newTouched, deltaJk)
     }
 
     // ---- phase 2: jk copy — touched ids' old rows leave (they sit in
@@ -224,20 +235,20 @@ object JoinView {
     // Δjk-bucket content; the patch write materializes its cache and
     // the view recompute reuses it instead of re-reading those buckets.
     def patchJk(sd: SideDelta): DataFrame = {
-      if (sd.empty) return sd.jkTemplate.limit(0)
+      if (sd.empty) return noJkRows(spark, sd.side)
       var jkLive: DataFrame = null
       // committed=false means patchBuckets no-op'd (empty Δjk, e.g. a
       // tombstone-only delta for never-seen ids) — the crash-prefix
       // seam must only see REAL commit boundaries
       val committed = ManifestState.patchBuckets(
-        sd.jkRoot, nBuckets, "jk", sd.deltaJk, sd.jkTemplate) { current =>
+        sd.jkRoot, nBuckets, "jk", sd.deltaJk, noJkRows(spark, sd.side).schema) { current =>
         if (jkLive != null) jkLive.unpersist()
         jkLive = pin(current.join(sd.ids, Seq(sd.side.idCol), "left_anti")
           .unionByName(liveJk(sd.newTouched, sd.side)))
         jkLive
       }
       if (committed) onPatchCommitted()
-      if (jkLive == null) sd.jkTemplate.limit(0) else jkLive
+      if (jkLive == null) noJkRows(spark, sd.side) else jkLive
     }
 
     try {
@@ -253,17 +264,15 @@ object JoinView {
       // cached patch output, so only the buckets the other side
       // contributed are read from disk
       val jkBuckets = ManifestState.bucketsOf(delta, "jk", nBuckets)
-      def liveSlice(jkRoot: String, ownJk: DataFrame, own: DataFrame,
-                    template: DataFrame): DataFrame = {
-        val missing = jkBuckets.diff(ManifestState.bucketsOf(ownJk, "jk", nBuckets))
-        own.unionByName(ManifestState.readBucketsOf(spark, jkRoot, missing, template))
+      def liveSlice(sd: SideDelta, own: DataFrame): DataFrame = {
+        val missing = jkBuckets.diff(ManifestState.bucketsOf(sd.deltaJk, "jk", nBuckets))
+        own.unionByName(ManifestState.readBucketsOf(spark, sd.jkRoot, nBuckets, missing,
+            noJkRows(spark, sd.side).schema))
           .join(broadcast(delta), Seq("jk"), "left_semi")
       }
-      val recompute = liveSlice(s"$stateRoot/left_jk", l.deltaJk, lLive, l.jkTemplate)
-        .join(liveSlice(s"$stateRoot/right_jk", r.deltaJk, rLive, r.jkTemplate), Seq("jk"))
-        .drop("event_type", "lsn", "ts_ms")
+      val recompute = joined(liveSlice(l, lLive), liveSlice(r, rLive))
       val viewCommitted = ManifestState.patchBuckets(
-        s"$stateRoot/view", nBuckets, "jk", delta, recompute) {
+        s"$stateRoot/view", nBuckets, "jk", delta, recompute.schema) {
         current => current.join(broadcast(delta), Seq("jk"), "left_anti")
           .unionByName(recompute)
       }
@@ -273,10 +282,10 @@ object JoinView {
       // fence late replays, exactly the CdcStream state contract);
       // latest-wins makes this patch idempotent on its own, and its
       // position makes every EARLIER patch replayable (scaladoc)
-      Seq((l, leftDelta), (r, rightDelta)).foreach { case (sd, delta0) =>
+      Seq(l, r).foreach { sd =>
         if (!sd.empty) {
           val idCommitted = ManifestState.patchBuckets(
-            sd.idRoot, nBuckets, sd.side.idCol, sd.ids, delta0) {
+            sd.idRoot, nBuckets, sd.side.idCol, sd.ids, sd.side.rows) {
             current => current.join(sd.ids, Seq(sd.side.idCol), "left_anti")
               .unionByName(sd.newTouched)
           }
@@ -286,39 +295,28 @@ object JoinView {
     } finally pinned.foreach(_.unpersist())
   }
 
-  /** The bucketed view's current snapshot (manifest-consistent).
-    * A never-written state reads as a zero-column empty frame (same
-    * contract as [[ManifestState.read]]). */
-  def readViewBucketed(spark: SparkSession, stateRoot: String): DataFrame =
-    ManifestState.read(spark, s"$stateRoot/view")
+  /** The bucketed view's current snapshot (manifest-consistent); a
+    * never-written view reads as zero rows of the view's columns. */
+  def readViewBucketed(spark: SparkSession, stateRoot: String,
+                       left: Side, right: Side): DataFrame = {
+    ManifestState.read(spark, s"$stateRoot/view",
+      joined(noJkRows(spark, left), noJkRows(spark, right)).schema)
+  }
 
   /** Executable spec for the bucketed mode: full re-join of the
-    * bucketed side states — what [[readViewBucketed]] must equal.
-    * Guards the fresh/empty state (ManifestState.read returns a
-    * zero-column frame there, and filtering on event_type would
-    * otherwise fail analysis — the Scd2View.readDimBucketed guard). */
+    * bucketed side states — what [[readViewBucketed]] must equal. */
   def naiveViewBucketed(spark: SparkSession, stateRoot: String,
                         left: Side, right: Side): DataFrame = {
-    def liveSide(root: String, side: Side): DataFrame = {
-      val s = ManifestState.read(spark, root)
-      if (s.columns.isEmpty) s
-      else s.filter(col("event_type") =!= CdcStream.Delete)
-        .withColumnRenamed(side.joinKeyCol, "jk").filter(col("jk").isNotNull)
-    }
-    val (l, r) = (liveSide(s"$stateRoot/left_id", left),
-                  liveSide(s"$stateRoot/right_id", right))
-    if (l.columns.isEmpty || r.columns.isEmpty) spark.emptyDataFrame
-    else l.join(r, Seq("jk")).drop("event_type", "lsn", "ts_ms")
+    def liveSide(root: String, side: Side) =
+      liveJk(ManifestState.read(spark, root, side.rows), side)
+    joined(liveSide(s"$stateRoot/left_id", left), liveSide(s"$stateRoot/right_id", right))
   }
 
   /** The executable spec: the full re-join of the CURRENT live side
     * states — what the incremental view must always equal. */
   def naiveView(spark: SparkSession, stateDir: String,
                 left: Side, right: Side): DataFrame = {
-    val l = live(spark.read.parquet(s"$stateDir/left"))
-      .withColumnRenamed(left.joinKeyCol, "jk").filter(col("jk").isNotNull)
-    val r = live(spark.read.parquet(s"$stateDir/right"))
-      .withColumnRenamed(right.joinKeyCol, "jk").filter(col("jk").isNotNull)
-    l.join(r, Seq("jk")).drop("event_type", "lsn", "ts_ms")
+    joined(liveJk(spark.read.parquet(s"$stateDir/left"), left),
+      liveJk(spark.read.parquet(s"$stateDir/right"), right))
   }
 }

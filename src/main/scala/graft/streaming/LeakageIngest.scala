@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.DupSpans
 
@@ -61,27 +62,14 @@ import graft.operators.DupSpans
   */
 object LeakageIngest {
 
-  private def indexTemplate(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, String)].toDF("h", "source")
-  }
+  private val IndexSchema = StructType.fromDDL("h BIGINT NOT NULL, source STRING")
+  private val LeakSchema = StructType.fromDDL("doc_id BIGINT NOT NULL, src STRING, " +
+    "src_other STRING, leaked_tokens BIGINT NOT NULL, epoch BIGINT NOT NULL")
 
   /** Current (h, source) gram index — stored distinct, bucketed by h.
     * Empty if nothing ingested yet. */
-  def index(spark: SparkSession, indexDir: String): DataFrame = {
-    val m = ManifestState.readManifest(indexDir)
-    if (m.buckets.isEmpty) {
-      FsUtil.requireNotAppendLayout(spark, indexDir,
-        "not a bucketed (h, source) gram index")
-      indexTemplate(spark)
-    } else ManifestState.readSnapshot(spark, indexDir, m)
-  }
-
-  private def leakTemplate(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, String, String, Long, Long)]
-      .toDF("doc_id", "src", "src_other", "leaked_tokens", "epoch")
-  }
+  def index(spark: SparkSession, indexDir: String): DataFrame =
+    ManifestState.read(spark, indexDir, IndexSchema)
 
   /** Per-doc leakage rows as of each doc's FIRST arrival:
     * (doc_id, src, src_other, leaked_tokens). The min-epoch discipline
@@ -93,20 +81,10 @@ object LeakageIngest {
     * by nBuckets × (1 + keepGenerations) instead of growing one
     * fragment per batch, and no full-log groupBy/distinct happens per
     * readout. */
-  def leakage(spark: SparkSession, leakDir: String): DataFrame = {
-    import spark.implicits._
-    val m = ManifestState.readManifest(leakDir)
-    if (m.buckets.isEmpty) {
-      // loud upgrade guard: a pre-round-15 append-mode leakage log
-      // must not silently read as empty
-      FsUtil.requireNotAppendLayout(spark, leakDir,
-        "re-seed the bucketed leakage state from the fragments first")
-      Seq.empty[(Long, String, String, Long)]
-        .toDF("doc_id", "src", "src_other", "leaked_tokens")
-    } else ManifestState.readSnapshot(spark, leakDir, m)
-      .filter($"src" =!= $"src_other")
-      .select($"doc_id", $"src", $"src_other", $"leaked_tokens")
-  }
+  def leakage(spark: SparkSession, leakDir: String): DataFrame =
+    ManifestState.read(spark, leakDir, LeakSchema)
+      .filter(col("src") =!= col("src_other"))
+      .select(col("doc_id"), col("src"), col("src_other"), col("leaked_tokens"))
 
   /** The cumulative leakage matrix: (src, src_other, leaked_tokens)
     * summed over ingested docs — pairs with observed leakage only
@@ -139,15 +117,6 @@ object LeakageIngest {
                  sourceCol: String, indexDir: String, leakDir: String,
                  k: Int, nBuckets: Int): Unit =
     synchronized {
-      val spark = batch.sparkSession
-      ManifestState.requireBucketCount(indexDir, nBuckets)
-      ManifestState.requireBucketCount(leakDir, nBuckets)
-      if (ManifestState.readManifest(indexDir).buckets.isEmpty)
-        FsUtil.requireNotAppendLayout(spark, indexDir,
-          "not a bucketed (h, source) gram index")
-      if (ManifestState.readManifest(leakDir).buckets.isEmpty)
-        FsUtil.requireNotAppendLayout(spark, leakDir,
-          "re-seed the bucketed leakage state from the fragments first")
       // The arrival clock: the index manifest epoch BEFORE this
       // batch's patch — every gram-bearing merge advances it, so a
       // later re-merge of this same batch stamps a higher epoch and
@@ -157,7 +126,7 @@ object LeakageIngest {
         .localCheckpoint() // bucket list + counterpart union + patch retries
       val buckets = ManifestState.bucketsOf(bySrc, "h", nBuckets)
       val hist = ManifestState.readBucketsOf(
-        spark, indexDir, buckets, indexTemplate(spark))
+        batch.sparkSession, indexDir, nBuckets, buckets, IndexSchema)
       val counterpart = hist.unionByName(bySrc).distinct()
         .withColumnRenamed("source", "src_other")
       val leaked = g.join(counterpart, "h")
@@ -187,14 +156,14 @@ object LeakageIngest {
       // over the full log, because the state inductively holds each
       // doc's global min-epoch rows.
       ManifestState.patchBuckets(leakDir, nBuckets, "doc_id",
-        rows.select(col("doc_id")), leakTemplate(spark)) { current =>
+        rows.select(col("doc_id")), LeakSchema) { current =>
         val u = current.unionByName(rows).distinct()
         val first = u.groupBy(col("doc_id")).agg(min(col("epoch")).as("epoch"))
         u.join(first, Seq("doc_id", "epoch"))
           .select(rows.columns.map(col): _*)
       }
       ManifestState.patchBuckets(indexDir, nBuckets, "h",
-        bySrc.select(col("h")), indexTemplate(spark)) { current =>
+        bySrc.select(col("h")), IndexSchema) { current =>
         current.unionByName(bySrc).distinct()
       }
       graft.operators.Iterate.unpersistCheckpoint(rows)

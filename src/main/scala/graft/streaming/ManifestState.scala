@@ -4,8 +4,10 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.CdcMerge
 
@@ -40,6 +42,14 @@ import graft.operators.CdcMerge
   * a POSIX filesystem (atomic exclusive create); an object-store
   * deployment swaps it for the store's conditional-put, with the rest
   * of the protocol unchanged.
+  *
+  * Empty-state contract: every access names the state's schema, and a
+  * root with no committed bucket reads as zero rows of it ([[empty]]),
+  * never as a zero-column frame. On that path [[read]],
+  * [[readBucketsOf]], [[patchBuckets]] and [[mergeBatch]] first refuse
+  * a pre-manifest layout in the root ([[requireNoLegacyLayout]]), and
+  * the bucketed ones check the recorded bucket count
+  * ([[requireBucketCount]]), so callers carry no guards of their own.
   */
 object ManifestState {
 
@@ -131,15 +141,60 @@ object ManifestState {
   }
 
   /** Fail fast when `root`'s manifest was committed with a different
-    * bucket count (see [[Manifest]]) — call before reading touched
-    * buckets or patching, where the mismatch would otherwise corrupt
-    * silently. A missing manifest or a pre-`nb` manifest passes. */
-  def requireBucketCount(root: String, nBuckets: Int): Unit = {
-    val m = readManifest(root)
+    * bucket count (see [[Manifest]]) — [[readBucketsOf]],
+    * [[patchBuckets]] and [[mergeBatch]] run it before touching
+    * buckets, where the mismatch would otherwise corrupt silently. A
+    * missing manifest or a pre-`nb` manifest passes. */
+  def requireBucketCount(root: String, nBuckets: Int): Unit =
+    checkBucketCount(root, readManifest(root), nBuckets)
+
+  private def checkBucketCount(root: String, m: Manifest, nBuckets: Int): Unit =
     m.nb.foreach { n =>
       require(n == nBuckets,
         s"bucketed state at $root was committed with nBuckets=$n; " +
         s"caller passed $nBuckets — reads/patches would route to the wrong buckets")
+    }
+
+  /** Zero rows of `schema`: what a root with no committed bucket reads
+    * as. A local relation, the plan `Seq.empty.toDF` gives. */
+  def empty(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+
+  /** Refuse a pre-manifest layout in `dir` while `root` has no
+    * committed bucket — such a root would read as empty and the next
+    * commit would silently reset the state it holds. Two layouts:
+    *  - parquet files at the top level: an append-mode log, the ingest
+    *    twins' layout before bucketing;
+    *  - `b=<n>/` dirs holding parquet files directly: the retired
+    *    in-place bucketed merge (versions live in `b=<n>/v-…/`).
+    * Every access runs it on its own root (`dir = root`). A caller runs
+    * it directly only where no access would in time: WinnowIngest's
+    * index sat above its two sub-state roots, and its pair log is
+    * patched after two other commits. Seeds that migrate a dir in
+    * place skip it ([[patchBuckets]]' `migrateInPlace`). */
+  def requireNoLegacyLayout(spark: SparkSession, root: String,
+                            dir: String): Unit =
+    if (readManifest(root).buckets.isEmpty) refuseLegacyLayout(spark, dir)
+
+  private def refuseLegacyLayout(spark: SparkSession, dir: String): Unit = {
+    val p = new HPath(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    def parquetFile(s: FileStatus) =
+      s.isFile && s.getPath.getName.endsWith(".parquet")
+    if (fs.exists(p)) {
+      val top = fs.listStatus(p)
+      require(!top.exists(parquetFile),
+        s"$dir holds append-mode parquet fragments but no MANIFEST, so it " +
+        "is not a bucketed state; re-bootstrap it: merge its rows into a " +
+        "fresh root, or seed this dir with migrateInPlace = true " +
+        "(IngestDedup.addToIndex, WinnowIngest.seedIndex) and delete the " +
+        "fragments after — a plain seed would strand them beside a fresh manifest")
+      require(!top.exists(b => b.isDirectory &&
+          b.getPath.getName.matches("b=\\d+") && fs.listStatus(b.getPath).exists(parquetFile)),
+        s"$dir holds b=<n> buckets from the retired in-place bucketed " +
+        "merge but no MANIFEST; re-bootstrap it into a fresh root by " +
+        "merging its rows (spark.read.parquet(<old root>).drop(\"b\")) " +
+        "as one batch, the way CdcStream.bootstrapFromTable seeds a view")
     }
   }
 
@@ -280,29 +335,29 @@ object ManifestState {
   private def versionPath(root: String, bucket: Int, version: String): String =
     s"$root/b=$bucket/$version"
 
-  /** Read the state snapshot a manifest describes. */
-  def readSnapshot(spark: SparkSession, root: String,
-                   m: Manifest): DataFrame = {
-    val paths = m.buckets.toSeq.sortBy(_._1)
+  /** Read the given committed bucket versions of `root`. */
+  private def readSnapshot(spark: SparkSession, root: String,
+                           buckets: Map[Int, String], schema: StructType): DataFrame = {
+    val paths = buckets.toSeq.sortBy(_._1)
       .map { case (k, v) => versionPath(root, k, v) }
-    if (paths.isEmpty) spark.emptyDataFrame else spark.read.parquet(paths: _*)
+    if (paths.isEmpty) empty(spark, schema) else spark.read.parquet(paths: _*)
   }
 
-  /** Read the current state (latest committed snapshot). A root that
-    * holds buckets but no manifest fails loud instead of reading empty
-    * ([[FsUtil.requireNotInPlaceBuckets]]). */
-  def read(spark: SparkSession, root: String): DataFrame = {
+  /** Read the current state (latest committed snapshot) of a state
+    * with `schema` — by default [[mergeBatch]]'s change rows. */
+  def read(spark: SparkSession, root: String,
+           schema: StructType = CdcStream.changeSchema): DataFrame = {
     val m = readManifest(root)
-    if (m.buckets.isEmpty) FsUtil.requireNotInPlaceBuckets(spark, root)
-    readSnapshot(spark, root, m)
+    if (m.buckets.isEmpty) refuseLegacyLayout(spark, root)
+    readSnapshot(spark, root, m.buckets, schema)
   }
 
-  /** Time travel: the state exactly as of commit `epoch`. Valid while
-    * the versions that manifest references survive GC — i.e. for the
-    * most recent `keepGenerations` commits touching each bucket
-    * (older reads fail on the missing version dir). */
+  /** Time travel: the change state exactly as of commit `epoch`. Valid
+    * while the versions that manifest references survive GC — i.e.
+    * for the most recent `keepGenerations` commits touching each
+    * bucket (older reads fail on the missing version dir). */
   def readAt(spark: SparkSession, root: String, epoch: Long): DataFrame =
-    readSnapshot(spark, root, readManifestAt(root, epoch))
+    readSnapshot(spark, root, readManifestAt(root, epoch).buckets, CdcStream.changeSchema)
 
   /** Change data feed: the NET row-level changes between two archived
     * epochs, derived by diffing the snapshots (an id that was inserted
@@ -335,10 +390,8 @@ object ManifestState {
   }
 
   /** The queryable latest-wins view: state minus tombstones. */
-  def readView(spark: SparkSession, root: String): DataFrame = {
-    val s = read(spark, root)
-    if (s.columns.isEmpty) s else s.filter(col("event_type") === CdcStream.Upsert)
-  }
+  def readView(spark: SparkSession, root: String): DataFrame =
+    read(spark, root).filter(col("event_type") === CdcStream.Upsert)
 
   // -- the optimistic merge -------------------------------------------
 
@@ -355,6 +408,7 @@ object ManifestState {
                  keepGenerations: Int = DefaultKeepGenerations): Unit = {
     require(nBuckets > 0)
     val spark = batch.sparkSession
+    checkRoot(spark, root, nBuckets, migrateInPlace = false)
     val delta = batch.filter(col("event_type") =!= CdcStream.Malformed)
       .withColumn("b", pmod(xxhash64(col("id")), lit(nBuckets)).cast("int"))
       .cache()
@@ -366,7 +420,7 @@ object ManifestState {
       // change schema and re-derive the bucket before writing
       val bare = delta.drop("b")
       optimisticCommit(spark, root, affected.toIndexedSeq, nBuckets, "id",
-        bare, maxRetries, keepGenerations) { current =>
+        bare.schema, maxRetries, keepGenerations) { current =>
         CdcMerge.latestWins(
           current.unionByName(bare), Seq("id"),
           Seq(col("lsn").desc_nulls_last, col("ts_ms").desc_nulls_last))
@@ -381,7 +435,7 @@ object ManifestState {
     * the same manifest/lock/GC protocol as [[mergeBatch]].
     *
     * `buildMerged` receives the CURRENT full content of the affected
-    * buckets (the `template`'s empty frame when the state is new) and
+    * buckets (zero rows of `schema` when the state is new) and
     * must return their full NEW content — typically
     * `current.anti(touched) ∪ replacement`. It is re-invoked against
     * the fresh snapshot on every commit retry, so a lost race
@@ -389,20 +443,26 @@ object ManifestState {
     * `keyCol` must hash into the affected buckets (i.e. replacement
     * keys ⊆ touchedKeys) — a row outside them would be silently
     * dropped from the state, since only affected buckets commit.
+    *
+    * `migrateInPlace` lets the first commit land in a dir that still
+    * holds append-mode fragments — the seed of an in-place migration
+    * (IngestDedup.addToIndex), whose caller deletes them after.
     */
   def patchBuckets(root: String, nBuckets: Int, keyCol: String,
-                   touchedKeys: DataFrame, template: DataFrame,
+                   touchedKeys: DataFrame, schema: StructType,
                    maxRetries: Int = 20,
-                   keepGenerations: Int = DefaultKeepGenerations)
+                   keepGenerations: Int = DefaultKeepGenerations,
+                   migrateInPlace: Boolean = false)
                   (buildMerged: DataFrame => DataFrame): Boolean = {
     require(nBuckets > 0)
+    checkRoot(touchedKeys.sparkSession, root, nBuckets, migrateInPlace)
     val affected = bucketsOf(touchedKeys, keyCol, nBuckets)
     // returns whether a commit actually happened — an empty delta is a
     // no-op, and callers instrumenting commit boundaries (crash-prefix
     // replay seams) must not count it as one
     if (affected.isEmpty) return false
     optimisticCommit(touchedKeys.sparkSession, root, affected, nBuckets,
-      keyCol, template, maxRetries, keepGenerations)(buildMerged)
+      keyCol, schema, maxRetries, keepGenerations)(buildMerged)
     true
   }
 
@@ -418,12 +478,21 @@ object ManifestState {
     * the next commit, so the returned frame stays readable across one
     * subsequent patch of the same buckets (the reader grace window).
     */
-  def readBucketsOf(spark: SparkSession, root: String, buckets: Seq[Int],
-                    template: DataFrame): DataFrame = {
+  def readBucketsOf(spark: SparkSession, root: String, nBuckets: Int,
+                    buckets: Seq[Int], schema: StructType): DataFrame = {
+    val m = checkRoot(spark, root, nBuckets, migrateInPlace = false)
+    readSnapshot(spark, root, m.buckets.filter { case (k, _) => buckets.contains(k) }, schema)
+  }
+
+  /** The checks every bucketed access runs before it touches a bucket:
+    * the recorded bucket count, and while no bucket is committed, the
+    * legacy-layout refusal (unless a seed migrates the dir in place). */
+  private def checkRoot(spark: SparkSession, root: String, nBuckets: Int,
+                        migrateInPlace: Boolean): Manifest = {
     val m = readManifest(root)
-    val paths = buckets.flatMap(k => m.buckets.get(k).map(v => versionPath(root, k, v)))
-    if (paths.isEmpty) template.limit(0)
-    else spark.read.parquet(paths.toIndexedSeq: _*)
+    checkBucketCount(root, m, nBuckets)
+    if (m.buckets.isEmpty && !migrateInPlace) refuseLegacyLayout(spark, root)
+    m
   }
 
   /** The shared optimistic heavy-phase + commit loop: read affected
@@ -431,7 +500,7 @@ object ManifestState {
     * compare+swap under the lock, GC. */
   private def optimisticCommit(spark: SparkSession, root: String,
                                affected: IndexedSeq[Int], nBuckets: Int,
-                               keyCol: String, template: DataFrame,
+                               keyCol: String, schema: StructType,
                                maxRetries: Int, keepGenerations: Int)
                               (buildMerged: DataFrame => DataFrame): Unit = {
     Files.createDirectories(Paths.get(root))
@@ -448,10 +517,8 @@ object ManifestState {
         throw new IllegalStateException(
           s"merge lost the commit race $maxRetries times", lastFailure)
       val base = readManifest(root)
-      base.nb.foreach(n => require(n == nBuckets,
-        s"bucketed state at $root was committed with nBuckets=$n; " +
-        s"this merge passed $nBuckets"))
-      if (base.buckets.isEmpty) FsUtil.requireNotInPlaceBuckets(spark, root)
+      // a concurrent first writer may have stamped another count
+      checkBucketCount(root, base, nBuckets)
       val version = s"v-${base.epoch + 1}-$callId-$attempt"
       // drop THIS attempt's on-disk artifacts: the stage tmp dir (a
       // heavy-phase exception can leave it mid-write) and any version
@@ -466,11 +533,8 @@ object ManifestState {
       }
       try {
         // heavy phase — no lock held
-        val existing = affected.flatMap(k => base.buckets.get(k).map(v => (k, v)))
-        val current =
-          if (existing.isEmpty) template.limit(0)
-          else spark.read.parquet(existing.map { case (k, v) =>
-            versionPath(root, k, v) }.toIndexedSeq: _*)
+        val current = readSnapshot(spark, root,
+          base.buckets.filter { case (k, _) => affected.contains(k) }, schema)
         val merged = buildMerged(current)
           .withColumn("b", pmod(xxhash64(col(keyCol)), lit(nBuckets)).cast("int"))
         // one writer task per touched bucket, one immutable version dir

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 
 import graft.functions.{JaccardSortedLongs, TextFunctions => TF}
 
@@ -115,22 +116,15 @@ object NearDedupIngest {
   private def docDir(indexDir: String) = s"$indexDir/doc"
   private def dfDir(indexDir: String) = s"$indexDir/df"
 
-  private def fpTemplate(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(String, Long)].toDF("fp", "hid")
-  }
-  private def preTemplate(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(String, Long, Int, Int)].toDF("shingle", "hid", "n", "rn")
-  }
-  private def docTemplate(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, Array[Long], Int)].toDF("doc_id", "hh", "n")
-  }
-  private def dfTemplate(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(String, Long, Long)].toDF("shingle", "df", "epoch")
-  }
+  private val FpSchema = StructType.fromDDL("fp STRING, hid BIGINT NOT NULL")
+  private val PreSchema = StructType.fromDDL(
+    "shingle STRING, hid BIGINT NOT NULL, n INT NOT NULL, rn INT NOT NULL")
+  private val DocSchema = StructType(Seq(
+    StructField("doc_id", LongType, nullable = false),
+    StructField("hh", ArrayType(LongType, containsNull = false)),
+    StructField("n", IntegerType, nullable = false)))
+  private val DfSchema = StructType.fromDDL(
+    "shingle STRING, df BIGINT NOT NULL, epoch BIGINT NOT NULL")
 
   /** Test seam: invoked after the corpus append and after each of the
     * four state commits (out, pre, doc, df, fp — in that order), so
@@ -170,18 +164,12 @@ object NearDedupIngest {
     array_sort(transform(sh, x => xxhash64(x)))
 
   /** The fp→owner index as a readable set (empty if nothing kept). */
-  def fpIndex(spark: SparkSession, indexDir: String): DataFrame = {
-    val m = ManifestState.readManifest(fpDir(indexDir))
-    if (m.buckets.isEmpty) fpTemplate(spark)
-    else ManifestState.readSnapshot(spark, fpDir(indexDir), m)
-  }
+  def fpIndex(spark: SparkSession, indexDir: String): DataFrame =
+    ManifestState.read(spark, fpDir(indexDir), FpSchema)
 
   /** The stored prefix index (shingle, hid, n, rn) — spec/probe seam. */
-  private[graft] def preIndex(spark: SparkSession, indexDir: String): DataFrame = {
-    val m = ManifestState.readManifest(preDir(indexDir))
-    if (m.buckets.isEmpty) preTemplate(spark)
-    else ManifestState.readSnapshot(spark, preDir(indexDir), m)
-  }
+  private[graft] def preIndex(spark: SparkSession, indexDir: String): DataFrame =
+    ManifestState.read(spark, preDir(indexDir), PreSchema)
 
   /** The (thr, ngram) a state was built with, from `indexDir/META`. */
   private def readMeta(spark: SparkSession, indexDir: String): (Double, Int) = {
@@ -225,8 +213,6 @@ object NearDedupIngest {
     val spark = batch.sparkSession
     require(thr > 0.0 && thr <= 1.0, s"thr must be in (0, 1], got $thr")
     checkOrWriteMeta(spark, indexDir, thr, ngram)
-    Seq(fpDir(indexDir), preDir(indexDir), docDir(indexDir), dfDir(indexDir))
-      .foreach(ManifestState.requireBucketCount(_, nBuckets))
 
     // ---- in-batch exact collapse (deterministic min-id survivor) ----
     // null text → null fp: each such row is its OWN survivor (null is
@@ -254,8 +240,8 @@ object NearDedupIngest {
     //      (null fps neither probe nor store — join semantics would
     //      never match them, and a null bucket key has no bucket) ----
     val fpKeys = uniq.select(col("fp")).filter(col("fp").isNotNull)
-    val fpStored = ManifestState.readBucketsOf(spark, fpDir(indexDir),
-        ManifestState.bucketsOf(fpKeys, "fp", nBuckets), fpTemplate(spark))
+    val fpStored = ManifestState.readBucketsOf(spark, fpDir(indexDir), nBuckets,
+        ManifestState.bucketsOf(fpKeys, "fp", nBuckets), FpSchema)
       .join(fpKeys, Seq("fp"), "left_semi")
     val exact = uniq.join(fpStored, "fp")
       .select(col("doc_id"), col("hid").as("exact_id"))
@@ -269,9 +255,9 @@ object NearDedupIngest {
     // ---- near tier: one-sided prefix probe + sorted-merge verify ----
     val exB = residue.select(col("doc_id"), col("n").as("n_a"),
       explode(col("sh")).as("shingle"))
-    val preStored = ManifestState.readBucketsOf(spark, preDir(indexDir),
+    val preStored = ManifestState.readBucketsOf(spark, preDir(indexDir), nBuckets,
       ManifestState.bucketsOf(exB.select(col("shingle")), "shingle", nBuckets),
-      preTemplate(spark))
+      PreSchema)
     val cand = exB.join(preStored, "shingle")
       .filter(col("n_a") >= col("n") * thr && col("n") >= col("n_a") * thr)
       .filter(col("n") - col("rn") + 1 >=
@@ -281,8 +267,8 @@ object NearDedupIngest {
       .localCheckpoint(eager = false)
     onCandidates.foreach(f => f(cand.count()))
     val hids = cand.select(col("hid").as("doc_id")).distinct()
-    val docStored = ManifestState.readBucketsOf(spark, docDir(indexDir),
-        ManifestState.bucketsOf(hids, "doc_id", nBuckets), docTemplate(spark))
+    val docStored = ManifestState.readBucketsOf(spark, docDir(indexDir), nBuckets,
+        ManifestState.bucketsOf(hids, "doc_id", nBuckets), DocSchema)
       .join(hids, Seq("doc_id"), "left_semi")
       .select(col("doc_id").as("hid"), col("hh").as("hb"))
     val verified = cand
@@ -326,9 +312,9 @@ object NearDedupIngest {
     // current corpus df for the NEW prefixes = stored + this batch's kept
     val cnts = keptSh.groupBy(col("shingle")).agg(count(lit(1)).as("cnt"))
       .localCheckpoint(eager = false)
-    val dfStored = ManifestState.readBucketsOf(spark, dfDir(indexDir),
+    val dfStored = ManifestState.readBucketsOf(spark, dfDir(indexDir), nBuckets,
       ManifestState.bucketsOf(cnts.select(col("shingle")), "shingle", nBuckets),
-      dfTemplate(spark))
+      DfSchema)
     val dfCur = cnts.join(
         dfStored.select(col("shingle"), col("df")), Seq("shingle"), "left")
       .select(col("shingle"),
@@ -341,20 +327,20 @@ object NearDedupIngest {
       .select(col("shingle"), col("doc_id").as("hid"), col("n"), col("rn"))
       .localCheckpoint(eager = false)
     ManifestState.patchBuckets(preDir(indexDir), nBuckets, "shingle",
-      newPre.select(col("shingle")), preTemplate(spark))(
+      newPre.select(col("shingle")), PreSchema)(
       _.unionByName(newPre).distinct())
     onPatchCommitted()
 
     val newDoc = kept.select(col("doc_id"), col("hh"), col("n"))
     ManifestState.patchBuckets(docDir(indexDir), nBuckets, "doc_id",
-      newDoc.select(col("doc_id")), docTemplate(spark))(
+      newDoc.select(col("doc_id")), DocSchema)(
       _.unionByName(newDoc).distinct())
     onPatchCommitted()
 
     // epoch-guarded increment: a replayed batch (same epoch) finds its
     // counts applied and leaves df unchanged
     ManifestState.patchBuckets(dfDir(indexDir), nBuckets, "shingle",
-      cnts.select(col("shingle")), dfTemplate(spark)) { current =>
+      cnts.select(col("shingle")), DfSchema) { current =>
       current.join(cnts, Seq("shingle"), "full")
         .select(col("shingle"),
           when(col("cnt").isNull || col("epoch") === lit(epoch), col("df"))
@@ -367,7 +353,7 @@ object NearDedupIngest {
     val newFp = kept.filter(col("fp").isNotNull)
       .select(col("fp"), col("doc_id").as("hid"))
     ManifestState.patchBuckets(fpDir(indexDir), nBuckets, "fp",
-      newFp.select(col("fp")), fpTemplate(spark)) { current =>
+      newFp.select(col("fp")), FpSchema) { current =>
       // the corpus is fp-unique, so the group is a singleton except
       // under replay, where min keeps the pick deterministic
       current.unionByName(newFp).groupBy(col("fp"))
@@ -424,21 +410,21 @@ object NearDedupIngest {
       .select(col("shingle"), col("doc_id").as("hid"), col("n"), col("rn"))
       .localCheckpoint(eager = false)
     ManifestState.patchBuckets(preDir(indexDir), nBuckets, "shingle",
-      newPre.select(col("shingle")), preTemplate(spark))(
+      newPre.select(col("shingle")), PreSchema)(
       _.unionByName(newPre).distinct())
     val newDoc = uniq.select(col("doc_id"), col("hh"), col("n"))
     ManifestState.patchBuckets(docDir(indexDir), nBuckets, "doc_id",
-      newDoc.select(col("doc_id")), docTemplate(spark))(
+      newDoc.select(col("doc_id")), DocSchema)(
       _.unionByName(newDoc).distinct())
     val seedDf = dfAgg.select(col("shingle"), col("dfc").as("df"),
       lit(-1L).as("epoch")) // -1 never collides with a batchId epoch
     ManifestState.patchBuckets(dfDir(indexDir), nBuckets, "shingle",
-      seedDf.select(col("shingle")), dfTemplate(spark))(
+      seedDf.select(col("shingle")), DfSchema)(
       _.unionByName(seedDf))
     val newFp = uniq.filter(col("fp").isNotNull)
       .select(col("fp"), col("doc_id").as("hid"))
     ManifestState.patchBuckets(fpDir(indexDir), nBuckets, "fp",
-      newFp.select(col("fp")), fpTemplate(spark))(
+      newFp.select(col("fp")), FpSchema)(
       _.unionByName(newFp).groupBy(col("fp")).agg(min(col("hid")).as("hid")))
     Seq(newPre, ex, uniq).foreach(graft.operators.Iterate.unpersistCheckpoint)
   }
@@ -475,8 +461,6 @@ object NearDedupIngest {
                     indexDir: String,
                     nBuckets: Int = DefaultIndexBuckets): Unit = synchronized {
     val (thr, ngram) = readMeta(spark, indexDir)
-    Seq(preDir(indexDir), dfDir(indexDir))
-      .foreach(ManifestState.requireBucketCount(_, nBuckets))
     // the documented replay anomaly can double-append a kept doc —
     // collapse by id so the restatement stays deterministic
     val corpus = spark.read.parquet(corpusDir)
@@ -486,11 +470,8 @@ object NearDedupIngest {
       .withColumn("n", size(col("sh")))
       .select(col("doc_id"), col("n"), explode(col("sh")).as("shingle"))
       .localCheckpoint(eager = false)
-    val dfSnap = {
-      val m = ManifestState.readManifest(dfDir(indexDir))
-      if (m.buckets.isEmpty) dfTemplate(spark)
-      else ManifestState.readSnapshot(spark, dfDir(indexDir), m)
-    }.select(col("shingle"), col("df"))
+    val dfSnap = ManifestState.read(spark, dfDir(indexDir), DfSchema)
+      .select(col("shingle"), col("df"))
     val wPre = Window.partitionBy(col("doc_id"))
       .orderBy(col("dfc"), col("shingle"))
     val newPre = ex.join(dfSnap, Seq("shingle"), "left")
@@ -505,7 +486,7 @@ object NearDedupIngest {
       .unionByName(preIndex(spark, indexDir).select(col("shingle")))
       .distinct().localCheckpoint()
     ManifestState.patchBuckets(preDir(indexDir), nBuckets, "shingle",
-      touched, preTemplate(spark))(_ => newPre)
+      touched, PreSchema)(_ => newPre)
     Seq(touched, newPre, ex)
       .foreach(graft.operators.Iterate.unpersistCheckpoint)
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Incrementally-maintained SCD Type-2 dimension over a CDC stream —
   * the streaming twin of `q104_scd2_build`: every change to an id
@@ -48,7 +49,7 @@ object Scd2View {
          state.select(eventCols: _*)
            .join(touched, Seq("id"), "left_semi")
            .unionByName(delta))
-      } else (emptyState(spark), delta)
+      } else (ManifestState.empty(spark, StateSchema), delta)
 
     val tmp = stateDir + ".tmp"
     carryover.unionByName(rebuild(sliceEvents))
@@ -68,8 +69,7 @@ object Scd2View {
     val delta = decodeDelta(batch)
     val ids = delta.select("id").distinct().cache()
     var cur: DataFrame = null
-    try ManifestState.patchBuckets(stateRoot, nBuckets, "id", ids,
-      template = emptyState(batch.sparkSession)) { current =>
+    try ManifestState.patchBuckets(stateRoot, nBuckets, "id", ids, StateSchema) { current =>
       // the touched-slice lookup and the carryover rewrite both scan
       // the same buckets — cache one read (per-bucket file opens are
       // the measured per-batch constant, docs/SCALE.md); a retried
@@ -89,13 +89,8 @@ object Scd2View {
 
   /** The queryable bucketed dimension ([[readDim]] over the manifest
     * snapshot). */
-  def readDimBucketed(spark: SparkSession, stateRoot: String): DataFrame = {
-    val s = ManifestState.read(spark, stateRoot)
-    if (s.columns.isEmpty) spark.emptyDataFrame
-    else s.filter(!col("is_delete"))
-      .select("id", "message", "username", "valid_from", "valid_to",
-        "version", "is_current")
-  }
+  def readDimBucketed(spark: SparkSession, stateRoot: String): DataFrame =
+    dim(ManifestState.read(spark, stateRoot, StateSchema))
 
   private val eventCols = Seq("id", "create_time", "update_time", "message",
     "username", "lsn", "ts_ms", "is_delete").map(col)
@@ -130,28 +125,22 @@ object Scd2View {
       .withColumn("is_current", col("valid_to").isNull && !col("is_delete"))
   }
 
-  private def emptyState(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      StructType(Seq(
-        StructField("id", StringType), StructField("create_time", LongType),
-        StructField("update_time", LongType), StructField("message", StringType),
-        StructField("username", StringType), StructField("lsn", LongType),
-        StructField("ts_ms", LongType), StructField("is_delete", BooleanType),
-        StructField("valid_from", TimestampType), StructField("valid_to", TimestampType),
-        StructField("version", LongType), StructField("is_current", BooleanType))))
-  }
+  private val StateSchema = StructType.fromDDL(
+    "id STRING, create_time BIGINT, update_time BIGINT, message STRING, " +
+    "username STRING, lsn BIGINT, ts_ms BIGINT, is_delete BOOLEAN, " +
+    "valid_from TIMESTAMP_LTZ, valid_to TIMESTAMP_LTZ, version BIGINT, is_current BOOLEAN")
+
+  private def dim(state: DataFrame): DataFrame =
+    state.filter(!col("is_delete"))
+      .select("id", "message", "username", "valid_from", "valid_to",
+        "version", "is_current")
 
   /** The queryable dimension: every non-tombstone version with its
     * validity interval. Point-in-time reads filter
     * `valid_from <= t AND (valid_to IS NULL OR t < valid_to)`. */
   def readDim(spark: SparkSession, stateDir: String): DataFrame =
-    if (CdcStream.statePresent(Paths.get(stateDir)))
-      spark.read.parquet(stateDir)
-        .filter(!col("is_delete"))
-        .select("id", "message", "username", "valid_from", "valid_to",
-          "version", "is_current")
-    else spark.emptyDataFrame
+    dim(if (CdcStream.statePresent(Paths.get(stateDir))) spark.read.parquet(stateDir)
+        else ManifestState.empty(spark, StateSchema))
 
   /** Run the maintained dimension over an envelope file stream. */
   def run(spark: SparkSession, inputDir: String, checkpointDir: String,

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Incrementally-maintained snapshot diff — the streaming twin of
   * `q150_snapshot_diff`: where q150 answers "what changed between two
@@ -73,7 +74,7 @@ object SnapshotDiffView {
     val delta = batchWinners(batch)
     val old =
       if (Files.exists(statePath)) spark.read.parquet(stateDir) // healed by the fence check above
-      else emptyState(spark)
+      else ManifestState.empty(spark, StateSchema)
     val merged = mergeWinners(delta, old)
       .localCheckpoint() // read twice: diff emission + state rewrite
     writeDiff(merged, diffDir, batchId)
@@ -114,7 +115,7 @@ object SnapshotDiffView {
     var pinned = List(delta)
     try {
       val committed = ManifestState.patchBuckets(stateDir, nBuckets, "user_id",
-          delta.select(col("user_id")), emptyState(spark)) { current =>
+          delta.select(col("user_id")), StateSchema) { current =>
         val merged = mergeWinners(delta, current)
           .localCheckpoint() // diff emission + bucket rewrite
         pinned ::= merged
@@ -122,7 +123,8 @@ object SnapshotDiffView {
         nextState(current, merged)
       }
       // a batch that touched no key still leaves its (empty) slice
-      if (!committed && !replay) writeDiff(mergeWinners(delta, emptyState(spark)), diffDir, batchId)
+      if (!committed && !replay)
+        writeDiff(mergeWinners(delta, ManifestState.empty(spark, StateSchema)), diffDir, batchId)
     } finally pinned.foreach(graft.operators.Iterate.unpersistCheckpoint)
   }
 
@@ -165,10 +167,8 @@ object SnapshotDiffView {
     Files.exists(Paths.get(s"$diffDir/batch_seq=$batchId", "_SUCCESS"))
 
   /** The bucketed view: the committed manifest snapshot. */
-  def readViewBucketed(spark: SparkSession, stateDir: String): DataFrame = {
-    val s = ManifestState.read(spark, stateDir)
-    if (s.columns.isEmpty) emptyState(spark) else s
-  }
+  def readViewBucketed(spark: SparkSession, stateDir: String): DataFrame =
+    ManifestState.read(spark, stateDir, StateSchema)
 
   private val AppliedMarker = "_applied_batch"
 
@@ -177,18 +177,13 @@ object SnapshotDiffView {
     if (Files.exists(m)) new String(Files.readAllBytes(m)).trim.toLong else -1L
   }
 
-  private def emptyState(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      StructType(Seq(
-        StructField("user_id", LongType), StructField("ts", TimestampType),
-        StructField("event_id", LongType), StructField("value", DoubleType))))
-  }
+  private val StateSchema =
+    StructType.fromDDL("user_id BIGINT, ts TIMESTAMP_LTZ, event_id BIGINT, value DOUBLE")
 
   /** The maintained latest-wins view. */
   def readView(spark: SparkSession, stateDir: String): DataFrame =
     if (CdcStream.statePresent(Paths.get(stateDir))) spark.read.parquet(stateDir)
-    else emptyState(spark)
+    else ManifestState.empty(spark, StateSchema)
 
   /** One batch's diff slice (empty if the batch touched nothing). */
   def readDiff(spark: SparkSession, diffDir: String, batchId: Long): DataFrame =

@@ -70,8 +70,8 @@ object ViewStateBench {
     val batchSize = if (args.length > 2) args(2).toLong else 1000L
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.engine.Graft.session(s"local[$cpus]", cpus.toInt)
-    val left = JoinView.Side("uid", "dept")
-    val right = JoinView.Side("did", "dept")
+    val left = JoinView.Side("uid", "dept", empBatch(spark, 0, 0, 1).schema)
+    val right = JoinView.Side("did", "dept", dptBatch(spark, 0).schema)
 
     def secs(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9

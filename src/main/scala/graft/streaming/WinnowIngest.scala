@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.Winnow
 
@@ -98,15 +99,15 @@ object WinnowIngest {
     * JoinView crash-prefix discipline). */
   private[graft] var onPatchCommitted: () => Unit = () => ()
 
-  private def hTemplate(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, Option[Long])].toDF("h", "doc_id")
-  }
+  private val HSchema = StructType.fromDDL("h BIGINT NOT NULL, doc_id BIGINT")
+  private val DocSchema = StructType.fromDDL("doc_id BIGINT NOT NULL, h BIGINT NOT NULL")
+  private val PairsSchema = StructType.fromDDL("doc_a BIGINT NOT NULL, " +
+    "doc_b BIGINT NOT NULL, n_shared BIGINT NOT NULL, overlap_r DOUBLE NOT NULL")
 
-  private def docTemplate(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, Long)].toDF("doc_id", "h")
-  }
+  /** The pre-manifest index sat in `indexDir` itself, above both
+    * sub-state roots, where no root's own legacy-layout check looks. */
+  private def requireNoLegacyIndex(spark: SparkSession, indexDir: String): Unit =
+    ManifestState.requireNoLegacyLayout(spark, byH(indexDir), indexDir)
 
   /** Current LIVE fingerprint index as a set: (doc_id, h) of every
     * fingerprint whose df has never exceeded the guard. Hot
@@ -114,14 +115,8 @@ object WinnowIngest {
     * markers and are omitted here — they no longer pair, count, or
     * store occurrences. Empty if nothing ingested yet. */
   def index(spark: SparkSession, indexDir: String): DataFrame = {
-    val m = ManifestState.readManifest(byH(indexDir))
-    if (m.buckets.isEmpty) {
-      // loud upgrade guard: a pre-round-15 append-mode index must not
-      // silently read as empty
-      FsUtil.requireNotAppendLayout(spark, indexDir,
-        "seed the bucketed fingerprint index from the fragments via seedIndex first")
-      docTemplate(spark)
-    } else ManifestState.readSnapshot(spark, byH(indexDir), m)
+    requireNoLegacyIndex(spark, indexDir)
+    ManifestState.read(spark, byH(indexDir), HSchema)
       .filter(col("doc_id").isNotNull)
       .select(col("doc_id"), col("h"))
   }
@@ -139,9 +134,9 @@ object WinnowIngest {
     * (append-mode) parquet fragments is refused by default — the same
     * stranding guard as [[IngestDedup.addToIndex]]: the seed would
     * commit manifests BESIDE the fragments, after which
-    * [[index]]/[[mergeBatch]] see a non-empty manifest, never fire
-    * their append-layout guard again, and silently ignore whatever
-    * fragment content the seed missed. An in-place migration (read
+    * [[index]]/[[mergeBatch]] see a non-empty manifest, never run the
+    * legacy-layout check again, and silently ignore whatever fragment
+    * content the seed missed. An in-place migration (read
     * the fragments → seed them → this call) passes
     * `migrateInPlace = true` and must delete the fragments after. */
   def seedIndex(fps: DataFrame, indexDir: String, maxDf: Long = 20L,
@@ -150,10 +145,7 @@ object WinnowIngest {
     val spark = fps.sparkSession
     require(ManifestState.readManifest(byH(indexDir)).buckets.isEmpty,
       s"seedIndex requires an empty state at $indexDir — merge batches instead")
-    if (!migrateInPlace)
-      FsUtil.requireNotAppendLayout(spark, indexDir,
-        "seeding here would strand the fragments beside a fresh manifest; " +
-        "pass migrateInPlace = true and delete them after the seed")
+    if (!migrateInPlace) requireNoLegacyIndex(spark, indexDir)
     val s = fps.select(col("doc_id"), col("h")).distinct().localCheckpoint()
     val hot = s.groupBy(col("h")).agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDf).select(col("h")).localCheckpoint()
@@ -161,17 +153,11 @@ object WinnowIngest {
     val hRows = live.select(col("h"), col("doc_id"))
       .unionByName(hot.select(col("h"), lit(null).cast("long").as("doc_id")))
     ManifestState.patchBuckets(byH(indexDir), nBuckets, "h",
-      hRows.select(col("h")), hTemplate(spark))(_.unionByName(hRows))
+      hRows.select(col("h")), HSchema)(_.unionByName(hRows))
     ManifestState.patchBuckets(byDoc(indexDir), nBuckets, "doc_id",
-      live.select(col("doc_id")), docTemplate(spark))(
+      live.select(col("doc_id")), DocSchema)(
       _.unionByName(live.select(col("doc_id"), col("h"))))
     Seq(live, hot, s).foreach(graft.operators.Iterate.unpersistCheckpoint)
-  }
-
-  private def pairsTemplate(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, Long, Long, Double)]
-      .toDF("doc_a", "doc_b", "n_shared", "overlap_r")
   }
 
   /** Flagged pairs so far: (doc_a, doc_b, n_shared, overlap_r),
@@ -189,16 +175,8 @@ object WinnowIngest {
     * snapshot scan: file count bounded by nBuckets ×
     * (1 + keepGenerations) instead of one fragment per batch, and no
     * full-log groupBy per readout. */
-  def pairs(spark: SparkSession, pairsDir: String): DataFrame = {
-    val m = ManifestState.readManifest(pairsDir)
-    if (m.buckets.isEmpty) {
-      // loud upgrade guard: a pre-round-15 append-mode pair log must
-      // not silently read as empty
-      FsUtil.requireNotAppendLayout(spark, pairsDir,
-        "re-seed the bucketed pair state from the fragments first")
-      pairsTemplate(spark)
-    } else ManifestState.readSnapshot(spark, pairsDir, m)
-  }
+  def pairs(spark: SparkSession, pairsDir: String): DataFrame =
+    ManifestState.read(spark, pairsDir, PairsSchema)
 
   /** Patch pair emissions into the bucketed state's touched buckets
     * with pre-merged strongest-evidence content (max over the
@@ -209,7 +187,7 @@ object WinnowIngest {
   private[graft] def patchPairs(newPairs: DataFrame, pairsDir: String,
                                 nBuckets: Int): Unit = {
     ManifestState.patchBuckets(pairsDir, nBuckets, "doc_a",
-      newPairs.select(col("doc_a")), pairsTemplate(newPairs.sparkSession)) { current =>
+      newPairs.select(col("doc_a")), PairsSchema) { current =>
       current.unionByName(newPairs)
         .groupBy(col("doc_a"), col("doc_b"))
         .agg(max(struct(col("n_shared"), col("overlap_r"))).as("s"))
@@ -243,22 +221,17 @@ object WinnowIngest {
                  indexDir: String, pairsDir: String,
                  minShared: Long, maxDf: Long,
                  nBuckets: Int): Unit = synchronized {
-    ManifestState.requireBucketCount(pairsDir, nBuckets)
-    ManifestState.requireBucketCount(byH(indexDir), nBuckets)
-    ManifestState.requireBucketCount(byDoc(indexDir), nBuckets)
-    if (ManifestState.readManifest(pairsDir).buckets.isEmpty)
-      FsUtil.requireNotAppendLayout(spark, pairsDir,
-        "re-seed the bucketed pair state from the fragments first")
-    if (ManifestState.readManifest(byH(indexDir)).buckets.isEmpty)
-      FsUtil.requireNotAppendLayout(spark, indexDir,
-        "seed the bucketed fingerprint index from the fragments via seedIndex first")
+    // refuse before the first of the three commits: the pair log is
+    // only patched last, after bydoc and byh have committed
+    requireNoLegacyIndex(spark, indexDir)
+    ManifestState.requireNoLegacyLayout(spark, pairsDir, pairsDir)
     val hKeys = batchSel.select(col("h")).distinct().localCheckpoint()
 
     // Only the batch's fingerprints can change state (df is untouched
     // elsewhere) — read exactly their buckets, restricted to them.
     val buckets = ManifestState.bucketsOf(hKeys, "h", nBuckets)
     val stored = ManifestState.readBucketsOf(
-        spark, byH(indexDir), buckets, hTemplate(spark))
+        spark, byH(indexDir), nBuckets, buckets, HSchema)
       .join(hKeys, Seq("h"), "left_semi")
     val hotAlready = stored.filter(col("doc_id").isNull)
       .select(col("h")).distinct()
@@ -290,7 +263,7 @@ object WinnowIngest {
     //    still live in byh, re-deriving the same `seen` set and
     //    re-committing identical bydoc content (set semantics).
     ManifestState.patchBuckets(byDoc(indexDir), nBuckets, "doc_id",
-      seen.select(col("doc_id")), docTemplate(spark)) { current =>
+      seen.select(col("doc_id")), DocSchema) { current =>
       current.join(hKeys, Seq("h"), "left_anti")
         .unionByName(live.select(col("doc_id"), col("h")))
     }
@@ -300,7 +273,7 @@ object WinnowIngest {
     val hotMarkers = hotAlready.unionByName(newlyHot).distinct()
       .select(col("h"), lit(null).cast("long").as("doc_id"))
     ManifestState.patchBuckets(byH(indexDir), nBuckets, "h",
-      hKeys, hTemplate(spark)) { current =>
+      hKeys, HSchema) { current =>
       current.join(hKeys, Seq("h"), "left_anti")
         .unionByName(live.select(col("h"), col("doc_id")))
         .unionByName(hotMarkers)
@@ -331,7 +304,7 @@ object WinnowIngest {
       .distinct()
     val docBuckets = ManifestState.bucketsOf(pairDocs, "doc_id", nBuckets)
     val selN = ManifestState.readBucketsOf(
-        spark, byDoc(indexDir), docBuckets, docTemplate(spark))
+        spark, byDoc(indexDir), nBuckets, docBuckets, DocSchema)
       .join(pairDocs, Seq("doc_id"), "left_semi")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("sel_n"))
     val newPairs = rawPairs

@@ -6,6 +6,7 @@ import scala.util.Random
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.streaming.JoinView
 import graft.streaming.JoinView.Side
@@ -17,8 +18,10 @@ import graft.streaming.JoinView.Side
   */
 class JoinViewSpec extends SparkSpec {
 
-  private val left = Side("uid", "dept")
-  private val right = Side("did", "dept")
+  private val left = Side("uid", "dept", StructType.fromDDL("uid BIGINT NOT NULL, " +
+    "dept STRING, name STRING, lsn BIGINT NOT NULL, ts_ms BIGINT NOT NULL, event_type STRING"))
+  private val right = Side("did", "dept", StructType.fromDDL("did STRING, " +
+    "dept STRING, dname STRING, lsn BIGINT NOT NULL, ts_ms BIGINT NOT NULL, event_type STRING"))
 
   // left side: employees (uid, dept, name); right side: one row per
   // dept (did == dept value domain), payload dname
@@ -113,7 +116,7 @@ class JoinViewSpec extends SparkSpec {
       JoinView.applyBatchBucketed(spark, empDf(lRows), dptDf(rRows),
         bRoot, left, right, nBuckets = 16)
 
-      val got = JoinView.readViewBucketed(spark, bRoot)
+      val got = JoinView.readViewBucketed(spark, bRoot, left, right)
         .collect().map(_.toString).sorted.toSeq
       val naive = JoinView.naiveViewBucketed(spark, bRoot, left, right)
         .collect().map(_.toString).sorted.toSeq
@@ -171,7 +174,7 @@ class JoinViewSpec extends SparkSpec {
       // replay the SAME batch in full
       JoinView.applyBatchBucketed(spark, empDf(lRows), dptDf(rRows),
         root, left, right, nBuckets = 16)
-      val got = JoinView.readViewBucketed(spark, root)
+      val got = JoinView.readViewBucketed(spark, root, left, right)
         .collect().map(_.toString).sorted.toSeq
       val naive = JoinView.naiveViewBucketed(spark, root, left, right)
         .collect().map(_.toString).sorted.toSeq
@@ -209,7 +212,7 @@ class JoinViewSpec extends SparkSpec {
     } finally JoinView.onPatchCommitted = () => ()
 
     // and the view is still exactly the naive re-join
-    val got = JoinView.readViewBucketed(spark, root)
+    val got = JoinView.readViewBucketed(spark, root, left, right)
       .collect().map(_.toString).sorted.toSeq
     val naive = JoinView.naiveViewBucketed(spark, root, left, right)
       .collect().map(_.toString).sorted.toSeq

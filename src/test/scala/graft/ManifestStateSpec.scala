@@ -198,7 +198,7 @@ class ManifestStateSpec extends SparkSpec {
     val keys = Seq("a", "b").toDF("id")
     val template = changes(Seq(up("a", 1))).limit(0)
     val e = intercept[org.apache.spark.sql.AnalysisException] {
-      ManifestState.patchBuckets(root, 4, "id", keys, template) { current =>
+      ManifestState.patchBuckets(root, 4, "id", keys, template.schema) { current =>
         calls += 1
         current.select(col("no_such_column")) // deterministic caller bug
       }
@@ -356,6 +356,9 @@ class ManifestStateSpec extends SparkSpec {
     assert(rows(ManifestState.read(spark, s"$root/new")) == rows(old))
     // a committed manifest state and a fresh root never trip the guard
     ManifestState.mergeBatch(changes(Seq(up("c", 3))), s"$root/new", 4)
-    assert(ManifestState.read(spark, s"$root/fresh").columns.isEmpty)
+    // a fresh root reads as zero rows with the change schema
+    val fresh = ManifestState.read(spark, s"$root/fresh")
+    assert(fresh.isEmpty &&
+      fresh.dtypes.toSeq == ManifestState.read(spark, s"$root/new").dtypes.toSeq)
   }
 }

@@ -213,4 +213,34 @@ class OperatorsSpec extends SparkSpec {
     assert(run(Seq(1), maxHops = 2) == Map(1 -> 0L, 2 -> 1L, 3 -> 2L))
     assert(run(Seq(6)) == Map(6 -> 0L)) // sink node: no out-edges
   }
+
+  test("ShortestPaths driver-local BFS equals the distributed loop; unsafe node types fall back") {
+    import spark.implicits._
+    import org.apache.spark.sql.types._
+    import graft.operators.ShortestPaths.{driverEqualityMatchesSql, hops}
+    // 1→2→3→4→2 (cycle back), 5→6 in a separate component; the probe
+    // threshold covers every edge, so collectThreshold takes the local path
+    val edges = Seq((1, 2), (2, 3), (3, 4), (4, 2), (5, 6)).toDF("s", "d")
+    for ((src, maxHops) <- Seq((Seq(1), 30), (Seq(1, 5), 30), (Seq(1), 2), (Seq(7), 30))) {
+      def run(threshold: Int) = hops(edges, src.toDF("n"), maxHops, threshold)
+        .as[(Int, Long)].collect().toMap
+      assert(run(100) == run(0), s"sources $src, maxHops $maxHops")
+    }
+
+    Seq(IntegerType, LongType, StringType, DateType, TimestampType)
+      .foreach(t => assert(driverEqualityMatchesSql(t), t))
+    Seq(BinaryType, DoubleType, FloatType)
+      .foreach(t => assert(!driverEqualityMatchesSql(t), t))
+    // binary ids compare by array reference on the driver: a local BFS
+    // would find nothing past the source
+    val b = (i: Int) => Array(i.toByte)
+    val binDist = hops(Seq((b(1), b(2)), (b(2), b(3))).toDF("s", "d"),
+        Seq(b(1)).toDF("n"), collectThreshold = 100)
+      .as[(Array[Byte], Long)].collect().map { case (n, d) => n.toSeq -> d }.toMap
+    assert(binDist == Map(Seq[Byte](1) -> 0L, Seq[Byte](2) -> 1L, Seq[Byte](3) -> 2L))
+    val dblEdges = Seq((0.0, 1.0), (1.0, 2.0)).toDF("s", "d")
+    def dbl(threshold: Int) = hops(dblEdges, Seq(-0.0).toDF("n"), collectThreshold = threshold)
+      .as[(Double, Long)].collect().map(_._2).sorted.toSeq
+    assert(dbl(100) == dbl(0) && dbl(0) == Seq(0L, 1L, 2L))
+  }
 }

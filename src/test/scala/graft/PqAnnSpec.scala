@@ -21,6 +21,16 @@ class PqAnnSpec extends SparkSpec {
       .select($"vec_id", VF.asDouble($"embedding").as("v"))
   }
 
+  test("a repeated vec_id among the codebook seeds is refused by name") {
+    import spark.implicits._
+    val e = Seq((1L, Array(1.0, 2.0)), (1L, Array(3.0, 4.0)), (2L, Array(5.0, 6.0)))
+      .toDF("vec_id", "v")
+    val err = intercept[IllegalArgumentException] {
+      PqAnn.trainCodebooks(e, m = 1, subDim = 2, k = 3, iters = 1)
+    }
+    assert(err.getMessage.contains("vec_id 1"), err.getMessage)
+  }
+
   test("PQ codes: m codes per vector, all within the codebook range") {
     import spark.implicits._
     val e = corpus
