@@ -4,16 +4,18 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumException, FileAlreadyExistsException, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumException, FileAlreadyExistsException, FileSystem, LocalFileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.LocalCheckpointFileManager
+import graft.streaming.{ForkFreeLocalFileSystem, LocalCheckpointFileManager}
 
 /** The atomic-write contract streaming checkpoints rely on, held by
   * [[LocalCheckpointFileManager]] on the local filesystem: no silent
-  * overwrite, all-or-nothing visibility, and a checksum that catches a
-  * corrupted file on read. */
+  * overwrite, all-or-nothing visibility, a checksum that catches a
+  * corrupted file on read, and the permissions Hadoop's own
+  * `LocalFileSystem` would give each file and directory. */
 class CheckpointFileManagerSpec extends AnyFunSuite {
 
   private val conf = new Configuration()
@@ -36,6 +38,12 @@ class CheckpointFileManagerSpec extends AnyFunSuite {
 
   private def names(dir: Path): Set[String] =
     new java.io.File(dir.toUri).list().toSet
+
+  /** Permission, setuid/setgid and sticky bits of `p`. */
+  private def mode(p: java.nio.file.Path): Int =
+    Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xFFF
+
+  private def octal(s: String): Int = Integer.parseInt(s, 8)
 
   test("createAtomic without overwrite refuses an existing file") {
     val (m, dir) = fresh()
@@ -107,6 +115,43 @@ class CheckpointFileManagerSpec extends AnyFunSuite {
     noFc.set("fs.graftnofc.impl", classOf[org.apache.hadoop.fs.RawLocalFileSystem].getName)
     assert(LocalCheckpointFileManager.select(new Path("graftnofc:///cp"), noFc)
       .isInstanceOf[FileSystemBasedCheckpointFileManager])
+  }
+
+  for ((umask, fileMode, dirMode) <- Seq(("022", "644", "755"), ("077", "600", "700")))
+    test(s"under umask $umask files, .crc sidecars and new directories get stock LocalFileSystem's permissions") {
+      val masked = new Configuration(conf)
+      masked.set("fs.permissions.umask-mode", umask)
+      val stock = new Configuration(masked)
+      stock.setClass("fs.file.impl", classOf[LocalFileSystem], classOf[FileSystem])
+      stock.setBoolean("fs.file.impl.disable.cache", true)
+      def layout(m: CheckpointFileManager, dir: Path): Map[String, Int] = {
+        write(m, new Path(dir, "0"), "body", overwrite = false)
+        m.mkdirs(new Path(dir, "sub/deeper"))
+        // a new directory under a setgid one inherits the bit, which
+        // Hadoop's forked chmod keeps
+        Files.createDirectory(Paths.get(new Path(dir, "shared").toUri))
+        Files.setAttribute(Paths.get(new Path(dir, "shared").toUri), "unix:mode", Integer.valueOf(octal("2775")))
+        m.mkdirs(new Path(dir, "shared/state"))
+        Seq("0", ".0.crc", "sub", "sub/deeper", "shared/state")
+          .map(n => n -> mode(Paths.get(new Path(dir, n).toUri))).toMap
+      }
+      val ours = new Path(Files.createTempDirectory("cfm").toUri)
+      val theirs = new Path(Files.createTempDirectory("cfm").toUri)
+      val got = layout(new LocalCheckpointFileManager(ours, masked), ours)
+      assert(got == layout(new FileSystemBasedCheckpointFileManager(theirs, stock), theirs))
+      assert(got("0") == octal(fileMode) && got(".0.crc") == octal(fileMode) && got("sub/deeper") == octal(dirMode))
+      assert(got("shared/state") == (octal("2000") | octal(dirMode)))
+    }
+
+  test("a sticky-bit setPermission still takes Hadoop's own path") {
+    val fs = new ForkFreeLocalFileSystem
+    fs.initialize(java.net.URI.create("file:///"), conf)
+    val dir = Files.createTempDirectory("cfm")
+    fs.setPermission(new Path(dir.toUri), new FsPermission(octal("1777").toShort))
+    // java.nio cannot set the sticky bit: only the forked chmod sets it
+    assert(mode(dir) == octal("1777"))
+    fs.setPermission(new Path(dir.toUri), new FsPermission(octal("750").toShort))
+    assert(mode(dir) == octal("750"))
   }
 }
 
