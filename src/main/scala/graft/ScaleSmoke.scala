@@ -569,10 +569,10 @@ object ScaleSmoke {
       merges.size.toLong + vocab.count()
     }
     // Incremental streaming merges against a factor-x state. The
-    // snapshot-diff merge's COMPUTE is touched-slice-sized, but this
-    // plain-parquet spelling still rewrites O(state) at the end —
-    // exactly IncrementalMergeBench's plain-vs-bucketed trade; the
-    // bucketed layout is the 100 TB path. The winnow ingest probe IS
+    // snapshot-diff merge reads and rewrites only the buckets its delta
+    // touches (the bucketed-vs-whole-state trade is measured in
+    // docs/probes/incmerge_inplace_vs_manifest.txt and
+    // plain_vs_manifest_r8.txt). The winnow ingest probe IS
     // batch-proportional: history never self-joins.
     // a filtered run must also skip these sections' heavy SETUP
     // (state builds outside the timers), not just their timed bodies.
@@ -583,25 +583,17 @@ object ScaleSmoke {
       if (only.isEmpty || tags.exists(t => only.exists(t.contains))) body
     val smokeRoot: String =
       java.nio.file.Files.createTempDirectory("scalesmoke").toString
-    section(s"snapshot_diff_delta_vs_${factor}x_state",
-            s"snapshot_diff_bucketed_delta_vs_${factor}x_state") {
-      val st = s"$smokeRoot/sd_state"
-      val df0 = s"$smokeRoot/sd_diff"
+    section(s"snapshot_diff_bucketed_delta_vs_${factor}x_state") {
       val evAll = replicate(graft.sources.Tables.events(spark, dir), Seq("event_id", "user_id"))
-      graft.streaming.SnapshotDiffView.mergeBatch(evAll, st, df0, 0L)
       val delta = graft.sources.Tables.events(spark, dir)
         .limit(1000).withColumn("user_id", $"user_id" + 50000000L)
-      timeOnce(s"snapshot_diff_delta_vs_${factor}x_state") {
-        graft.streaming.SnapshotDiffView.mergeBatch(delta, st, df0, 1L)
-        spark.read.parquet(s"$df0/batch_seq=1").count()
-      }
-      // the bucketed layout: same delta, but only its touched buckets
-      // rewrite — this is the number that must stay flat in state size
+      // only the delta's touched buckets rewrite — this is the number
+      // that must stay flat in state size
       val stB = s"$smokeRoot/sdb_state"
-      graft.streaming.SnapshotDiffView.mergeBatchBucketed(
+      graft.streaming.SnapshotDiffView.mergeBatch(
         evAll, stB, s"$smokeRoot/sdb_diff", 0L, nBuckets = 256)
       timeOnce(s"snapshot_diff_bucketed_delta_vs_${factor}x_state") {
-        graft.streaming.SnapshotDiffView.mergeBatchBucketed(
+        graft.streaming.SnapshotDiffView.mergeBatch(
           delta, stB, s"$smokeRoot/sdb_diff", 1L, nBuckets = 256)
         spark.read.parquet(s"$smokeRoot/sdb_diff/batch_seq=1").count()
       }

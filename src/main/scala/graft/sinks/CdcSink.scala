@@ -16,9 +16,9 @@ import graft.streaming.{CdcStream, ManifestState}
   * a crash between merge and checkpoint commit replays the batch, and
   * the state must not change on the second application.
   *
-  * Local implementations store state as parquet: a whole snapshot
-  * ([[ParquetSnapshotSink]]) or manifest-committed hash buckets
-  * ([[BucketedParquetSink]]); the production implementation point is
+  * The local implementation stores state as manifest-committed parquet
+  * hash buckets ([[BucketedParquetSink]]; one bucket is one whole-state
+  * file set); the production implementation point is
   * [[MergeIntoSink]] — MERGE INTO on a transactional v2 table
   * (Delta/Iceberg-style), same latest-wins plan, with the table format
   * supplying the file pruning that [[BucketedParquetSink]]
@@ -31,15 +31,6 @@ trait CdcSink extends Serializable {
   /** Current state: live rows plus retained tombstones, in the
     * decoded-changelog schema. */
   def state(spark: SparkSession): DataFrame
-}
-
-/** Whole-snapshot parquet rewrite per batch — the simple local sink
-  * (O(state) per merge; fine for tests and small views). */
-final class ParquetSnapshotSink(stateDir: String) extends CdcSink {
-  override def merge(batch: DataFrame): Unit =
-    CdcStream.mergeBatch(batch, stateDir)
-  override def state(spark: SparkSession): DataFrame =
-    spark.read.parquet(stateDir)
 }
 
 /** Hash-bucketed parquet state committed through [[ManifestState]]: a
@@ -57,10 +48,10 @@ final class BucketedParquetSink(stateDir: String, nBuckets: Int) extends CdcSink
 /** MERGE INTO on a transactional catalog table — the production sink.
   *
   * The batch first collapses to its latest change per id (same
-  * [[CdcMerge.latestWins]] the snapshot sinks use, minus tombstone
+  * [[CdcMerge.latestWins]] the bucketed sink uses, minus tombstone
   * removal), then one MERGE upserts rows whose (lsn, ts_ms) beats the
   * stored version. Tombstones are stored as rows (`event_type`
-  * 'DELETE'), exactly like the parquet sinks, so the resurrection
+  * 'DELETE'), exactly like the parquet sink, so the resurrection
   * guard survives redelivery; replaying a batch re-applies equal
   * versions idempotently (`>=` on the tie so the same row rewrites
   * itself, not a duplicate).
@@ -69,7 +60,7 @@ final class BucketedParquetSink(stateDir: String, nBuckets: Int) extends CdcSink
   * (Delta, Iceberg, any v2 source with row-level ops). This container
   * ships none, so the class is exercised structurally: [[mergeSql]]
   * is pure and spec-asserted, and CdcDemo/e2e runs use the parquet
-  * sinks through the same [[CdcSink]] seam.
+  * sink through the same [[CdcSink]] seam.
   */
 final class MergeIntoSink(table: String) extends CdcSink {
 

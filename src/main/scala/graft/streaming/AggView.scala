@@ -1,10 +1,9 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Incrementally-maintained aggregate view over a CDC stream, driven
   * by the envelope's before/after images.
@@ -27,14 +26,21 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * compensations so the late insert still nets correctly — the view
   * ([[readView]]) exposes only n > 0. The delta aggregation is a plain
   * keyed sum — map-side combined, one shuffle per batch, no per-key
-  * state operator needed.
+  * state operator needed. State is a one-bucket [[ManifestState]] root
+  * keyed by group, which each batch rewrites whole.
+  *
+  * Summing deltas is NOT idempotent, so a micro-batch replayed after a
+  * crash between the state commit and Spark's checkpoint commit would
+  * count twice; the batch id rides into the commit as the manifest's
+  * replay fence ([[ManifestState.patchBuckets]]' `batchId`), which
+  * skips the replay.
   *
   * REQUIRES before-images on updates/deletes (REPLICA IDENTITY FULL):
   * an update arriving with `before=null` is indistinguishable from an
   * insert and double-counts its group (verified failure mode — n=2
   * for a single twice-updated row). Sources without full replica
-  * identity must use the latest-wins snapshot + full recompute
-  * instead ([[CdcStream.mergeBatch]]).
+  * identity must use the latest-wins state + full recompute instead
+  * ([[CdcStream.runFileStream]]).
   */
 object AggView {
 
@@ -57,29 +63,31 @@ object AggView {
       .select(col("d.g").as("username"), col("d.dc"), col("d.dv"))
   }
 
-  /** Merge one micro-batch of deltas into the aggregate state at
-    * `stateDir` (parquet snapshot; same swap discipline as
-    * [[CdcStream.mergeBatch]]). */
-  def mergeDeltas(batchDeltas: DataFrame, stateDir: String): Unit = synchronized {
-    val spark = batchDeltas.sparkSession
-    val statePath = Paths.get(stateDir)
+  private val StateSchema =
+    StructType.fromDDL("username STRING, n BIGINT, total_chars BIGINT")
+
+  /** One bucket, as at every former whole-snapshot state. */
+  private val Buckets = 1
+
+  /** Merge micro-batch `batchId`'s deltas into the aggregate state at
+    * `stateDir`: the touched buckets become current ∪ batch aggregate,
+    * re-summed per group. */
+  def mergeDeltas(batchDeltas: DataFrame, stateDir: String, batchId: Long): Unit = {
     val agg = batchDeltas.groupBy(col("username"))
       .agg(sum(col("dc")).as("n"), sum(col("dv")).as("total_chars"))
-    val merged =
-      if (CdcStream.statePresent(statePath))
-        spark.read.parquet(stateDir).unionByName(agg)
-          .groupBy(col("username"))
-          .agg(sum(col("n")).as("n"), sum(col("total_chars")).as("total_chars"))
-      else agg
-    // Keep every group with a non-zero running count. A negative count
-    // is a delete replayed/delivered before its insert: dropping it
-    // here would lose the compensating -1 and double-count the later
-    // insert. Negative groups stay in state until the insert nets them
-    // to zero (dropped) or positive (real); readView hides them.
-    val newState = merged.filter(col("n") =!= 0)
-    val tmp = stateDir + ".tmp"
-    newState.write.mode("overwrite").parquet(tmp)
-    CdcStream.swapDirs(Paths.get(tmp), statePath)
+      .cache() // bucket list + merge
+    try ManifestState.patchBuckets(stateDir, Buckets, "username",
+        agg.select(col("username")), StateSchema, batchId = Some(batchId)) { current =>
+      // Keep every group with a non-zero running count. A negative count
+      // is a delete replayed/delivered before its insert: dropping it
+      // here would lose the compensating -1 and double-count the later
+      // insert. Negative groups stay in state until the insert nets them
+      // to zero (dropped) or positive (real); readView hides them.
+      current.unionByName(agg)
+        .groupBy(col("username"))
+        .agg(sum(col("n")).as("n"), sum(col("total_chars")).as("total_chars"))
+        .filter(col("n") =!= 0)
+    } finally agg.unpersist()
   }
 
   /** Run the maintained view over an envelope file stream. */
@@ -91,8 +99,8 @@ object AggView {
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeDeltas(deltas(batch), stateDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        mergeDeltas(deltas(batch), stateDir, batchId)
       }
       .start()
 
@@ -100,7 +108,5 @@ object AggView {
     * compensation groups (n < 0, delete seen before its insert) are
     * state, not results. */
   def readView(spark: SparkSession, stateDir: String): DataFrame =
-    if (CdcStream.statePresent(Paths.get(stateDir)))
-      spark.read.parquet(stateDir).filter(col("n") > 0)
-    else spark.emptyDataFrame
+    ManifestState.read(spark, stateDir, StateSchema).filter(col("n") > 0)
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.Trigger
   * materialized view, print it.
   *
   * Usage: runMain graft.streaming.CdcDemo <inputDir> <workDir> [mode]
-  *   mode = snapshot (default): foreachBatch merge into parquet state
+  *   mode = snapshot (default): foreachBatch merge into manifest-committed parquet state
   *   mode = lowlatency: flatMapGroupsWithState per-key update stream
   *   mode = tws: transformWithState (Spark 4 StatefulProcessor) update stream
   *   mode = aggview: delta-maintained aggregate view from before/after images
@@ -49,7 +49,7 @@ object CdcDemo {
         println(s"agg_rows=${view.count()}")
       case "snapshot" =>
         val q = CdcStream.runFileStream(
-          spark, inputDir, s"$workDir/checkpoint", s"$workDir/state")
+          spark, inputDir, s"$workDir/checkpoint", s"$workDir/state", nBuckets = 1)
         q.awaitTermination()
         // reference presentation order: create_time DESC (R5)
         val view = CdcStream.presentView(spark, s"$workDir/state")

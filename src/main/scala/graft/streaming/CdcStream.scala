@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
@@ -28,10 +26,11 @@ import graft.operators.CdcMerge
   *    dead-letter count instead of silently dropping).
   *
   * Scale posture: the per-batch merge is a keyed window + union —
-  * shuffle on the key only; state lives in a parquet snapshot
-  * (production would use a transactional table format, same plan
-  * shape); watermarked variants bound state where the reference kept
-  * an unbounded client-side Map (`index.html:88`).
+  * shuffle on the key only; state lives in hash buckets committed
+  * through [[ManifestState]], so a batch rewrites only the buckets its
+  * keys touch (production would use a transactional table format,
+  * same plan shape); watermarked variants bound state where the
+  * reference kept an unbounded client-side Map (`index.html:88`).
   */
 object CdcStream {
 
@@ -123,10 +122,10 @@ object CdcStream {
   /** The source-selection seam: ANY decoded changelog stream (file,
     * kafka, memory — anything that went through [[decodeFile]] or
     * [[decodeKafka]]) → checkpointed `foreachBatch` merge through a
-    * [[graft.sinks.CdcSink]]. `runFileStream` / `runFileStreamBucketed`
-    * / `runKafkaStream` are one reader choice each over this single
-    * pipeline, so source and sink swap independently of the decode +
-    * merge semantics the specs pin down.
+    * [[graft.sinks.CdcSink]]. `runFileStream` / `runKafkaStream` are
+    * one reader choice each over this single pipeline, so source and
+    * sink swap independently of the decode + merge semantics the specs
+    * pin down.
     */
   def runDecodedStream(decoded: DataFrame, checkpointDir: String,
                        sink: graft.sinks.CdcSink,
@@ -162,19 +161,21 @@ object CdcStream {
 
   /** Run the end-to-end file-source stream: envelope JSON lines under
     * `inputDir` → decoded changelog → per-micro-batch idempotent merge
-    * into a parquet state snapshot at `stateDir`.
+    * into the `nBuckets`-bucket state at `stateDir`
+    * ([[graft.sinks.BucketedParquetSink]]).
     *
-    * The merge unions the incoming batch with the existing state
-    * (which retains tombstones so redelivered older upserts cannot
+    * The merge unions the incoming batch with the touched buckets
+    * (which retain tombstones so redelivered older upserts cannot
     * resurrect deleted keys — at-least-once safe) and re-runs
     * latest-wins. Idempotent: replaying a batch yields the same state.
     */
   def runFileStream(spark: SparkSession, inputDir: String, checkpointDir: String,
-                    stateDir: String, trigger: Trigger = Trigger.AvailableNow(),
+                    stateDir: String, nBuckets: Int,
+                    trigger: Trigger = Trigger.AvailableNow(),
                     deadLetterDir: Option[String] = None): StreamingQuery =
     runDecodedStream(
       decodeFile(spark.readStream.schema(fileRecordSchema).json(inputDir)),
-      checkpointDir, new graft.sinks.ParquetSnapshotSink(stateDir),
+      checkpointDir, new graft.sinks.BucketedParquetSink(stateDir, nBuckets),
       trigger, deadLetterDir)
 
   /** A decoded change row (typed twin of [[classify]]'s output). */
@@ -192,8 +193,8 @@ object CdcStream {
 
   /** Low-latency latest-wins view as a stateful operator:
     * `flatMapGroupsWithState` keyed by id emits one update per changed
-    * key per micro-batch — the push-based twin of [[mergeBatch]]'s
-    * snapshot merge (SURVEY.md §2.B Streaming: the reference's
+    * key per micro-batch — the push-based twin of the bucketed state
+    * merge (SURVEY.md §2.B Streaming: the reference's
     * WebSocket broadcast is per-event push, this is its Spark analog).
     * State is one row per live key, evicted only by tombstone
     * compaction upstream; on a cluster this runs on the RocksDB state
@@ -308,7 +309,7 @@ object CdcStream {
       "failOnDataLoss" -> failOnDataLoss.toString)
 
   def runKafkaStream(spark: SparkSession, bootstrapServers: String, topic: String,
-                     checkpointDir: String, stateDir: String,
+                     checkpointDir: String, stateDir: String, nBuckets: Int,
                      trigger: Trigger = Trigger.ProcessingTime(100),
                      deadLetterDir: Option[String] = None,
                      failOnDataLoss: Boolean = true): StreamingQuery = {
@@ -318,7 +319,7 @@ object CdcStream {
       .load()
       .selectExpr("CAST(key AS STRING) AS key", "CAST(value AS STRING) AS value")
     runDecodedStream(decodeKafka(raw), checkpointDir,
-      new graft.sinks.ParquetSnapshotSink(stateDir), trigger, deadLetterDir)
+      new graft.sinks.BucketedParquetSink(stateDir, nBuckets), trigger, deadLetterDir)
   }
 
   /** Bootstrap the state from a batch read of the base table — the
@@ -329,17 +330,18 @@ object CdcStream {
     * touches with lsn > fenceLsn, and latest-wins makes a replayed
     * pre-fence change a no-op. `table` must carry the base-table
     * columns (`id`, `create_time`, `update_time`, `message`,
-    * `username`) with epoch-millis times.
+    * `username`) with epoch-millis times; `nBuckets` is the state's
+    * bucket count, which every later merge into `stateDir` must pass.
     */
-  def bootstrapFromTable(table: DataFrame, stateDir: String,
+  def bootstrapFromTable(table: DataFrame, stateDir: String, nBuckets: Int,
                          fenceLsn: Long = 0L): Unit =
-    mergeBatch(
+    ManifestState.mergeBatch(
       table.select(
         lit(Upsert).as("event_type"),
         col("id"), col("create_time"), col("update_time"),
         col("message"), col("username"),
         lit(fenceLsn).as("lsn"), lit(fenceLsn).as("ts_ms")),
-      stateDir)
+      stateDir, nBuckets)
 
   /** Live-database snapshot bootstrap: ONE `spark.read.jdbc` of the
     * base table into [[bootstrapFromTable]]'s lsn fence — the
@@ -362,13 +364,13 @@ object CdcStream {
     * differs only in the JDBC url/driver.
     */
   def bootstrapFromJdbc(spark: SparkSession, url: String, table: String,
-                        stateDir: String, fenceLsn: Long = 0L,
+                        stateDir: String, nBuckets: Int, fenceLsn: Long = 0L,
                         props: java.util.Properties = new java.util.Properties,
                         predicates: Array[String] = Array.empty): Unit = {
     val raw =
       if (predicates.isEmpty) spark.read.jdbc(url, table, props)
       else spark.read.jdbc(url, table, predicates, props)
-    bootstrapFromTable(normalizeJdbcSnapshot(raw), stateDir, fenceLsn)
+    bootstrapFromTable(normalizeJdbcSnapshot(raw), stateDir, nBuckets, fenceLsn)
   }
 
   /** Normalize a JDBC snapshot of the base table to the envelope's
@@ -393,41 +395,6 @@ object CdcStream {
       unix_millis(col("update_time").cast("timestamp")).as("update_time"),
       col("message"), col("username"))
 
-  /** Union-and-rewrite merge of one micro-batch into the parquet state
-    * snapshot. Test/local sink; a production deployment swaps this for
-    * MERGE INTO on a transactional table — same latest-wins plan. */
-  def mergeBatch(batch: DataFrame, stateDir: String): Unit = synchronized {
-    val spark = batch.sparkSession
-    val statePath = Paths.get(stateDir)
-    val changes = batch.filter(col("event_type") =!= Malformed)
-    val unioned =
-      if (statePresent(statePath))
-        spark.read.parquet(stateDir).unionByName(changes)
-      else changes
-    // Latest change per id — tombstones retained in state.
-    val newState = CdcMerge.latestWins(
-      unioned, Seq("id"),
-      Seq(col("lsn").desc_nulls_last, col("ts_ms").desc_nulls_last))
-    // The window in latestWins leaves the frame hash-partitioned by id;
-    // write those partitions in parallel (coalesce(1) would serialize
-    // the state rewrite and cap merge throughput).
-    val tmp = stateDir + ".tmp"
-    newState.write.mode("overwrite").parquet(tmp)
-    replace(Paths.get(tmp), statePath)
-  }
-
-  /** File-source stream variant over the bucketed manifest state
-    * ([[graft.sinks.BucketedParquetSink]]): a micro-batch rewrites only
-    * the buckets its keys touch — O(delta + touched buckets), not
-    * O(state). */
-  def runFileStreamBucketed(spark: SparkSession, inputDir: String, checkpointDir: String,
-                            stateDir: String, nBuckets: Int,
-                            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    runDecodedStream(
-      decodeFile(spark.readStream.schema(fileRecordSchema).json(inputDir)),
-      checkpointDir, new graft.sinks.BucketedParquetSink(stateDir, nBuckets),
-      trigger)
-
   /** The view in the reference's presentation order: newest
     * `create_time` first (`static/index.html:99-100`), id as the
     * deterministic tiebreak Spark needs where the browser relied on
@@ -437,125 +404,13 @@ object CdcStream {
       .orderBy(col("create_time").desc, col("id"))
 
   /** Read the materialized view (state minus tombstones) with proper
-    * timestamp columns, from either state layout: a root holding a
-    * `MANIFEST` is bucketed state and reads through [[ManifestState]]
-    * (exactly the committed versions), anything else is a whole
-    * snapshot. An empty stream produces no state — that's an empty
-    * view, not an error. */
-  def readView(spark: SparkSession, stateDir: String): DataFrame = {
-    val root = Paths.get(stateDir)
-    val state =
-      if (Files.exists(root.resolve("MANIFEST"))) ManifestState.read(spark, stateDir)
-      else if (statePresent(root)) spark.read.parquet(stateDir)
-      else ManifestState.empty(spark, changeSchema)
-    state
-      .filter(col("event_type") === Upsert)
+    * timestamp columns, from exactly the committed state
+    * ([[ManifestState.read]]). An empty stream produces no state —
+    * that's an empty view, not an error. */
+  def readView(spark: SparkSession, stateDir: String): DataFrame =
+    ManifestState.readView(spark, stateDir)
       .select(col("id"),
               timestamp_millis(col("create_time")).as("create_time"),
               timestamp_millis(col("update_time")).as("update_time"),
               col("message"), col("username"))
-  }
-
-  /** Crash-safe directory swap shared by the whole-snapshot state
-    * writers (bucketed state commits through [[ManifestState]]).
-    *
-    * The naive delete-then-move loses the ENTIRE state if the process
-    * dies between the two calls (the reader then sees "no state" and
-    * a replayed merge rebuilds from empty — silent data loss). This
-    * spelling never has a moment with zero complete copies on disk:
-    * back the live dir up by ATOMIC rename, move the new dir in by
-    * ATOMIC rename, then drop the backup. A crash between the two
-    * renames leaves `.dst.old` complete; [[statePresent]]/[[healDir]]
-    * restore it at the next read or swap. Readers must go through
-    * [[statePresent]] instead of a bare `Files.exists`.
-    *
-    * Concurrency contract: ONE writer process, many readers. The
-    * merge entry points are `synchronized`, which serializes writers
-    * within this JVM; nothing fences a second process, so two JVMs
-    * merging into the same state root is unsupported. Readers are
-    * safe concurrently with the single writer: [[healDir]] only ever
-    * restores a backup when the live dir is missing, and [[replace]]
-    * retries if a racing reader heals between its two renames.
-    */
-  private[streaming] def swapDirs(src: Path, dst: Path): Unit = replace(src, dst)
-
-  /** Heal `p` from a crash between replace()'s two renames: if the
-    * live dir is missing but its `.*.old` backup exists, restore it.
-    * When the live dir exists the backup is left alone — the next
-    * [[replace]] of `p` clears it, and its dot prefix keeps every
-    * Spark reader from ever seeing it (deleting it here would race the
-    * writer's backup→install window and could drop the only complete
-    * copy). */
-  private[streaming] def healDir(p: Path): Unit = {
-    val old = backupOf(p)
-    val legacy = legacyBackupOf(p)
-    if (!Files.exists(p) && (Files.exists(old) || Files.exists(legacy)))
-      // prefer the current naming; a legacy backup is only the
-      // restore source when it is the ONLY complete copy
-      try Files.move(if (Files.exists(old)) old else legacy, p,
-        StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        // Two readers (or a reader and the writer) can both pass the
-        // exists-checks; whoever moves second finds the backup gone
-        // and/or the live dir restored. Either way the state this
-        // heal wanted (live dir present) now holds — losing the race
-        // is success, not an error to surface out of a read path.
-        case _: java.nio.file.NoSuchFileException |
-             _: java.nio.file.FileAlreadyExistsException |
-             _: java.nio.file.DirectoryNotEmptyException => ()
-      }
-    // live dir present + stranded legacy backup: nothing ever clears
-    // it (replace() only clears the dot-prefixed name) and a reader of
-    // the parent dir would see it — delete it here. Cannot race a
-    // writer: current code never creates the legacy name.
-    if (Files.exists(p) && Files.exists(legacy))
-      try FsUtil.deleteRecursively(legacy)
-      catch { case _: java.io.IOException => () } // concurrent healer won
-  }
-
-  /** The state-read gate: heal first, then report existence. */
-  private[streaming] def statePresent(p: Path): Boolean = {
-    healDir(p)
-    Files.exists(p)
-  }
-
-  /** Backup path for `p`. The leading dot is load-bearing: Spark's
-    * file index (`HadoopFSUtils.shouldFilterOutPathName`) skips
-    * dot-prefixed paths unconditionally, so a backup stranded by a
-    * crash is invisible to every reader of the parent dir. */
-  private[streaming] def backupOf(p: Path): Path =
-    p.resolveSibling("." + p.getFileName.toString + ".old")
-
-  /** The PRE-dot-prefix backup name (`<name>.old`) earlier builds
-    * wrote. Never created anymore, but a crash under the old naming
-    * can have stranded one. [[healDir]] still honors it: restore when
-    * the live dir is missing, delete when the live dir exists.
-    * Deleting on the read path is safe precisely BECAUSE current code
-    * never writes this name — it cannot be a racing writer's in-flight
-    * backup. */
-  private[streaming] def legacyBackupOf(p: Path): Path =
-    p.resolveSibling(p.getFileName.toString + ".old")
-
-  private def replace(src: Path, dst: Path): Unit = {
-    val old = backupOf(dst)
-    var attempts = 0
-    while (true) {
-      healDir(dst)                   // recover a prior crash before touching anything
-      FsUtil.deleteRecursively(old)  // stale backup from a completed earlier swap
-      if (Files.exists(dst)) Files.move(dst, old, StandardCopyOption.ATOMIC_MOVE)
-      try {
-        Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
-        FsUtil.deleteRecursively(old)
-        return
-      } catch {
-        // A racing reader's healDir restored the backup between our
-        // two renames (dst re-exists, backup gone). Re-run the swap:
-        // the restored dir is re-backed-up and the install retried.
-        case e @ (_: java.nio.file.FileAlreadyExistsException |
-                  _: java.nio.file.DirectoryNotEmptyException) =>
-          attempts += 1
-          if (attempts > 5) throw e
-      }
-    }
-  }
 }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -31,13 +29,10 @@ import graft.operators.CdcMerge
   *      the (small) batch, so the anti/semi joins against it
   *      broadcast.
   *
-  * File-sink caveat (same as [[CdcStream.mergeBatch]]): the carryover
-  * rewrite is O(view) in the plain-parquet [[applyBatch]]; the
-  * production sink is [[applyBatchBucketed]] — the same steps 1-3 on
-  * the bucketed [[ManifestState]] layout, where only Δ-touched
-  * buckets rewrite (per-batch cost measured flat in state,
-  * ViewStateBench / docs/SCALE.md). The JOIN maintenance itself is
-  * unchanged by the sink.
+  * Every state is a [[ManifestState]] root, so the carryover term
+  * rewrites only Δ-touched buckets (per-batch cost measured flat in
+  * state, docs/probes/viewstate_r11_*.txt); [[applyBatch]] gives the
+  * layout and the commit order.
   *
   * Side schema contract (what [[CdcStream.classify]] emits, renamed):
   * an id column, a join-key column, payload columns, `lsn`/`ts_ms`
@@ -55,10 +50,6 @@ object JoinView {
   private def ordering: Seq[Column] =
     Seq(col("lsn").desc_nulls_last, col("ts_ms").desc_nulls_last)
 
-  private def stateOf(spark: SparkSession, dir: String, schema: StructType): DataFrame =
-    if (CdcStream.statePresent(Paths.get(dir))) spark.read.parquet(dir)
-    else ManifestState.empty(spark, schema)
-
   private def live(state: DataFrame): DataFrame =
     state.filter(col("event_type") =!= CdcStream.Delete)
 
@@ -74,63 +65,19 @@ object JoinView {
   private def joined(l: DataFrame, r: DataFrame): DataFrame =
     l.join(r, Seq("jk")).drop("event_type", "lsn", "ts_ms")
 
-  /** Join-key values owned by `ids` in `state` (null-safe: tombstones
-    * and never-seen ids contribute nothing). */
-  private def keysOf(state: DataFrame, side: Side, ids: DataFrame): DataFrame =
-    state.join(ids, Seq(side.idCol), "left_semi")
-      .select(col(side.joinKeyCol).as("jk")).filter(col("jk").isNotNull)
+  /** Test seam: invoked after each manifest patch COMMITS inside
+    * [[applyBatch]]. JoinViewSpec's crash-prefix replay test
+    * throws from here to simulate a crash between any two commits of a
+    * batch — the only way to exercise the commit-order invariant below
+    * without a real kill. Production value: no-op. */
+  private[graft] var onPatchCommitted: () => Unit = () => ()
 
   /** Apply one micro-batch of deltas (either side may be empty) to the
-    * state at `stateDir` and incrementally refresh the joined view.
+    * states under `stateRoot` and incrementally refresh the joined view.
     * View columns: `jk`, then left payload, then right payload —
-    * callers pick non-colliding column names per side. */
-  def applyBatch(spark: SparkSession,
-                 leftDelta: DataFrame, rightDelta: DataFrame,
-                 stateDir: String, left: Side, right: Side): Unit = synchronized {
-    val lDir = s"$stateDir/left"; val rDir = s"$stateDir/right"
-    val vDir = s"$stateDir/view"
-
-    val lOld = stateOf(spark, lDir, left.rows)
-    val rOld = stateOf(spark, rDir, right.rows)
-    val lNew = CdcMerge.latestWins(lOld.unionByName(leftDelta), Seq(left.idCol), ordering)
-    val rNew = CdcMerge.latestWins(rOld.unionByName(rightDelta), Seq(right.idCol), ordering)
-
-    val lIds = leftDelta.select(col(left.idCol)).distinct()
-    val rIds = rightDelta.select(col(right.idCol)).distinct()
-    // affected join keys: old ∪ new key values of every touched id
-    val delta = keysOf(lOld, left, lIds)
-      .unionByName(keysOf(lNew, left, lIds))
-      .unionByName(keysOf(rOld, right, rIds))
-      .unionByName(keysOf(rNew, right, rIds))
-      .distinct()
-
-    val recompute = joined(
-      liveJk(lNew, left).join(broadcast(delta), Seq("jk"), "left_semi"),
-      liveJk(rNew, right).join(broadcast(delta), Seq("jk"), "left_semi"))
-    val oldView = stateOf(spark, vDir, recompute.schema)
-    val newView = oldView.join(broadcast(delta), Seq("jk"), "left_anti")
-      .unionByName(recompute)
-
-    // materialize the view FIRST (it reads the old side states), then
-    // swap all three — order matters because the states are inputs
-    val vTmp = s"$vDir.tmp"; val lTmp = s"$lDir.tmp"; val rTmp = s"$rDir.tmp"
-    newView.write.mode("overwrite").parquet(vTmp)
-    lNew.write.mode("overwrite").parquet(lTmp)
-    rNew.write.mode("overwrite").parquet(rTmp)
-    CdcStream.swapDirs(Paths.get(vTmp), Paths.get(vDir))
-    CdcStream.swapDirs(Paths.get(lTmp), Paths.get(lDir))
-    CdcStream.swapDirs(Paths.get(rTmp), Paths.get(rDir))
-  }
-
-  def readView(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/view")
-
-  // ---- bucketed mode: the production sink --------------------------
-
-  /** [[applyBatch]] with the [[ManifestState]] bucketed layout as the
-    * sink — the production answer to the plain-parquet caveat above:
-    * a batch rewrites ONLY the buckets its touched keys hash to, so
-    * the carryover term is O(touched buckets), not O(view).
+    * callers pick non-colliding column names per side. A batch rewrites
+    * ONLY the buckets its touched keys hash to, so the carryover term is
+    * O(touched buckets), not O(view).
     *
     * Layout under `stateRoot` (5 manifest states):
     *  - `left_id/`, `right_id/`: the side states bucketed BY ID — the
@@ -148,13 +95,11 @@ object JoinView {
     * jk-copy patches remove touched ids' rows and insert their new
     * live rows (both live in Δ-side buckets); the recompute joins the
     * UPDATED jk copies restricted to Δ; the view patch swaps Δ's
-    * buckets. Single-writer per view (synchronized), matching
-    * [[applyBatch]].
+    * buckets. Single-writer per view (synchronized).
     *
-    * COMMIT ORDER = replay idempotence (the bucketed twin of
-    * [[applyBatch]]'s "view first, states last" swap order): the id
-    * states are the ONLY input the Δ derivation reads, and they commit
-    * LAST — derive (read-only) → jk patches → view patch → id patches.
+    * COMMIT ORDER = replay idempotence: the id states are the ONLY
+    * input the Δ derivation reads, and they commit LAST — derive
+    * (read-only) → jk patches → view patch → id patches.
     * An at-least-once replay of the batch after a crash at any prefix
     * therefore re-derives the SAME Δ (the id states are still
     * pre-batch), and every jk/view patch is a deterministic rewrite of
@@ -166,6 +111,10 @@ object JoinView {
     * the rewrite reproduces the same content — still idempotent. (Were
     * the id states committed FIRST, a replay would lose the moved-away
     * old join keys and leave stale view rows forever.)
+    *
+    * A root still holding the retired whole-snapshot layout (`left/`,
+    * `right/`, `view/` parquet dirs, or a swap backup of one) is
+    * refused before the first patch commits.
     *
     * Read fusion (the measured per-batch constant on a local disk is
     * per-bucket FILE OPENS, not rows — docs/SCALE.md): the derivation
@@ -184,17 +133,15 @@ object JoinView {
     * batch is then (touched buckets) × (bucket size), independent of
     * total state.
     */
-  /** Test seam: invoked after each manifest patch COMMITS inside
-    * [[applyBatchBucketed]]. JoinViewSpec's crash-prefix replay test
-    * throws from here to simulate a crash between any two commits of a
-    * batch — the only way to exercise the commit-order invariant above
-    * without a real kill. Production value: no-op. */
-  private[graft] var onPatchCommitted: () => Unit = () => ()
-
-  def applyBatchBucketed(spark: SparkSession,
-                         leftDelta: DataFrame, rightDelta: DataFrame,
-                         stateRoot: String, left: Side, right: Side,
-                         nBuckets: Int): Unit = synchronized {
+  def applyBatch(spark: SparkSession,
+                 leftDelta: DataFrame, rightDelta: DataFrame,
+                 stateRoot: String, left: Side, right: Side,
+                 nBuckets: Int): Unit = synchronized {
+    // the view root would refuse a retired `view/` itself, but only
+    // after both jk roots had committed
+    Seq("left", "right", "view").foreach { d =>
+      ManifestState.requireNoLegacyLayout(spark, s"$stateRoot/$d", s"$stateRoot/$d")
+    }
     val pinned = scala.collection.mutable.ListBuffer.empty[DataFrame]
     def pin(df: DataFrame): DataFrame = { pinned += df; df.cache() }
 
@@ -295,28 +242,19 @@ object JoinView {
     } finally pinned.foreach(_.unpersist())
   }
 
-  /** The bucketed view's current snapshot (manifest-consistent); a
+  /** The view's current snapshot (manifest-consistent); a
     * never-written view reads as zero rows of the view's columns. */
-  def readViewBucketed(spark: SparkSession, stateRoot: String,
-                       left: Side, right: Side): DataFrame = {
+  def readView(spark: SparkSession, stateRoot: String,
+               left: Side, right: Side): DataFrame =
     ManifestState.read(spark, s"$stateRoot/view",
       joined(noJkRows(spark, left), noJkRows(spark, right)).schema)
-  }
 
-  /** Executable spec for the bucketed mode: full re-join of the
-    * bucketed side states — what [[readViewBucketed]] must equal. */
-  def naiveViewBucketed(spark: SparkSession, stateRoot: String,
-                        left: Side, right: Side): DataFrame = {
+  /** The executable spec: the full re-join of the CURRENT live side
+    * states — what [[readView]] must always equal. */
+  def naiveView(spark: SparkSession, stateRoot: String,
+                left: Side, right: Side): DataFrame = {
     def liveSide(root: String, side: Side) =
       liveJk(ManifestState.read(spark, root, side.rows), side)
     joined(liveSide(s"$stateRoot/left_id", left), liveSide(s"$stateRoot/right_id", right))
-  }
-
-  /** The executable spec: the full re-join of the CURRENT live side
-    * states — what the incremental view must always equal. */
-  def naiveView(spark: SparkSession, stateDir: String,
-                left: Side, right: Side): DataFrame = {
-    joined(liveJk(spark.read.parquet(s"$stateDir/left"), left),
-      liveJk(spark.read.parquet(s"$stateDir/right"), right))
   }
 }

@@ -14,13 +14,14 @@ import graft.operators.CdcMerge
 /** The engine's one bucketed-state layer: versioned bucket directories
   * committed through a single manifest file — the plain-filesystem
   * approximation of a transactional table format's snapshot +
-  * optimistic-commit protocol. Every bucketed state commits here: the
-  * CDC view ([[graft.sinks.BucketedParquetSink]]), the snapshot-diff,
-  * join and SCD2 views, and the ingest twins.
+  * optimistic-commit protocol. Every maintained state commits here: the
+  * CDC view ([[graft.sinks.BucketedParquetSink]]), the aggregate,
+  * snapshot-diff, join and SCD2 views, and the ingest twins. A view
+  * that wants one whole-state file set passes `nBuckets = 1`.
   *
-  * Swapping bucket directories in place would only be safe under one
+  * Swapping state directories in place would only be safe under one
   * `synchronized` JVM: a second writer interleaves swaps, and a reader
-  * can catch a bucket mid-move. Here:
+  * can catch a directory mid-move. Here:
   *
   *  - Layout: `root/b=<k>/v-<epoch>-<writer>/part-*.parquet` —
   *    versions are immutable once written; `root/MANIFEST` maps each
@@ -37,6 +38,10 @@ import graft.operators.CdcMerge
   *  - GC keeps one superseded version per bucket as a grace window
   *    for readers that loaded the previous manifest, deleting older
   *    generations.
+  *  - Replay fence: a commit that names its micro-batch id records it
+  *    in the manifest, so the id moves atomically with the buckets;
+  *    a later commit of the same id is skipped, a lower one refused
+  *    ([[fenced]]).
   *
   * The lock is a CREATE_NEW file with stale-age takeover — correct on
   * a POSIX filesystem (atomic exclusive create); an object-store
@@ -82,8 +87,9 @@ object ManifestState {
 
   /** Superseded versions per bucket that survive GC. Shared constant so
     * anything asserting the steady-state file bound (nBuckets ×
-    * (1 + keepGenerations), see IncrementalMergeBench) derives it from
-    * the same value mergeBatch defaults to, instead of hardcoding it. */
+    * (1 + keepGenerations), docs/probes/incmerge_inplace_vs_manifest.txt)
+    * derives it from the same value mergeBatch defaults to, instead of
+    * hardcoding it. */
   val DefaultKeepGenerations = 1
 
   /** Count of parquet DATA files under `root`'s bucket dirs (`b=k/…`)
@@ -115,9 +121,13 @@ object ManifestState {
     * count at first commit and every later commit must match
     * ([[requireBucketCount]] lets readers/writers validate up front).
     * Manifests written before this field exist with `nb = None` and
-    * are stamped by their next commit. */
+    * are stamped by their next commit.
+    *
+    * `applied` is the last micro-batch id a fenced commit recorded
+    * ([[fenced]]); `None` means none applied, and a commit that names
+    * no batch id carries it forward. */
   final case class Manifest(epoch: Long, buckets: Map[Int, String],
-                            nb: Option[Int] = None)
+                            nb: Option[Int] = None, applied: Option[Long] = None)
 
   private val writerId = UUID.randomUUID().toString.take(8)
 
@@ -127,7 +137,8 @@ object ManifestState {
     val bs = m.buckets.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""$k":"$v"""" }.mkString(",")
     val nb = m.nb.map(n => s""","nb":$n""").getOrElse("")
-    s"""{"epoch":${m.epoch}$nb,"buckets":{$bs}}"""
+    val applied = m.applied.map(a => s""","applied":$a""").getOrElse("")
+    s"""{"epoch":${m.epoch}$nb$applied,"buckets":{$bs}}"""
   }
 
   private def parse(s: String): Manifest = {
@@ -135,9 +146,10 @@ object ManifestState {
       .map(_.group(1).toLong)
       .getOrElse(throw new IllegalStateException(s"bad manifest: $s"))
     val nb = """"nb":(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toInt)
+    val applied = """"applied":(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong)
     val buckets = """"(\d+)":"([^"]+)"""".r.findAllMatchIn(s)
       .map(m => m.group(1).toInt -> m.group(2)).toMap
-    Manifest(epoch, buckets, nb)
+    Manifest(epoch, buckets, nb, applied)
   }
 
   /** Fail fast when `root`'s manifest was committed with a different
@@ -155,6 +167,24 @@ object ManifestState {
         s"caller passed $nBuckets — reads/patches would route to the wrong buckets")
     }
 
+  /** The replay fence, for a commit of micro-batch `batchId` to `root`.
+    * Spark replays at most the last uncommitted micro-batch, so against
+    * the id the state last recorded the only legitimate ids are that id
+    * (an exact replay: true, skip the whole merge) and anything above
+    * (false, merge). An id BELOW it means the streaming checkpoint was
+    * wiped while the state survived; skipping would silently drop every
+    * batch until the ids catch up, so that desync is refused. */
+  private def fenced(root: String, m: Manifest, batchId: Long): Boolean =
+    m.applied.exists { applied =>
+      if (applied > batchId)
+        throw new IllegalStateException(
+          s"state at $root has applied batch $applied but received batch " +
+          s"$batchId: the streaming checkpoint and the state are out of " +
+          "sync (checkpoint dir wiped while state was kept?); refusing to " +
+          "silently drop batches")
+      applied == batchId
+    }
+
   /** Zero rows of `schema`: what a root with no committed bucket reads
     * as. A local relation, the plan `Seq.empty.toDF` gives. */
   def empty(spark: SparkSession, schema: StructType): DataFrame =
@@ -162,15 +192,21 @@ object ManifestState {
 
   /** Refuse a pre-manifest layout in `dir` while `root` has no
     * committed bucket — such a root would read as empty and the next
-    * commit would silently reset the state it holds. Two layouts:
-    *  - parquet files at the top level: an append-mode log, the ingest
-    *    twins' layout before bucketing;
+    * commit would silently reset the state it holds. Three layouts:
+    *  - parquet files at the top level: a view's whole snapshot, which
+    *    the retired directory swap installed, or an append-mode log,
+    *    the ingest twins' layout before bucketing;
     *  - `b=<n>/` dirs holding parquet files directly: the retired
-    *    in-place bucketed merge (versions live in `b=<n>/v-…/`).
+    *    in-place bucketed merge (versions live in `b=<n>/v-…/`);
+    *  - no `dir`, but a `.<name>.old` or `<name>.old` sibling: a
+    *    whole-snapshot swap cut between its two renames, whose backup
+    *    is the only copy of the state.
     * Every access runs it on its own root (`dir = root`). A caller runs
     * it directly only where no access would in time: WinnowIngest's
     * index sat above its two sub-state roots, and its pair log is
-    * patched after two other commits. Seeds that migrate a dir in
+    * patched after two other commits; JoinView's retired `left/`,
+    * `right/` and `view/` dirs sit beside roots that commit before its
+    * view root is touched. Seeds that migrate a dir in
     * place skip it ([[patchBuckets]]' `migrateInPlace`). */
   def requireNoLegacyLayout(spark: SparkSession, root: String,
                             dir: String): Unit =
@@ -184,9 +220,12 @@ object ManifestState {
     if (fs.exists(p)) {
       val top = fs.listStatus(p)
       require(!top.exists(parquetFile),
-        s"$dir holds append-mode parquet fragments but no MANIFEST, so it " +
-        "is not a bucketed state; re-bootstrap it: merge its rows into a " +
-        "fresh root, or seed this dir with migrateInPlace = true " +
+        s"$dir holds parquet files at its top level but no MANIFEST, so it " +
+        "is not a bucketed state. A view's whole snapshot from the retired " +
+        "directory swap: re-bootstrap it into a fresh root by merging its " +
+        "rows (spark.read.parquet(<old root>)) as one batch, the way " +
+        "CdcStream.bootstrapFromTable seeds a view. An ingest twin's " +
+        "append-mode fragments: seed this dir with migrateInPlace = true " +
         "(IngestDedup.addToIndex, WinnowIngest.seedIndex) and delete the " +
         "fragments after — a plain seed would strand them beside a fresh manifest")
       require(!top.exists(b => b.isDirectory &&
@@ -195,6 +234,15 @@ object ManifestState {
         "merge but no MANIFEST; re-bootstrap it into a fresh root by " +
         "merging its rows (spark.read.parquet(<old root>).drop(\"b\")) " +
         "as one batch, the way CdcStream.bootstrapFromTable seeds a view")
+    } else {
+      val backup = Seq(s".${p.getName}.old", s"${p.getName}.old")
+        .map(new HPath(p.getParent, _)).find(fs.exists)
+      require(backup.isEmpty,
+        s"$dir is missing but ${backup.get} holds its state: a retired " +
+        "whole-snapshot directory swap was cut between its two renames. " +
+        s"Rename the backup to $dir, then re-bootstrap it into a fresh root " +
+        "by merging its rows as one batch; read as empty, the next commit " +
+        "would reset the state")
     }
   }
 
@@ -420,7 +468,7 @@ object ManifestState {
       // change schema and re-derive the bucket before writing
       val bare = delta.drop("b")
       optimisticCommit(spark, root, affected.toIndexedSeq, nBuckets, "id",
-        bare.schema, maxRetries, keepGenerations) { current =>
+        bare.schema, maxRetries, keepGenerations, batchId = None) { current =>
         CdcMerge.latestWins(
           current.unionByName(bare), Seq("id"),
           Seq(col("lsn").desc_nulls_last, col("ts_ms").desc_nulls_last))
@@ -447,23 +495,29 @@ object ManifestState {
     * `migrateInPlace` lets the first commit land in a dir that still
     * holds append-mode fragments — the seed of an in-place migration
     * (IngestDedup.addToIndex), whose caller deletes them after.
+    *
+    * `batchId` names the micro-batch for the replay fence ([[fenced]]):
+    * the commit records it, and a patch of an id already recorded is
+    * skipped before any work.
     */
   def patchBuckets(root: String, nBuckets: Int, keyCol: String,
                    touchedKeys: DataFrame, schema: StructType,
                    maxRetries: Int = 20,
                    keepGenerations: Int = DefaultKeepGenerations,
-                   migrateInPlace: Boolean = false)
+                   migrateInPlace: Boolean = false,
+                   batchId: Option[Long] = None)
                   (buildMerged: DataFrame => DataFrame): Boolean = {
     require(nBuckets > 0)
-    checkRoot(touchedKeys.sparkSession, root, nBuckets, migrateInPlace)
+    val m = checkRoot(touchedKeys.sparkSession, root, nBuckets, migrateInPlace)
+    // returns whether a commit actually happened — a replayed batch or
+    // an empty delta is a no-op, and callers instrumenting commit
+    // boundaries (crash-prefix replay seams) must not count it as one.
+    // The fence comes first: a desynced id is refused whatever it touches.
+    if (batchId.exists(fenced(root, m, _))) return false
     val affected = bucketsOf(touchedKeys, keyCol, nBuckets)
-    // returns whether a commit actually happened — an empty delta is a
-    // no-op, and callers instrumenting commit boundaries (crash-prefix
-    // replay seams) must not count it as one
     if (affected.isEmpty) return false
     optimisticCommit(touchedKeys.sparkSession, root, affected, nBuckets,
-      keyCol, schema, maxRetries, keepGenerations)(buildMerged)
-    true
+      keyCol, schema, maxRetries, keepGenerations, batchId)(buildMerged)
   }
 
   /** The buckets `keys` hash to — O(distinct buckets) driver memory,
@@ -497,12 +551,14 @@ object ManifestState {
 
   /** The shared optimistic heavy-phase + commit loop: read affected
     * buckets, `buildMerged`, stage, per-bucket atomic move, manifest
-    * compare+swap under the lock, GC. */
+    * compare+swap under the lock, GC. False when the fence skipped a
+    * batch another commit applied first. */
   private def optimisticCommit(spark: SparkSession, root: String,
                                affected: IndexedSeq[Int], nBuckets: Int,
                                keyCol: String, schema: StructType,
-                               maxRetries: Int, keepGenerations: Int)
-                              (buildMerged: DataFrame => DataFrame): Unit = {
+                               maxRetries: Int, keepGenerations: Int,
+                               batchId: Option[Long])
+                              (buildMerged: DataFrame => DataFrame): Boolean = {
     Files.createDirectories(Paths.get(root))
     // distinguishes concurrent merges from the SAME writer object
     // (threads sharing this JVM) — version/stage dirs must be unique
@@ -519,6 +575,7 @@ object ManifestState {
       val base = readManifest(root)
       // a concurrent first writer may have stamped another count
       checkBucketCount(root, base, nBuckets)
+      if (batchId.exists(fenced(root, base, _))) return false
       val version = s"v-${base.epoch + 1}-$callId-$attempt"
       // drop THIS attempt's on-disk artifacts: the stage tmp dir (a
       // heavy-phase exception can leave it mid-write) and any version
@@ -572,13 +629,16 @@ object ManifestState {
           // re-read manifest now carries the winner's nb and the
           // require fails loud.
           val nbConflict = now.nb.exists(_ != nBuckets)
-          val conflict = nbConflict || affected.exists(k =>
+          // a commit of the same or a later batch id since the snapshot
+          // sends this one around the loop, where the fence decides
+          val fenceConflict = batchId.exists(id => now.applied.exists(_ >= id))
+          val conflict = nbConflict || fenceConflict || affected.exists(k =>
             now.buckets.get(k) != base.buckets.get(k))
           if (!conflict && stillHolds(root, token)) {
             writeManifest(root,
               Manifest(now.epoch + 1,
                 now.buckets ++ written.map(k => k -> version) -- emptied,
-                Some(nBuckets)))
+                Some(nBuckets), batchId.orElse(now.applied)))
             true
           } else false
         }
@@ -609,6 +669,7 @@ object ManifestState {
     // version — scanning all buckets would pay nBuckets directory
     // listings per merge for nothing
     gc(root, affected, keepGenerations)
+    true
   }
 
   /** Drop version dirs at least two generations behind the manifest in

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,11 +18,9 @@ import org.apache.spark.sql.types.StructType
   * Per micro-batch the rebuild is O(touched-id slice): untouched ids
   * carry over by anti-join; only ids present in the batch re-run the
   * (lead, running-count) window over their (state ∪ delta) events.
-  * At 100 TB the dimension is bucketed by id and a batch rewrites
-  * only its touched buckets — [[mergeBatchBucketed]], the production
-  * sink (per-batch cost measured flat in state, ViewStateBench /
-  * docs/SCALE.md); [[mergeBatch]] is the plain-parquet harness whose
-  * carryover rewrite is O(state) by documented design.
+  * The dimension is a [[ManifestState]] root bucketed by id, and a
+  * batch reads and rewrites only its touched buckets (per-batch cost
+  * measured flat in state, docs/probes/viewstate_r11_*.txt).
   *
   * Dedup on (id, lsn, ts_ms) makes the merge idempotent under
   * at-least-once redelivery. Tombstone events stay in state (they
@@ -35,37 +31,13 @@ object Scd2View {
 
   /** Merge one decoded micro-batch (CdcStream.classify columns:
     * event_type, id, create_time, update_time, message, username,
-    * lsn, ts_ms) into the versioned dimension at `stateDir`. */
-  def mergeBatch(batch: DataFrame, stateDir: String): Unit = synchronized {
-    val spark = batch.sparkSession
-    val statePath = Paths.get(stateDir)
-    val delta = decodeDelta(batch)
-
-    val (carryover, sliceEvents) =
-      if (CdcStream.statePresent(statePath)) {
-        val state = spark.read.parquet(stateDir)
-        val touched = delta.select("id").distinct()
-        (state.join(touched, Seq("id"), "left_anti"),
-         state.select(eventCols: _*)
-           .join(touched, Seq("id"), "left_semi")
-           .unionByName(delta))
-      } else (ManifestState.empty(spark, StateSchema), delta)
-
-    val tmp = stateDir + ".tmp"
-    carryover.unionByName(rebuild(sliceEvents))
-      .write.mode("overwrite").parquet(tmp)
-    CdcStream.swapDirs(Paths.get(tmp), statePath)
-  }
-
-  /** [[mergeBatch]] with the [[ManifestState]] bucketed layout as the
-    * sink — the production answer to the O(state) carryover rewrite:
-    * only the buckets the batch's ids hash to are read and rewritten,
-    * so per-batch cost is (touched buckets) × (bucket size), flat in
+    * lsn, ts_ms) into the versioned dimension at `stateRoot`: only the
+    * buckets the batch's ids hash to are read and rewritten, so
+    * per-batch cost is (touched buckets) × (bucket size), flat in
     * total state when nBuckets tracks state size (constant bucket
-    * rows). The SCD2 algebra — touched-slice rebuild, everything in
-    * [[rebuild]] — is byte-identical to the plain-sink path. */
-  def mergeBatchBucketed(batch: DataFrame, stateRoot: String,
-                         nBuckets: Int): Unit = synchronized {
+    * rows). */
+  def mergeBatch(batch: DataFrame, stateRoot: String,
+                 nBuckets: Int): Unit = synchronized {
     val delta = decodeDelta(batch)
     val ids = delta.select("id").distinct().cache()
     var cur: DataFrame = null
@@ -86,11 +58,6 @@ object Scd2View {
       if (cur != null) cur.unpersist()
     }
   }
-
-  /** The queryable bucketed dimension ([[readDim]] over the manifest
-    * snapshot). */
-  def readDimBucketed(spark: SparkSession, stateRoot: String): DataFrame =
-    dim(ManifestState.read(spark, stateRoot, StateSchema))
 
   private val eventCols = Seq("id", "create_time", "update_time", "message",
     "username", "lsn", "ts_ms", "is_delete").map(col)
@@ -130,21 +97,22 @@ object Scd2View {
     "username STRING, lsn BIGINT, ts_ms BIGINT, is_delete BOOLEAN, " +
     "valid_from TIMESTAMP_LTZ, valid_to TIMESTAMP_LTZ, version BIGINT, is_current BOOLEAN")
 
-  private def dim(state: DataFrame): DataFrame =
-    state.filter(!col("is_delete"))
+  /** The queryable dimension: every non-tombstone version with its
+    * validity interval, from the committed manifest snapshot.
+    * Point-in-time reads filter
+    * `valid_from <= t AND (valid_to IS NULL OR t < valid_to)`. */
+  def readDim(spark: SparkSession, stateRoot: String): DataFrame =
+    ManifestState.read(spark, stateRoot, StateSchema)
+      .filter(!col("is_delete"))
       .select("id", "message", "username", "valid_from", "valid_to",
         "version", "is_current")
 
-  /** The queryable dimension: every non-tombstone version with its
-    * validity interval. Point-in-time reads filter
-    * `valid_from <= t AND (valid_to IS NULL OR t < valid_to)`. */
-  def readDim(spark: SparkSession, stateDir: String): DataFrame =
-    dim(if (CdcStream.statePresent(Paths.get(stateDir))) spark.read.parquet(stateDir)
-        else ManifestState.empty(spark, StateSchema))
-
-  /** Run the maintained dimension over an envelope file stream. */
+  /** Run the maintained dimension over an envelope file stream;
+    * exactly-once comes from the stream checkpoint plus the merge's
+    * (id, lsn, ts_ms) idempotence. */
   def run(spark: SparkSession, inputDir: String, checkpointDir: String,
-          stateDir: String, trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+          stateRoot: String, nBuckets: Int,
+          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     spark.readStream
       .schema(CdcStream.fileRecordSchema)
       .json(inputDir)
@@ -152,25 +120,7 @@ object Scd2View {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeBatch(CdcStream.decodeFile(batch), stateDir)
-      }
-      .start()
-
-  /** [[run]] with the bucketed production sink — the same envelope
-    * stream drives [[mergeBatchBucketed]]; exactly-once comes from the
-    * stream checkpoint plus the merge's (id, lsn, ts_ms) idempotence,
-    * unchanged from the plain sink. */
-  def runBucketed(spark: SparkSession, inputDir: String, checkpointDir: String,
-                  stateRoot: String, nBuckets: Int,
-                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(CdcStream.fileRecordSchema)
-      .json(inputDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeBatchBucketed(CdcStream.decodeFile(batch), stateRoot, nBuckets)
+        mergeBatch(CdcStream.decodeFile(batch), stateRoot, nBuckets)
       }
       .start()
 }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -21,10 +19,10 @@ import org.apache.spark.sql.types.StructType
   *      per-key winner by the same (ts, event_id) total order q150
   *      uses (late/out-of-order events that lose emit `same`, they
   *      never regress the view);
-  *   3. append the diff rows to `diffDir`, swap the updated state —
-  *      carryover of untouched keys is an anti-join, exactly the
-  *      [[Scd2View.mergeBatch]] touched-slice discipline, so at 100 TB
-  *      the state is bucketed and a batch rewrites only its buckets.
+  *   3. write the diff rows under `diffDir` and commit the updated
+  *      buckets — carryover of untouched keys is an anti-join, exactly
+  *      the [[Scd2View.mergeBatch]] touched-slice discipline; the
+  *      state is bucketed and a batch rewrites only its buckets.
   *
   * Parity contract (spec-asserted): after any prefix of ts-ordered
   * batches, (a) the state equals the batch latest-wins recompute over
@@ -35,95 +33,52 @@ import org.apache.spark.sql.types.StructType
   */
 object SnapshotDiffView {
 
-  /** Merge one events-shaped micro-batch into the view at `stateDir`,
-    * writing the batch's diff rows under `diffDir/batch_seq=<id>` —
-    * overwrite per batch id, so an at-least-once replay of a batch
-    * rewrites its own diff slice instead of double-appending. */
+  /** Merge events-shaped micro-batch `batchId` into the view at
+    * `stateDir`, writing the batch's diff rows under
+    * `diffDir/batch_seq=<id>`. State is a [[ManifestState]] root
+    * bucketed by hash(user_id) % nBuckets, and a micro-batch reads and
+    * rewrites ONLY its touched buckets ([[ManifestState.patchBuckets]]).
+    *
+    * Replay: a diff computed against POST-batch state would degrade
+    * every `changed` row to `same`, so a redelivered batch must be
+    * skipped outright, not re-merged. The batch id commits with the
+    * buckets as the manifest's replay fence ([[ManifestState.patchBuckets]]):
+    * an exact replay skips the whole merge, diff included, and an id
+    * below the fence (streaming checkpoint wiped while the state was
+    * kept) is refused rather than silently dropped. The diff is written
+    * inside the patch's heavy phase, against the bucket snapshot the
+    * commit replaces and before the manifest commit — every crash
+    * window replays clean, and a commit retried after a lost race
+    * rewrites the slice against the fresh snapshot.
+    *
+    * Upgrading a root that the retired bucketed merge wrote: its
+    * manifest records no batch id (that merge fenced on the diff
+    * slice's `_SUCCESS` marker, which is no longer read), so stop the
+    * stream cleanly before upgrading. A batch whose state committed but
+    * whose streaming checkpoint did not would merge once more: the
+    * state stays right, but its diff slice is rewritten against the
+    * post-batch state and its `changed` rows read `same`.
+    */
   def mergeBatch(batch: DataFrame, stateDir: String, diffDir: String,
-                 batchId: Long): Unit = synchronized {
+                 batchId: Long, nBuckets: Int): Unit = synchronized {
     // batchId is deliberately non-defaultable: with a default of 0,
     // two bare calls would silently no-op the second one at the
-    // replay fence (0 <= 0). Ids must strictly increase per state dir.
-    val spark = batch.sparkSession
-    val statePath = Paths.get(stateDir)
-
-    // Replay fence. A diff computed against POST-batch state would
-    // degrade every `changed` row to `same`, so a redelivered batch
-    // must be skipped outright, not re-merged. The applied batch id
-    // travels INSIDE the state dir (underscore files are invisible to
-    // the parquet reader) so the swap below commits state + fence
-    // together; the diff slice is written BEFORE the swap, making
-    // every crash window replay-clean: before the swap, state is
-    // unchanged and the recompute overwrites an identical slice;
-    // after it, the fence skips the whole merge. Spark replays at
-    // most the LAST uncommitted batch, so the only legitimate ids are
-    // `applied` (exact replay → skip) and anything above; an id BELOW
-    // `applied` means the streaming checkpoint was wiped while the
-    // state dir survived — silently skipping would drop every batch
-    // until ids catch up, so that desync is an error, not a no-op.
-    val applied =
-      if (CdcStream.statePresent(statePath)) appliedBatch(statePath) else -1L
-    if (applied == batchId) return
-    if (applied > batchId)
-      throw new IllegalStateException(
-        s"state at $stateDir has applied batch $applied but received batch " +
-        s"$batchId: the streaming checkpoint and the state dir are out of " +
-        "sync (checkpoint dir wiped while state was kept?); refusing to " +
-        "silently drop batches")
-
-    val delta = batchWinners(batch)
-    val old =
-      if (Files.exists(statePath)) spark.read.parquet(stateDir) // healed by the fence check above
-      else ManifestState.empty(spark, StateSchema)
-    val merged = mergeWinners(delta, old)
-      .localCheckpoint() // read twice: diff emission + state rewrite
-    writeDiff(merged, diffDir, batchId)
-
-    val tmp = stateDir + ".tmp"
-    nextState(old, merged).write.mode("overwrite").parquet(tmp)
-    Files.write(Paths.get(tmp, AppliedMarker), batchId.toString.getBytes)
-    CdcStream.swapDirs(Paths.get(tmp), statePath)
-    graft.operators.Iterate.unpersistCheckpoint(merged)
-  }
-
-  /** Bucketed merge — the 100 TB layout the plain [[mergeBatch]]'s
-    * O(state) carryover rewrite approximates: state is a
-    * [[ManifestState]] root bucketed by hash(user_id) % nBuckets, and a
-    * micro-batch reads and rewrites ONLY its touched buckets
-    * ([[ManifestState.patchBuckets]]).
-    *
-    * Replay protocol differs from the plain merge BY CONSTRUCTION
-    * rather than by fence: the bucket merge is idempotent (a re-merged
-    * delta loses to the state it already produced under the
-    * (ts, event_id) order — and an id-regressed delta simply loses to
-    * newer state), so only the DIFF needs protection: a slice that
-    * already committed (its `_SUCCESS` marker exists) is never
-    * rewritten, because a replay after the state commit would
-    * recompute it against post-batch state and degrade `changed` rows
-    * to `same`. The diff is written inside the patch's heavy phase,
-    * against the bucket snapshot the commit replaces and before the
-    * manifest commit — every crash window replays clean, and a commit
-    * retried after a lost race rewrites the slice against the fresh
-    * snapshot.
-    */
-  def mergeBatchBucketed(batch: DataFrame, stateDir: String, diffDir: String,
-                         batchId: Long, nBuckets: Int): Unit = synchronized {
+    // replay fence. Ids must strictly increase per state dir.
     require(nBuckets > 0)
     val spark = batch.sparkSession
-    val replay = diffCommitted(diffDir, batchId)
     val delta = batchWinners(batch).localCheckpoint() // bucket list + winner join
     var pinned = List(delta)
     try {
       val committed = ManifestState.patchBuckets(stateDir, nBuckets, "user_id",
-          delta.select(col("user_id")), StateSchema) { current =>
+          delta.select(col("user_id")), StateSchema, batchId = Some(batchId)) { current =>
         val merged = mergeWinners(delta, current)
           .localCheckpoint() // diff emission + bucket rewrite
         pinned ::= merged
-        if (!replay) writeDiff(merged, diffDir, batchId)
+        writeDiff(merged, diffDir, batchId)
         nextState(current, merged)
       }
       // a batch that touched no key still leaves its (empty) slice
-      if (!committed && !replay)
+      if (!committed && delta.isEmpty)
         writeDiff(mergeWinners(delta, ManifestState.empty(spark, StateSchema)), diffDir, batchId)
     } finally pinned.foreach(graft.operators.Iterate.unpersistCheckpoint)
   }
@@ -163,27 +118,12 @@ object SnapshotDiffView {
       .unionByName(merged.select(col("user_id"), col("n.ts").as("ts"),
         col("n.event_id").as("event_id"), col("n.value").as("value")))
 
-  private def diffCommitted(diffDir: String, batchId: Long): Boolean =
-    Files.exists(Paths.get(s"$diffDir/batch_seq=$batchId", "_SUCCESS"))
-
-  /** The bucketed view: the committed manifest snapshot. */
-  def readViewBucketed(spark: SparkSession, stateDir: String): DataFrame =
-    ManifestState.read(spark, stateDir, StateSchema)
-
-  private val AppliedMarker = "_applied_batch"
-
-  private def appliedBatch(statePath: java.nio.file.Path): Long = {
-    val m = statePath.resolve(AppliedMarker)
-    if (Files.exists(m)) new String(Files.readAllBytes(m)).trim.toLong else -1L
-  }
-
   private val StateSchema =
     StructType.fromDDL("user_id BIGINT, ts TIMESTAMP_LTZ, event_id BIGINT, value DOUBLE")
 
-  /** The maintained latest-wins view. */
+  /** The maintained latest-wins view: the committed manifest snapshot. */
   def readView(spark: SparkSession, stateDir: String): DataFrame =
-    if (CdcStream.statePresent(Paths.get(stateDir))) spark.read.parquet(stateDir)
-    else ManifestState.empty(spark, StateSchema)
+    ManifestState.read(spark, stateDir, StateSchema)
 
   /** One batch's diff slice (empty if the batch touched nothing). */
   def readDiff(spark: SparkSession, diffDir: String, batchId: Long): DataFrame =
@@ -191,12 +131,13 @@ object SnapshotDiffView {
 
   /** Wire the merge into a streaming events source. */
   def run(events: DataFrame, checkpointDir: String, stateDir: String,
-          diffDir: String, trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+          diffDir: String, nBuckets: Int,
+          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     events.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        mergeBatch(batch, stateDir, diffDir, id)
+        mergeBatch(batch, stateDir, diffDir, id, nBuckets)
       }
       .start()
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.streaming.AggView
+import graft.streaming.{AggView, CdcStream}
 
 /** Delta-maintained aggregate view from before/after images — the
   * capability REPLICA IDENTITY FULL exists for (reference
@@ -102,5 +102,33 @@ class AggViewSpec extends SparkSpec {
     // carol's insert+delete net to zero; a dropped compensation would
     // have shown carol as (1, 5) here
     assert(end.toSeq == Seq(("dave", 1L, 4L)), s"got ${end.toSeq}")
+  }
+
+  test("a micro-batch replayed after its state commit is not counted twice") {
+    import spark.implicits._
+    val state = s"${Files.createTempDirectory("aggview4").toString}/state"
+    def deltas(lines: String*) = AggView.deltas(
+      spark.read.schema(CdcStream.fileRecordSchema).json(lines.toDS()))
+    def view() = AggView.readView(spark, state).orderBy("username").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+    val batch0 = deltas(
+      rec("a", 1, None, Some(("hello", "alice"))),
+      rec("b", 2, None, Some(("hey", "bob"))))
+
+    AggView.mergeDeltas(batch0, state, batchId = 0L)
+    val once = view()
+    assert(once == Seq(("alice", 1L, 5L), ("bob", 1L, 3L)), s"got $once")
+    // a crash after the state commit but before Spark's checkpoint
+    // commit: the stream hands the same batch id over again
+    AggView.mergeDeltas(batch0, state, batchId = 0L)
+    assert(view() == once, "the replayed batch was summed twice")
+
+    // the next batch still merges; an id below the fence is refused
+    AggView.mergeDeltas(deltas(rec("b", 3, Some(("hey", "bob")), None)), state, batchId = 1L)
+    assert(view() == Seq(("alice", 1L, 5L)))
+    intercept[IllegalStateException] {
+      AggView.mergeDeltas(batch0, state, batchId = 0L)
+    }
+    assert(view() == Seq(("alice", 1L, 5L)))
   }
 }

@@ -55,7 +55,7 @@ class CdcJdbcBootstrapSpec extends SparkSpec {
   test("jdbc snapshot bootstrap: live table rows land with epoch-millis times") {
     val url = seedDb("boot1", seed)
     val state = Files.createTempDirectory("jdbcboot1").toString + "/state"
-    CdcStream.bootstrapFromJdbc(spark, url, "messages", state, fenceLsn = 100L)
+    CdcStream.bootstrapFromJdbc(spark, url, "messages", state, nBuckets = 1, fenceLsn = 100L)
     val got = CdcStream.readView(spark, state)
       .select("id", "create_time", "message", "username")
       .collect()
@@ -70,7 +70,7 @@ class CdcJdbcBootstrapSpec extends SparkSpec {
     val in = s"$root/in"; Files.createDirectories(Paths.get(in))
     val state = s"$root/state"
 
-    CdcStream.bootstrapFromJdbc(spark, url, "messages", state, fenceLsn = 100L)
+    CdcStream.bootstrapFromJdbc(spark, url, "messages", state, nBuckets = 1, fenceLsn = 100L)
 
     // post-fence update of a, post-fence delete of b, and a REPLAYED
     // pre-fence change of c that must lose to the snapshot
@@ -79,7 +79,7 @@ class CdcJdbcBootstrapSpec extends SparkSpec {
       tombstone("b", 151, 1500),
       env("c", 50, 500, 1755000200000L, 1755000250000L, "c stale pre-snapshot", "u3"))
     Files.write(Paths.get(s"$in/changes.json"), lines.mkString("\n").getBytes("UTF-8"))
-    val q = CdcStream.runFileStream(spark, in, s"$root/cp", state)
+    val q = CdcStream.runFileStream(spark, in, s"$root/cp", state, nBuckets = 1)
     q.awaitTermination()
 
     val view = CdcStream.readView(spark, state)
@@ -131,8 +131,8 @@ class CdcJdbcBootstrapSpec extends SparkSpec {
   test("predicate-partitioned jdbc snapshot equals the single-reader snapshot") {
     val url = seedDb("boot3", seed)
     val root = Files.createTempDirectory("jdbcboot3").toString
-    CdcStream.bootstrapFromJdbc(spark, url, "messages", s"$root/single")
-    CdcStream.bootstrapFromJdbc(spark, url, "messages", s"$root/parts",
+    CdcStream.bootstrapFromJdbc(spark, url, "messages", s"$root/single", nBuckets = 1)
+    CdcStream.bootstrapFromJdbc(spark, url, "messages", s"$root/parts", nBuckets = 1,
       predicates = Array("id < 'b'", "id >= 'b'"))
     val a = CdcStream.readView(spark, s"$root/single").collect().map(_.toString).sorted
     val b = CdcStream.readView(spark, s"$root/parts").collect().map(_.toString).sorted

@@ -46,7 +46,7 @@ class CdcStreamSpec extends SparkSpec {
       lines.mkString("\n").getBytes("UTF-8"))
 
     val dead = s"$root/dead"
-    val q = CdcStream.runFileStream(spark, in, cp, state,
+    val q = CdcStream.runFileStream(spark, in, cp, state, nBuckets = 1,
       deadLetterDir = Some(dead))
     q.awaitTermination()
 
@@ -69,7 +69,7 @@ class CdcStreamSpec extends SparkSpec {
     // only the new file is processed.
     Files.write(Paths.get(s"$in/batch2.json"),
       tombstone("a", 8, 5000).getBytes("UTF-8"))
-    val q2 = CdcStream.runFileStream(spark, in, cp, state)
+    val q2 = CdcStream.runFileStream(spark, in, cp, state, nBuckets = 1)
     q2.awaitTermination()
 
     val view2 = CdcStream.readView(spark, state).select("id").collect().map(_.getString(0))
@@ -84,7 +84,7 @@ class CdcStreamSpec extends SparkSpec {
       env("new", 2, 2000, 5000, 5000, "last", "u"),
       env("mid", 3, 3000, 3000, 3000, "middle", "u"))
     Files.write(Paths.get(s"$in/b.json"), lines.mkString("\n").getBytes("UTF-8"))
-    val q = CdcStream.runFileStream(spark, in, s"$root/cp", s"$root/state")
+    val q = CdcStream.runFileStream(spark, in, s"$root/cp", s"$root/state", nBuckets = 1)
     q.awaitTermination()
     val ids = CdcStream.presentView(spark, s"$root/state")
       .select("id").collect().map(_.getString(0))
@@ -129,7 +129,7 @@ class CdcStreamSpec extends SparkSpec {
       ("a", 10L, 10L, "a v1", "u1"),
       ("b", 20L, 20L, "b v1", "u2"))
       .toDF("id", "create_time", "update_time", "message", "username")
-    CdcStream.bootstrapFromTable(snapshot, state, fenceLsn = 100L)
+    CdcStream.bootstrapFromTable(snapshot, state, nBuckets = 1, fenceLsn = 100L)
     assert(CdcStream.readView(spark, state).count() == 2)
 
     // change stream on top: update a (post-fence), delete b
@@ -139,7 +139,7 @@ class CdcStreamSpec extends SparkSpec {
       tombstone("b", 151, 1500),
       env("a", 50, 500, 10, 500, "a stale pre-snapshot", "u1"))
     Files.write(Paths.get(s"$in/changes.json"), lines.mkString("\n").getBytes("UTF-8"))
-    val q = CdcStream.runFileStream(spark, in, s"$root/cp", state)
+    val q = CdcStream.runFileStream(spark, in, s"$root/cp", state, nBuckets = 1)
     q.awaitTermination()
 
     val view = CdcStream.readView(spark, state)
@@ -162,24 +162,31 @@ class CdcStreamSpec extends SparkSpec {
     )
     Files.write(Paths.get(s"$in/batch1.json"), lines.mkString("\n").getBytes("UTF-8"))
 
-    val q1 = CdcStream.runFileStream(spark, in, s"$root/cp1", s"$root/plain")
-    q1.awaitTermination()
-    val q2 = CdcStream.runFileStreamBucketed(spark, in, s"$root/cp2", s"$root/bucketed", 8)
+    val q2 = CdcStream.runFileStream(spark, in, s"$root/cp2", s"$root/bucketed", 8)
     q2.awaitTermination()
 
     def snap(dir: String) = CdcStream.readView(spark, dir).orderBy("id").collect()
       .map(_.toString).toSeq
-    assert(snap(s"$root/bucketed") == snap(s"$root/plain"))
+    // the reference: one batch materialization of all input so far,
+    // shaped like the view
+    def reference() = CdcStream.materialize(CdcStream.decodeFile(
+        spark.read.schema(CdcStream.fileRecordSchema).json(in)))
+      .select(col("id"), timestamp_millis(col("create_time")).as("create_time"),
+        timestamp_millis(col("update_time")).as("update_time"),
+        col("message"), col("username"))
+      .orderBy("id").collect().map(_.toString).toSeq
+    assert(snap(s"$root/bucketed") == reference())
     assert(snap(s"$root/bucketed").size == 2) // a + resurrected c
 
     // second batch through the bucketed path: only affected buckets move
     Files.write(Paths.get(s"$in/batch2.json"),
       tombstone("a", 8, 5000).getBytes("UTF-8"))
-    val q3 = CdcStream.runFileStreamBucketed(spark, in, s"$root/cp2", s"$root/bucketed", 8)
+    val q3 = CdcStream.runFileStream(spark, in, s"$root/cp2", s"$root/bucketed", 8)
     q3.awaitTermination()
     val ids = CdcStream.readView(spark, s"$root/bucketed").select("id")
       .collect().map(_.getString(0))
     assert(ids.toSeq == Seq("c"))
+    assert(snap(s"$root/bucketed") == reference())
   }
 
   test("bucketed merge is idempotent under batch replay") {

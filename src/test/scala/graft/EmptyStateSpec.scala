@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.StructType
 
 import graft.sinks.BucketedParquetSink
-import graft.streaming.{CdcStream, IvfIngest, JoinView, Scd2View, SnapshotDiffView}
+import graft.streaming.{AggView, CdcStream, IvfIngest, JoinView, Scd2View, SnapshotDiffView}
 import graft.streaming.JoinView.Side
 
 /** The empty-state contract of the bucketed state layer: a root no
@@ -54,8 +54,8 @@ class EmptyStateSpec extends SparkSpec {
     val right = Side("did", "dept", StructType.fromDDL("did STRING, " +
       "dept STRING, dname STRING, lsn BIGINT NOT NULL, ts_ms BIGINT NOT NULL, event_type STRING"))
     val r = root("empty-join")
-    sameShapeAfterOneMerge(JoinView.readViewBucketed(spark, r, left, right)) {
-      JoinView.applyBatchBucketed(spark,
+    sameShapeAfterOneMerge(JoinView.readView(spark, r, left, right)) {
+      JoinView.applyBatch(spark,
         Seq((1L, "eng", "ada", 1L, 1L, "UPSERT"))
           .toDF("uid", "dept", "name", "lsn", "ts_ms", "event_type"),
         Seq(("eng", "eng", "Engineering", 2L, 2L, "UPSERT"))
@@ -66,8 +66,8 @@ class EmptyStateSpec extends SparkSpec {
 
   test("Scd2View.readDimBucketed") {
     val r = s"${root("empty-scd2")}/state"
-    sameShapeAfterOneMerge(Scd2View.readDimBucketed(spark, r))(
-      Scd2View.mergeBatchBucketed(changes(), r, nBuckets = 4))
+    sameShapeAfterOneMerge(Scd2View.readDim(spark, r))(
+      Scd2View.mergeBatch(changes(), r, nBuckets = 4))
   }
 
   test("SnapshotDiffView.readViewBucketed") {
@@ -75,8 +75,16 @@ class EmptyStateSpec extends SparkSpec {
     val r = root("empty-diff")
     val events = Seq((1L, Timestamp.valueOf("2024-01-01 10:00:00"), 100L, 10.0))
       .toDF("user_id", "ts", "event_id", "value")
-    sameShapeAfterOneMerge(SnapshotDiffView.readViewBucketed(spark, s"$r/state"))(
-      SnapshotDiffView.mergeBatchBucketed(events, s"$r/state", s"$r/diff", 0L, nBuckets = 4))
+    sameShapeAfterOneMerge(SnapshotDiffView.readView(spark, s"$r/state"))(
+      SnapshotDiffView.mergeBatch(events, s"$r/state", s"$r/diff", 0L, nBuckets = 4))
+  }
+
+  test("AggView.readView") {
+    import spark.implicits._
+    val r = s"${root("empty-agg")}/state"
+    val deltas = Seq(("u", 1L, 5L)).toDF("username", "dc", "dv")
+    sameShapeAfterOneMerge(AggView.readView(spark, r))(
+      AggView.mergeDeltas(deltas, r, batchId = 0L))
   }
 
   test("IvfIngest.centroids") {

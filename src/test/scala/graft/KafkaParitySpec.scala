@@ -3,8 +3,9 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions._
 
-import graft.sinks.{BucketedParquetSink, MergeIntoSink, ParquetSnapshotSink}
+import graft.sinks.{BucketedParquetSink, MergeIntoSink}
 import graft.streaming.CdcStream
 
 /** The kafka path minus only the broker: kafka-shaped (key, value)
@@ -45,7 +46,7 @@ class KafkaParitySpec extends SparkSpec {
     ms.addData(records: _*)
     val decoded = CdcStream.decodeKafka(ms.toDF().toDF("key", "value"))
     val qk = CdcStream.runDecodedStream(decoded, s"$root/cpk",
-      new ParquetSnapshotSink(s"$root/statek"),
+      new BucketedParquetSink(s"$root/statek", 1),
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
     qk.awaitTermination()
 
@@ -56,7 +57,7 @@ class KafkaParitySpec extends SparkSpec {
       if (k.startsWith("{")) s"""{"key":$k,"value":$v}""" else "malformed {{"
     }
     Files.write(Paths.get(s"$in/batch.json"), lines.mkString("\n").getBytes("UTF-8"))
-    val qf = CdcStream.runFileStream(spark, in, s"$root/cpf", s"$root/statef")
+    val qf = CdcStream.runFileStream(spark, in, s"$root/cpf", s"$root/statef", nBuckets = 1)
     qf.awaitTermination()
 
     val viewK = CdcStream.readView(spark, s"$root/statek").orderBy("id")
@@ -70,33 +71,26 @@ class KafkaParitySpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val root = Files.createTempDirectory("sink-seam").toString
-    val ms = MemoryStream[(String, String)]
-    (1 to 40).foreach { i =>
-      ms.addData((key(s"k${i % 10}"), value(s"k${i % 10}", i.toLong, i * 100L,
-        1000L, i * 100L, s"m$i", "u")))
-    }
-    ms.addData((key("k3"), tombstoneValue("k3", 99, 9900)))
-    val decoded = CdcStream.decodeKafka(ms.toDF().toDF("key", "value"))
+    val records = (1 to 40).map { i =>
+      (key(s"k${i % 10}"), value(s"k${i % 10}", i.toLong, i * 100L,
+        1000L, i * 100L, s"m$i", "u"))
+    } :+ ((key("k3"), tombstoneValue("k3", 99, 9900)))
 
-    val q = CdcStream.runDecodedStream(decoded, s"$root/cp1",
-      new ParquetSnapshotSink(s"$root/s1"),
+    val ms = MemoryStream[(String, String)]
+    records.foreach(r => ms.addData(r))
+    val q = CdcStream.runDecodedStream(
+      CdcStream.decodeKafka(ms.toDF().toDF("key", "value")), s"$root/cp",
+      new BucketedParquetSink(s"$root/s2", 4),
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
     q.awaitTermination()
 
-    val ms2 = MemoryStream[(String, String)]
-    (1 to 40).foreach { i =>
-      ms2.addData((key(s"k${i % 10}"), value(s"k${i % 10}", i.toLong, i * 100L,
-        1000L, i * 100L, s"m$i", "u")))
-    }
-    ms2.addData((key("k3"), tombstoneValue("k3", 99, 9900)))
-    val q2 = CdcStream.runDecodedStream(
-      CdcStream.decodeKafka(ms2.toDF().toDF("key", "value")), s"$root/cp2",
-      new BucketedParquetSink(s"$root/s2", 4),
-      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    q2.awaitTermination()
-
-    val v1 = CdcStream.readView(spark, s"$root/s1").orderBy("id")
-      .collect().map(_.toSeq).toSeq
+    // the reference: one batch materialization of every record, shaped
+    // like the view
+    val v1 = CdcStream.materialize(CdcStream.decodeKafka(records.toDF("key", "value")))
+      .select(col("id"), timestamp_millis(col("create_time")).as("create_time"),
+        timestamp_millis(col("update_time")).as("update_time"),
+        col("message"), col("username"))
+      .orderBy("id").collect().map(_.toSeq).toSeq
     val v2 = CdcStream.readView(spark, s"$root/s2").orderBy("id")
       .collect().map(_.toSeq).toSeq
     assert(v1 == v2 && v1.size == 9) // k3 tombstoned of the 10 keys

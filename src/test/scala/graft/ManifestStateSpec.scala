@@ -6,6 +6,7 @@ import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.CdcMerge
 import graft.streaming.{CdcStream, ManifestState}
 
 /** Manifest-committed bucketed CDC state: snapshot-isolated reads and
@@ -29,22 +30,19 @@ class ManifestStateSpec extends SparkSpec {
 
   test("sequential merges equal the single-writer bucketed merge") {
     val rootA = Files.createTempDirectory("mstate").toString
-    val rootB = Files.createTempDirectory("bstate").resolve("state").toString
     val batches = Seq(
       Seq(up("a", 1), up("b", 2), up("c", 3)),
       Seq(up("a", 4), del("b", 5), up("d", 6)),
       Seq(del("d", 7), up("b", 8), up("a", 2) /* stale redelivery */ ))
 
-    // the reference is the single-writer whole-snapshot merge: same
-    // latest-wins rows, no buckets
-    batches.foreach { b =>
-      ManifestState.mergeBatch(changes(b), rootA, nBuckets = 4)
-      CdcStream.mergeBatch(changes(b), rootB)
-    }
+    // the reference is one latest-wins pass over every batch: same
+    // rows, tombstones retained, no buckets
+    batches.foreach(b => ManifestState.mergeBatch(changes(b), rootA, nBuckets = 4))
     val got = ManifestState.read(spark, rootA)
       .select("id", "event_type", "lsn").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2))).sorted
-    val want = spark.read.parquet(rootB)
+    val want = CdcMerge.latestWins(changes(batches.flatten), Seq("id"),
+        Seq(col("lsn").desc_nulls_last, col("ts_ms").desc_nulls_last))
       .select("id", "event_type", "lsn").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2))).sorted
     assert(got.toSeq == want.toSeq, s"got ${got.toSeq}")
@@ -344,7 +342,7 @@ class ManifestStateSpec extends SparkSpec {
     refused(ManifestState.read(spark, s"$root/old"))
     refused(new graft.sinks.BucketedParquetSink(s"$root/old", 4).state(spark))
     refused(ManifestState.mergeBatch(changes(Seq(up("c", 3))), s"$root/old", 4))
-    refused(graft.streaming.SnapshotDiffView.readViewBucketed(spark, s"$root/old"))
+    refused(graft.streaming.SnapshotDiffView.readView(spark, s"$root/old"))
     assert(!Files.exists(Paths.get(root, "old", "MANIFEST")), "a refused merge committed")
 
     // the documented migration: its rows merged as one batch into a
@@ -360,5 +358,35 @@ class ManifestStateSpec extends SparkSpec {
     val fresh = ManifestState.read(spark, s"$root/fresh")
     assert(fresh.isEmpty &&
       fresh.dtypes.toSeq == ManifestState.read(spark, s"$root/new").dtypes.toSeq)
+  }
+
+  test("replay fence: a recorded id skips, a lower one throws, others carry it") {
+    val root = Files.createTempDirectory("mstate-fence").resolve("state").toString
+    def patch(rows: Seq[(String, String, Long)], batchId: Option[Long]): Boolean = {
+      val delta = changes(rows)
+      ManifestState.patchBuckets(root, 4, "id", delta.select("id"), CdcStream.changeSchema,
+          batchId = batchId) { current =>
+        current.join(delta.select("id"), Seq("id"), "left_anti").unionByName(delta)
+      }
+    }
+    def ids() = ManifestState.read(spark, root).select("id").collect().map(_.getString(0)).sorted.toSeq
+
+    assert(ManifestState.readManifest(root).applied.isEmpty)
+    assert(patch(Seq(up("a", 1)), Some(5L)))
+    assert(ManifestState.readManifest(root).applied.contains(5L))
+    // the same id again: skipped before any work, nothing committed
+    val epoch = ManifestState.readManifest(root).epoch
+    assert(!patch(Seq(up("b", 2)), Some(5L)))
+    assert(ManifestState.readManifest(root).epoch == epoch && ids() == Seq("a"))
+    // a commit naming no batch id carries the fence forward
+    assert(patch(Seq(up("c", 3)), None))
+    assert(ManifestState.readManifest(root).applied.contains(5L))
+    // an id below the fence is a desynced checkpoint — even when it
+    // touches no key at all
+    intercept[IllegalStateException](patch(Seq(up("d", 4)), Some(4L)))
+    intercept[IllegalStateException](patch(Seq.empty, Some(4L)))
+    assert(patch(Seq(up("d", 4)), Some(6L)))
+    assert(ManifestState.readManifest(root).applied.contains(6L))
+    assert(ids() == Seq("a", "c", "d"))
   }
 }

@@ -45,15 +45,15 @@ class Scd2ViewSpec extends SparkSpec {
     // batch 1: insert a, insert b
     Scd2View.mergeBatch(toDf(Seq(
       change("a", 1, "a-v1", "alice"),
-      change("b", 2, "b-v1", "bob"))), state)
+      change("b", 2, "b-v1", "bob"))), state, nBuckets = 1)
     // batch 2: update a, delete b
     Scd2View.mergeBatch(toDf(Seq(
       change("a", 3, "a-v2", "alice"),
-      change("b", 4, "", "", delete = true))), state)
+      change("b", 4, "", "", delete = true))), state, nBuckets = 1)
     // batch 3: update a again, resurrect b
     Scd2View.mergeBatch(toDf(Seq(
       change("a", 5, "a-v3", "alice"),
-      change("b", 6, "b-v2", "bob"))), state)
+      change("b", 6, "b-v2", "bob"))), state, nBuckets = 1)
 
     val got = dim(state)
     assert(got.toSeq == Seq(
@@ -68,15 +68,14 @@ class Scd2ViewSpec extends SparkSpec {
   test("a delete closes the open version and leaves NO current row") {
     val root = Files.createTempDirectory("scd2d").toString
     val state = s"$root/state"
-    Scd2View.mergeBatch(toDf(Seq(change("x", 1, "x-v1", "u"))), state)
-    Scd2View.mergeBatch(toDf(Seq(change("x", 2, "", "", delete = true))), state)
+    Scd2View.mergeBatch(toDf(Seq(change("x", 1, "x-v1", "u"))), state, nBuckets = 1)
+    Scd2View.mergeBatch(toDf(Seq(change("x", 2, "", "", delete = true))), state, nBuckets = 1)
     val got = dim(state)
     assert(got.toSeq == Seq(("x", "x-v1", Some(ts(2)), 1L, false)), s"got ${got.toSeq}")
     assert(!got.exists(_._5), "deleted id must have no current version")
   }
 
   test("bucketed sink equals the plain sink after every batch (incl. deletes, resurrection)") {
-    val plainState = s"${Files.createTempDirectory("scd2bp").toString}/state"
     val bRoot = Files.createTempDirectory("scd2bb").toString
     val batches = Seq(
       Seq(change("a", 1, "a-v1", "alice"), change("b", 2, "b-v1", "bob"),
@@ -84,17 +83,19 @@ class Scd2ViewSpec extends SparkSpec {
       Seq(change("a", 4, "a-v2", "alice"), change("b", 5, "", "", delete = true)),
       Seq(change("b", 6, "b-v2", "bob"), change("c", 7, "c-v2", "cyd")))
     batches.zipWithIndex.foreach { case (rows, i) =>
-      Scd2View.mergeBatch(toDf(rows), plainState)
-      Scd2View.mergeBatchBucketed(toDf(rows), bRoot, nBuckets = 8)
-      val plain = Scd2View.readDim(spark, plainState)
+      Scd2View.mergeBatch(toDf(rows), bRoot, nBuckets = 8)
+      // the reference: one merge of every event so far into a fresh root
+      val oneShot = s"${Files.createTempDirectory(s"scd2bp$i").toString}/state"
+      Scd2View.mergeBatch(toDf(batches.take(i + 1).flatten), oneShot, nBuckets = 1)
+      val want = Scd2View.readDim(spark, oneShot)
         .collect().map(_.toString).sorted.toSeq
-      val bucketed = Scd2View.readDimBucketed(spark, bRoot)
+      val bucketed = Scd2View.readDim(spark, bRoot)
         .collect().map(_.toString).sorted.toSeq
-      assert(bucketed == plain, s"batch $i: bucketed dim != plain dim")
+      assert(bucketed == want, s"batch $i: bucketed dim != one-shot dim")
     }
     // O(touched) rewrite: one id -> at most one superseded bucket
     val before = graft.streaming.ManifestState.readManifest(bRoot)
-    Scd2View.mergeBatchBucketed(toDf(Seq(change("a", 8, "a-v3", "alice"))), bRoot, 8)
+    Scd2View.mergeBatch(toDf(Seq(change("a", 8, "a-v3", "alice"))), bRoot, 8)
     val after = graft.streaming.ManifestState.readManifest(bRoot)
     val changed = after.buckets.filter { case (k, v) => before.buckets.get(k) != Some(v) }
     assert(changed.size == 1, s"single-id batch rewrote ${changed.size} buckets")
@@ -107,15 +108,15 @@ class Scd2ViewSpec extends SparkSpec {
     val b2 = Seq(change("a", 3, "a2", "u1"), change("b", 4, "", "", delete = true))
     val b3 = Seq(change("c", 5, "c1", "u3"), change("b", 6, "b2", "u2"))
 
-    Scd2View.mergeBatch(toDf(b1), s"$rootInc/state")
-    Scd2View.mergeBatch(toDf(b2), s"$rootInc/state")
-    Scd2View.mergeBatch(toDf(b3), s"$rootInc/state")
-    Scd2View.mergeBatch(toDf(b1 ++ b2 ++ b3), s"$rootAll/state")
+    Scd2View.mergeBatch(toDf(b1), s"$rootInc/state", nBuckets = 1)
+    Scd2View.mergeBatch(toDf(b2), s"$rootInc/state", nBuckets = 1)
+    Scd2View.mergeBatch(toDf(b3), s"$rootInc/state", nBuckets = 1)
+    Scd2View.mergeBatch(toDf(b1 ++ b2 ++ b3), s"$rootAll/state", nBuckets = 1)
     assert(dim(s"$rootInc/state").toSeq == dim(s"$rootAll/state").toSeq,
       "incremental != one-shot rebuild")
 
     // at-least-once: replaying the last batch changes nothing
-    Scd2View.mergeBatch(toDf(b3), s"$rootInc/state")
+    Scd2View.mergeBatch(toDf(b3), s"$rootInc/state", nBuckets = 1)
     assert(dim(s"$rootInc/state").toSeq == dim(s"$rootAll/state").toSeq,
       "replay broke idempotency")
   }
@@ -138,8 +139,8 @@ class Scd2ViewSpec extends SparkSpec {
 
       val rootInc = Files.createTempDirectory(s"scd2p$trial").toString
       val rootAll = Files.createTempDirectory(s"scd2q$trial").toString
-      batches.foreach(b => Scd2View.mergeBatch(toDf(b), s"$rootInc/state"))
-      Scd2View.mergeBatch(toDf(ops), s"$rootAll/state")
+      batches.foreach(b => Scd2View.mergeBatch(toDf(b), s"$rootInc/state", nBuckets = 1))
+      Scd2View.mergeBatch(toDf(ops), s"$rootAll/state", nBuckets = 1)
       assert(dim(s"$rootInc/state").toSeq == dim(s"$rootAll/state").toSeq,
         s"trial $trial: ${batches.map(_.size)} splits diverged from one-shot")
     }
@@ -159,7 +160,7 @@ class Scd2ViewSpec extends SparkSpec {
       rec("m", 2, Some(("second", "alice"))),
       rec("n", 3, Some(("only", "bob")))).mkString("\n").getBytes("UTF-8"))
 
-    val q = Scd2View.run(spark, in, s"$root/cp", s"$root/state")
+    val q = Scd2View.run(spark, in, s"$root/cp", s"$root/state", nBuckets = 1)
     q.awaitTermination()
 
     val got = Scd2View.readDim(spark, s"$root/state")
@@ -184,9 +185,9 @@ class Scd2ViewSpec extends SparkSpec {
       rec("m", 2, Some(("second", "alice"))),
       rec("n", 3, Some(("only", "bob")))).mkString("\n").getBytes("UTF-8"))
 
-    Scd2View.runBucketed(spark, in, s"$root/cp", s"$root/state", nBuckets = 8)
+    Scd2View.run(spark, in, s"$root/cp", s"$root/state", nBuckets = 8)
       .awaitTermination()
-    def dim() = Scd2View.readDimBucketed(spark, s"$root/state")
+    def dim() = Scd2View.readDim(spark, s"$root/state")
       .orderBy("id", "version").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(5), r.getBoolean(6)))
     assert(dim().toSeq == Seq(
@@ -198,7 +199,7 @@ class Scd2ViewSpec extends SparkSpec {
     Files.write(Paths.get(s"$in/b2.json"), Seq(
       rec("n", 4, None),
       rec("n", 5, Some(("back", "bob")))).mkString("\n").getBytes("UTF-8"))
-    Scd2View.runBucketed(spark, in, s"$root/cp", s"$root/state", nBuckets = 8)
+    Scd2View.run(spark, in, s"$root/cp", s"$root/state", nBuckets = 8)
       .awaitTermination()
     assert(dim().toSeq == Seq(
       ("m", "first", 1L, false), ("m", "second", 2L, true),
@@ -215,7 +216,7 @@ class Scd2ViewSpec extends SparkSpec {
     Scd2View.mergeBatch(toDf(Seq(
       (CdcStream.Upsert, "x", jl(5000), jl(5000), "v1", "u", 1L, 1000L),
       (CdcStream.Upsert, "x", jl(3000), jl(3000), "v2", "u", 2L, 2000L),
-      (CdcStream.Upsert, "x", jl(7000), jl(7000), "v3", "u", 3L, 3000L))), state)
+      (CdcStream.Upsert, "x", jl(7000), jl(7000), "v3", "u", 3L, 3000L))), state, nBuckets = 1)
 
     val got = Scd2View.readDim(spark, state).orderBy("version").collect()
       .map(r => (r.getString(1), r.getTimestamp(3), Option(r.getTimestamp(4)),

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
@@ -44,7 +44,7 @@ class SnapshotDiffViewSpec extends SparkSpec {
     val batches = Seq(b1, b2, b3)
     var seen = Seq.empty[(Long, String, Long, Double)]
     batches.zipWithIndex.foreach { case (b, i) =>
-      SnapshotDiffView.mergeBatch(ev(b), stateDir, diffDir, i.toLong)
+      SnapshotDiffView.mergeBatch(ev(b), stateDir, diffDir, i.toLong, nBuckets = 1)
       seen ++= b
       val got = SnapshotDiffView.readView(spark, stateDir)
         .select($"user_id", $"value").as[(Long, Double)].collect().toMap
@@ -75,8 +75,8 @@ class SnapshotDiffViewSpec extends SparkSpec {
     val (stateDir, diffDir) = (s"$root/state", s"$root/diff")
     import spark.implicits._
 
-    SnapshotDiffView.mergeBatch(ev(b1), stateDir, diffDir, 0L)
-    SnapshotDiffView.mergeBatch(ev(b2), stateDir, diffDir, 1L)
+    SnapshotDiffView.mergeBatch(ev(b1), stateDir, diffDir, 0L, nBuckets = 1)
+    SnapshotDiffView.mergeBatch(ev(b2), stateDir, diffDir, 1L, nBuckets = 1)
 
     // q150's spelling between cutoff T1 = end of batch 1 and T2 = end
     // of batch 2: one conditional max_by aggregate over ALL events.
@@ -107,104 +107,114 @@ class SnapshotDiffViewSpec extends SparkSpec {
     val (stateDir, diffDir) = (s"$root/state", s"$root/diff")
     import spark.implicits._
 
-    SnapshotDiffView.mergeBatch(ev(b1), stateDir, diffDir, 0L)
-    SnapshotDiffView.mergeBatch(ev(b2), stateDir, diffDir, 1L)
+    SnapshotDiffView.mergeBatch(ev(b1), stateDir, diffDir, 0L, nBuckets = 1)
+    SnapshotDiffView.mergeBatch(ev(b2), stateDir, diffDir, 1L, nBuckets = 1)
     val view = SnapshotDiffView.readView(spark, stateDir)
       .as[(Long, Timestamp, Long, Double)].collect().toSet
     val slice = SnapshotDiffView.readDiff(spark, diffDir, 1L).collect().toSet
 
-    SnapshotDiffView.mergeBatch(ev(b2), stateDir, diffDir, 1L) // replay
+    SnapshotDiffView.mergeBatch(ev(b2), stateDir, diffDir, 1L, nBuckets = 1) // replay
     assert(SnapshotDiffView.readView(spark, stateDir)
       .as[(Long, Timestamp, Long, Double)].collect().toSet == view)
     assert(SnapshotDiffView.readDiff(spark, diffDir, 1L).collect().toSet == slice)
   }
 
-  test("a crash between the swap's renames heals: state restores from its backup") {
-    import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
+  /** A whole snapshot as the retired directory swap left it: the state
+    * rows as top-level parquet, with the applied batch id beside them. */
+  private def retiredSnapshot(dir: String, rows: Seq[(Long, String, Long, Double)]): Unit = {
+    ev(rows).write.parquet(dir)
+    Files.write(Paths.get(dir, "_applied_batch"), "0".getBytes)
+  }
+
+  private def refusedNaming(what: String)(f: => Any): Unit = {
+    val e = intercept[IllegalArgumentException](f)
+    assert(e.getMessage.contains(what), e.getMessage)
+  }
+
+  test("a swap backup stranded by a crash is refused, naming the backup") {
     val root = Files.createTempDirectory("snapdiff5").toString
     val (stateDir, diffDir) = (s"$root/state", s"$root/diff")
     import spark.implicits._
 
-    SnapshotDiffView.mergeBatch(ev(b1), stateDir, diffDir, 0L)
-    val view = SnapshotDiffView.readView(spark, stateDir)
-      .select($"user_id", $"value").as[(Long, Double)].collect().toMap
-    // simulate dying between swapDirs' two renames: live dir gone,
-    // backup present (dot-prefixed so Spark readers skip it)
-    JFiles.move(Paths.get(stateDir), Paths.get(s"$root/.state.old"),
+    // dying between the retired swap's two renames left the live dir
+    // gone and its only copy in the dot-prefixed backup: read as empty,
+    // the next commit would reset the state
+    retiredSnapshot(s"$root/.state.old", b1)
+    refusedNaming(".state.old")(SnapshotDiffView.readView(spark, stateDir))
+    refusedNaming(".state.old")(
+      SnapshotDiffView.mergeBatch(ev(b2), stateDir, diffDir, 1L, nBuckets = 1))
+    assert(!Files.exists(Paths.get(stateDir)), "a refused merge committed")
+
+    // renamed back, it is a whole snapshot: refused with the remedy
+    Files.move(Paths.get(s"$root/.state.old"), Paths.get(stateDir),
       StandardCopyOption.ATOMIC_MOVE)
-    val healed = SnapshotDiffView.readView(spark, stateDir)
-      .select($"user_id", $"value").as[(Long, Double)].collect().toMap
-    assert(healed == view, "backup was not restored on read")
-    // and the next merge proceeds from the healed state, fence intact
-    SnapshotDiffView.mergeBatch(ev(b2), stateDir, diffDir, 1L)
-    assert(SnapshotDiffView.readView(spark, stateDir)
+    refusedNaming("re-bootstrap")(SnapshotDiffView.readView(spark, stateDir))
+    refusedNaming("re-bootstrap")(
+      SnapshotDiffView.mergeBatch(ev(b2), stateDir, diffDir, 1L, nBuckets = 1))
+    assert(!Files.exists(Paths.get(stateDir, "MANIFEST")), "a refused merge committed")
+
+    // the remedy: its rows merged as one batch into a fresh root, then
+    // the stream continues on top
+    val fresh = s"$root/fresh"
+    SnapshotDiffView.mergeBatch(spark.read.parquet(stateDir), fresh, s"$root/fdiff", 0L,
+      nBuckets = 1)
+    SnapshotDiffView.mergeBatch(ev(b2), fresh, s"$root/fdiff", 1L, nBuckets = 1)
+    assert(SnapshotDiffView.readView(spark, fresh)
       .select($"user_id", $"value").as[(Long, Double)].collect().toMap
       == naiveView(b1 ++ b2))
   }
 
-  test("a snapshot stranded under the LEGACY backup naming still heals when live is gone") {
-    import java.nio.file.{Files => JFiles, Paths => JPaths, StandardCopyOption}
+  test("a backup stranded under the LEGACY name is refused, naming the backup") {
     val root = Files.createTempDirectory("snapdiff7").toString
     val (stateDir, diffDir) = (s"$root/state", s"$root/diff")
-    import spark.implicits._
 
-    SnapshotDiffView.mergeBatch(ev(b1), stateDir, diffDir, 0L)
-    // pre-upgrade crash between the old swap's renames: the state
-    // survives ONLY as `state.old` (no dot prefix) — restore it rather
-    // than losing it
-    val legacy = JPaths.get(s"$root/state.old")
-    JFiles.move(JPaths.get(stateDir), legacy, StandardCopyOption.ATOMIC_MOVE)
-    assert(SnapshotDiffView.readView(spark, stateDir)
-      .select($"user_id", $"value").as[(Long, Double)].collect().toMap
-      == naiveView(b1), "legacy-named stranded state was not healed on read")
-
-    // a legacy backup beside a LIVE state is debris: the read path
-    // deletes it (current code never writes that name, so it cannot be
-    // a racing writer's in-flight backup) and never serves its rows
-    Seq((1L, Timestamp.valueOf("1999-01-01 00:00:00"), 1L, -999.0))
-      .toDF("user_id", "ts", "event_id", "value")
-      .write.parquet(legacy.toString)
-    assert(SnapshotDiffView.readView(spark, stateDir)
-      .select($"user_id", $"value").as[(Long, Double)].collect().toMap
-      == naiveView(b1), "legacy backup rows leaked into the view")
-    assert(!JFiles.exists(legacy), "legacy backup not cleaned up")
-
-    // and the next merge proceeds from the healed state, fence intact
-    SnapshotDiffView.mergeBatch(ev(b2), stateDir, diffDir, 1L)
-    assert(SnapshotDiffView.readView(spark, stateDir)
-      .select($"user_id", $"value").as[(Long, Double)].collect().toMap
-      == naiveView(b1 ++ b2))
+    // a crash under the pre-dot-prefix naming: the state survives ONLY
+    // as `state.old`
+    retiredSnapshot(s"$root/state.old", b1)
+    refusedNaming("state.old")(SnapshotDiffView.readView(spark, stateDir))
+    refusedNaming("state.old")(
+      SnapshotDiffView.mergeBatch(ev(b2), stateDir, diffDir, 1L, nBuckets = 1))
+    assert(!Files.exists(Paths.get(stateDir)), "a refused merge committed")
+    assert(Files.exists(Paths.get(s"$root/state.old", "_applied_batch")),
+      "the backup must be left as it was")
   }
 
   test("a batch id below the applied fence is an error, not a silent skip") {
     val root = Files.createTempDirectory("snapdiff6").toString
     val (stateDir, diffDir) = (s"$root/state", s"$root/diff")
-    SnapshotDiffView.mergeBatch(ev(b1), stateDir, diffDir, 0L)
-    SnapshotDiffView.mergeBatch(ev(b2), stateDir, diffDir, 1L)
+    SnapshotDiffView.mergeBatch(ev(b1), stateDir, diffDir, 0L, nBuckets = 1)
+    SnapshotDiffView.mergeBatch(ev(b2), stateDir, diffDir, 1L, nBuckets = 1)
     // checkpoint wiped while state survived -> ids restart at 0: the
     // merge must refuse (silently skipping would drop real batches)
     intercept[IllegalStateException] {
-      SnapshotDiffView.mergeBatch(ev(b3), stateDir, diffDir, 0L)
+      SnapshotDiffView.mergeBatch(ev(b3), stateDir, diffDir, 0L, nBuckets = 1)
     }
   }
 
   test("bucketed merge equals the plain merge: view and every diff slice") {
     val root = Files.createTempDirectory("snapdiffb").toString
     import spark.implicits._
+    // the reference: the naive recompute of the view, and each batch's
+    // diff classified by hand (the same fixture as the first case)
+    val wantDiffs = Seq(
+      Map(1L -> (None, 10.0, "added"), 2L -> (None, 20.0, "added"),
+          3L -> (None, 30.0, "added")),
+      Map(1L -> (Some(10.0), 15.5, "changed"), 3L -> (Some(30.0), 30.0, "same")),
+      Map(2L -> (Some(20.0), 20.0, "same"), 4L -> (None, 40.0, "added")))
+    var seen = Seq.empty[(Long, String, Long, Double)]
     Seq(b1, b2, b3).zipWithIndex.foreach { case (b, i) =>
-      SnapshotDiffView.mergeBatch(ev(b), s"$root/plain_state", s"$root/plain_diff", i.toLong)
-      SnapshotDiffView.mergeBatchBucketed(ev(b), s"$root/bkt_state", s"$root/bkt_diff",
+      SnapshotDiffView.mergeBatch(ev(b), s"$root/bkt_state", s"$root/bkt_diff",
         i.toLong, nBuckets = 8)
-    }
-    val plainView = SnapshotDiffView.readView(spark, s"$root/plain_state")
-      .select($"user_id", $"value").as[(Long, Double)].collect().toSet
-    val bktView = SnapshotDiffView.readViewBucketed(spark, s"$root/bkt_state")
-      .select($"user_id", $"value").as[(Long, Double)].collect().toSet
-    assert(bktView == plainView)
-    (0 to 2).foreach { i =>
-      val p = SnapshotDiffView.readDiff(spark, s"$root/plain_diff", i.toLong).collect().toSet
-      val b = SnapshotDiffView.readDiff(spark, s"$root/bkt_diff", i.toLong).collect().toSet
-      assert(b == p, s"diff slice $i diverged")
+      seen ++= b
+      val bktView = SnapshotDiffView.readView(spark, s"$root/bkt_state")
+        .select($"user_id", $"value").as[(Long, Double)].collect().toMap
+      assert(bktView == naiveView(seen), s"state drifted after batch $i")
+      val d = SnapshotDiffView.readDiff(spark, s"$root/bkt_diff", i.toLong)
+        .select($"user_id", $"v1_r", $"v2_r", $"status")
+        .collect().map(r => r.getLong(0) ->
+          (Option(r.get(1)).map(_.asInstanceOf[Double]), r.getDouble(2), r.getString(3)))
+        .toMap
+      assert(d == wantDiffs(i), s"diff slice $i diverged")
     }
   }
 
@@ -214,34 +224,62 @@ class SnapshotDiffViewSpec extends SparkSpec {
     val (st, df) = (s"$root/state", s"$root/diff")
     import spark.implicits._
 
-    SnapshotDiffView.mergeBatchBucketed(ev(b1), st, df, 0L, nBuckets = 8)
+    SnapshotDiffView.mergeBatch(ev(b1), st, df, 0L, nBuckets = 8)
     val before = ManifestState.readManifest(st)
 
     // a single-user batch touches exactly one bucket; every commit
     // names a fresh version, so an unchanged manifest entry proves an
     // untouched bucket was never rewritten
     val one = Seq((1L, "2024-01-15 10:00:00", 500L, 77.0))
-    SnapshotDiffView.mergeBatchBucketed(ev(one), st, df, 1L, nBuckets = 8)
+    SnapshotDiffView.mergeBatch(ev(one), st, df, 1L, nBuckets = 8)
     val after = ManifestState.readManifest(st)
     assert(after.epoch == before.epoch + 1)
     assert(after.buckets.keySet == before.buckets.keySet)
     val changed = after.buckets.keySet.filter(k => before.buckets(k) != after.buckets(k))
     assert(changed.size == 1, s"expected exactly one bucket rewritten: $changed")
-    assert(SnapshotDiffView.readViewBucketed(spark, st)
+    assert(SnapshotDiffView.readView(spark, st)
       .select($"user_id", $"value").as[(Long, Double)].collect().toMap
       == naiveView(b1 ++ one))
 
     // replay: view unchanged AND the committed diff slice survives
     // (a recompute against post-merge state would say "same", not
-    // "changed" — the _SUCCESS guard must prevent that)
+    // "changed" — the manifest's replay fence must prevent that)
     val slice = SnapshotDiffView.readDiff(spark, df, 1L).collect().toSet
-    SnapshotDiffView.mergeBatchBucketed(ev(one), st, df, 1L, nBuckets = 8)
+    SnapshotDiffView.mergeBatch(ev(one), st, df, 1L, nBuckets = 8)
+    assert(ManifestState.readManifest(st) == after, "a replay committed")
     assert(SnapshotDiffView.readDiff(spark, df, 1L).collect().toSet == slice)
-    assert(SnapshotDiffView.readViewBucketed(spark, st)
+    assert(SnapshotDiffView.readView(spark, st)
       .select($"user_id", $"value").as[(Long, Double)].collect().toMap
       == naiveView(b1 ++ one))
     assert(slice.exists(_.getString(3) == "changed"),
       "fixture must exercise the changed->same degradation hazard")
+  }
+
+  test("a root whose manifest records no batch id merges its next batch, then fences it") {
+    import graft.streaming.ManifestState
+    val root = Files.createTempDirectory("snapdiffup").toString
+    val (st, df) = (s"$root/state", s"$root/diff")
+    import spark.implicits._
+
+    // the retired bucketed merge wrote manifests without an "applied" id
+    SnapshotDiffView.mergeBatch(ev(b1), st, df, 0L, nBuckets = 1)
+    val mf = java.nio.file.Paths.get(st, "MANIFEST")
+    val text = new String(Files.readAllBytes(mf), "UTF-8")
+    Files.write(mf, text.replace(""","applied":0""", "").getBytes("UTF-8"))
+    assert(ManifestState.readManifest(st).applied.isEmpty)
+
+    val one = Seq((1L, "2024-01-15 10:00:00", 500L, 77.0))
+    SnapshotDiffView.mergeBatch(ev(one), st, df, 1L, nBuckets = 1)
+    val after = ManifestState.readManifest(st)
+    assert(after.applied.contains(1L))
+    val slice = SnapshotDiffView.readDiff(spark, df, 1L).collect().toSet
+    assert(slice.exists(_.getString(3) == "changed"))
+    SnapshotDiffView.mergeBatch(ev(one), st, df, 1L, nBuckets = 1)
+    assert(ManifestState.readManifest(st) == after, "a replay committed")
+    assert(SnapshotDiffView.readDiff(spark, df, 1L).collect().toSet == slice)
+    assert(SnapshotDiffView.readView(spark, st)
+      .select($"user_id", $"value").as[(Long, Double)].collect().toMap
+      == naiveView(b1 ++ one))
   }
 
   test("streaming run over a file source produces the same final view") {
@@ -259,7 +297,7 @@ class SnapshotDiffViewSpec extends SparkSpec {
       .schema(ev(b1).schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$inDir/f*")
-    SnapshotDiffView.run(src, s"$root/ckpt", stateDir, diffDir)
+    SnapshotDiffView.run(src, s"$root/ckpt", stateDir, diffDir, nBuckets = 1)
       .awaitTermination(60000)
 
     val got = SnapshotDiffView.readView(spark, stateDir)
