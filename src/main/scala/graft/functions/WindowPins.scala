@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
   * Use ONLY over frames bounded by construction. A corpus-grain frame
   * needs a real partitioning, a TakeOrdered bound, or the PrefixScan/
   * GlobalRank machinery instead — pinning it would hide the funnel,
-  * not fix it. graft.WindowScan lists every unpartitioned window in
-  * the catalog for exactly this audit.
+  * not fix it. PlanAssertionsSpec fails on every unpartitioned window
+  * in the catalog (past audits: docs/probes/windowscan_r16.txt).
   */
 object WindowPins {
 

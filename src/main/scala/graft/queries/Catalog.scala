@@ -7357,8 +7357,8 @@ object Catalog {
       // transactional state-commit overhead — 3 sequential horizons ×
       // (1 corpus append + 4 manifest commits), each a staged write +
       // manifest swap — which a live stream amortizes per trigger and
-      // which is FLAT in corpus size (IngestIndexBench's neardedup
-      // probe pins merge+read flatness and the file bound); the
+      // which is FLAT in corpus size (docs/probes/ingestidx_r16.txt's
+      // neardedup section pins merge+read flatness and the file bound); the
       // near-dup math itself already has headline rows (q98/q143).
       headline = false)
   )

@@ -1,8 +1,10 @@
 package graft.streaming
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Path, Paths, StandardCopyOption}
 import java.util.UUID
+
+import scala.annotation.tailrec
 
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -24,17 +26,20 @@ import graft.operators.CdcMerge
   * can catch a directory mid-move. Here:
   *
   *  - Layout: `root/b=<k>/v-<epoch>-<writer>/part-*.parquet` —
-  *    versions are immutable once written; `root/MANIFEST` maps each
-  *    bucket to its current version.
+  *    versions are immutable once written; `root/manifests/<epoch>`
+  *    maps each bucket to its version as of that commit, and
+  *    `root/MANIFEST` is a hint to the newest epoch.
   *  - Readers load the manifest once and read exactly the listed
   *    version dirs: a consistent snapshot, never a half-committed mix.
   *  - Writers do ALL heavy work (read touched buckets, union delta,
-  *    latest-wins, write new versions) outside any lock, then commit
-  *    under a short lock: re-read the manifest, and if another writer
-  *    committed since the snapshot was taken, abort, clean up, and
-  *    retry against the newer state (optimistic concurrency). The
-  *    lock guards only the manifest swap, so contention cost is
-  *    O(manifest), not O(data).
+  *    latest-wins, write new versions) first, then commit with one
+  *    exclusive publish of `manifests/<epoch+1>` ([[publish]]): the
+  *    archive is the commit log, and of all writers publishing one
+  *    epoch exactly one wins. A writer re-reads the manifest before it
+  *    publishes; if a commit since its snapshot touched its buckets, it
+  *    cleans up and retries against the newer state (optimistic
+  *    concurrency), and a lost publish re-runs that check at the new
+  *    newest epoch. Contention cost is O(manifest), not O(data).
   *  - GC keeps one superseded version per bucket as a grace window
   *    for readers that loaded the previous manifest, deleting older
   *    generations.
@@ -43,10 +48,12 @@ import graft.operators.CdcMerge
   *    a later commit of the same id is skipped, a lower one refused
   *    ([[fenced]]).
   *
-  * The lock is a CREATE_NEW file with stale-age takeover — correct on
-  * a POSIX filesystem (atomic exclusive create); an object-store
-  * deployment swaps it for the store's conditional-put, with the rest
-  * of the protocol unchanged.
+  * State roots are local paths ([[localRoot]]): the publish is a hard
+  * link, and link(2) refuses an existing name atomically. Spark's
+  * `createAtomic(…, overwriteIfPossible = false)` is not exclusive —
+  * it checks `exists` and then renames, and a local rename replaces
+  * the target. A store without hard links needs its conditional put in
+  * [[publish]], with the rest of the protocol unchanged.
   *
   * Empty-state contract: every access names the state's schema, and a
   * root with no committed bucket reads as zero rows of it ([[empty]]),
@@ -94,20 +101,19 @@ object ManifestState {
 
   /** Count of parquet DATA files under `root`'s bucket dirs (`b=k/…`)
     * — the scan surface the steady-state bound `nBuckets ×
-    * (1 + keepGenerations)` governs; manifest/lock bookkeeping files
-    * are excluded. One shared spelling for every probe that asserts
-    * the bound (local-filesystem walk: the probes run local). */
+    * (1 + keepGenerations)` governs; manifest files are excluded. One
+    * shared spelling for every probe that asserts the bound. */
   def dataFileCount(root: String): Long = {
-    val p = java.nio.file.Path.of(root)
+    val p = localRoot(root)
     // committed version dirs only (root/b=<k>/v-.../...): an in-flight
     // or crashed-pre-cleanup write's .stage-<version>/b=<k>/ files also
     // contain "/b=", and a probe sampling during a concurrent commit
     // would spuriously breach the steady-state bound if they counted
     val committed = java.util.regex.Pattern.compile("/b=\\d+/v-[^/]+/")
-    if (!java.nio.file.Files.exists(p)) 0L
+    if (!Files.exists(p)) 0L
     else {
-      val s = java.nio.file.Files.walk(p)
-      try s.filter(f => java.nio.file.Files.isRegularFile(f) &&
+      val s = Files.walk(p)
+      try s.filter(f => Files.isRegularFile(f) &&
         committed.matcher(f.toString).find() && f.toString.endsWith(".parquet")).count()
       finally s.close()
     }
@@ -128,8 +134,6 @@ object ManifestState {
     * no batch id carries it forward. */
   final case class Manifest(epoch: Long, buckets: Map[Int, String],
                             nb: Option[Int] = None, applied: Option[Long] = None)
-
-  private val writerId = UUID.randomUUID().toString.take(8)
 
   // -- manifest codec (tiny hand-rolled JSON — no extra deps) ---------
 
@@ -246,22 +250,63 @@ object ManifestState {
     }
   }
 
-  def readManifest(root: String): Manifest = {
-    val p = Paths.get(root, "MANIFEST")
-    if (Files.exists(p))
-      parse(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
-    else Manifest(0L, Map.empty)
+  /** `root` as a local path. A root with a URI scheme (`hdfs://…`,
+    * `s3a://…`, `file:/…`) is refused: `Paths.get` would make it a
+    * relative path under the working directory, while Spark wrote the
+    * parquet to the store itself, so the commit would find no staged
+    * bucket and record every touched bucket as emptied. */
+  private def localRoot(root: String): Path = {
+    """^([A-Za-z][A-Za-z0-9+.-]*):""".r.findFirstMatchIn(root).foreach { m =>
+      throw new IllegalArgumentException(
+        s"state root $root names the URI scheme '${m.group(1)}'; ManifestState " +
+        "roots are local paths (commits publish by hard link), so give the bare path")
+    }
+    Paths.get(root)
   }
 
-  /** Manifest as of a past commit (time travel). Every commit archives
-    * its manifest under `manifests/<epoch>` — a few bytes each, kept
-    * until [[pruneArchivedManifests]]; whether the DATA a historical
+  private def parseFile(p: Path): Option[Manifest] =
+    try Some(parse(new String(Files.readAllBytes(p), StandardCharsets.UTF_8)))
+    catch { case _: NoSuchFileException => None }
+
+  private def archivedEpochs(hist: Path): Array[Long] =
+    if (!Files.isDirectory(hist)) Array.empty
+    else {
+      val listing = Files.list(hist)
+      try listing.toArray.map(_.toString)
+        .flatMap(p => scala.util.Try(p.substring(p.lastIndexOf('/') + 1).toLong).toOption)
+      finally listing.close()
+    }
+
+  /** The newest committed manifest: the `MANIFEST` hint, walked forward
+    * while `manifests/<epoch+1>` exists. The hint can lag (a crash
+    * between publish and hint, or a slower writer's late hint); when
+    * its own archive was pruned, the walk starts from the newest
+    * archived epoch instead — pruning keeps a contiguous newest suffix. */
+  def readManifest(root: String): Manifest = {
+    val dir = localRoot(root)
+    val hist = dir.resolve("manifests")
+    val hint = parseFile(dir.resolve("MANIFEST")).getOrElse(Manifest(0L, Map.empty))
+    val start =
+      if (Files.exists(hist.resolve(hint.epoch.toString))) hint
+      else archivedEpochs(hist).maxOption.filter(_ > hint.epoch)
+        .flatMap(e => parseFile(hist.resolve(e.toString))).getOrElse(hint)
+    @tailrec def walk(m: Manifest): Manifest =
+      parseFile(hist.resolve((m.epoch + 1).toString)) match {
+        case Some(next) => walk(next)
+        case None => m
+      }
+    walk(start)
+  }
+
+  /** Manifest as of a past commit (time travel). Every commit is the
+    * publish of `manifests/<epoch>` — a few bytes each, kept until
+    * [[pruneArchivedManifests]]; whether the DATA a historical
     * manifest references still exists is governed by `keepGenerations`
     * at merge time. */
   def readManifestAt(root: String, epoch: Long): Manifest = {
-    val p = Paths.get(root, "manifests", epoch.toString)
-    require(Files.exists(p), s"no archived manifest for epoch $epoch at $p")
-    parse(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+    val p = localRoot(root).resolve("manifests").resolve(epoch.toString)
+    parseFile(p).getOrElse(
+      throw new IllegalArgumentException(s"no archived manifest for epoch $epoch at $p"))
   }
 
   /** Archived-manifest retention: delete `root/manifests/<epoch>`
@@ -273,110 +318,52 @@ object ManifestState {
     * is part of the operational contract (call it at checkpoint-
     * compaction cadence). Pruning only bounds TIME TRAVEL depth
     * ([[readAt]]/[[changesBetween]] need both endpoints' archives);
-    * the live MANIFEST, the data, and crash recovery are untouched.
-    * Never prunes below keepLast = 1. */
+    * the newest `keepLast` epochs, the data and the commit are
+    * untouched. Deleting oldest first keeps a contiguous newest suffix,
+    * which [[readManifest]] relies on. A pruned name is free again: a
+    * concurrent writer that reads epoch e, then stalls while `keepLast`
+    * + 1 other commits and a prune pass, would publish e + 1 below the
+    * newest epoch, where no reader looks. So a root with several
+    * writers keeps `keepLast` above the commits a writer can fall
+    * behind by. Never prunes below keepLast = 1. */
   def pruneArchivedManifests(root: String, keepLast: Int): Long = {
     require(keepLast >= 1, "must keep at least the latest archived manifest")
-    val hist = Paths.get(root, "manifests")
-    if (!Files.isDirectory(hist)) return 0L
-    val listing = Files.list(hist)
-    val epochs =
-      try listing.toArray.map(_.toString)
-        .flatMap(p => scala.util.Try(
-          p.substring(p.lastIndexOf('/') + 1).toLong).toOption)
-      finally listing.close()
-    val doomed = epochs.sorted.dropRight(keepLast)
+    val hist = localRoot(root).resolve("manifests")
+    val doomed = archivedEpochs(hist).sorted.dropRight(keepLast)
     doomed.foreach(e => Files.deleteIfExists(hist.resolve(e.toString)))
     doomed.length.toLong
   }
 
-  private def writeManifest(root: String, m: Manifest): Unit = {
-    val tmp = Paths.get(root, s"MANIFEST.tmp-$writerId")
-    Files.write(tmp, render(m).getBytes(StandardCharsets.UTF_8))
-    // archive first, then swap the current pointer: a crash between
-    // the two loses only the archive copy of an uncommitted epoch
-    val hist = Paths.get(root, "manifests")
-    Files.createDirectories(hist)
-    Files.write(hist.resolve(m.epoch.toString),
-      render(m).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(root, "MANIFEST"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  // -- lock: atomic exclusive create + stale takeover -----------------
-
-  /** Acquire `root/LOCK`, run `f` with an ownership token, release.
-    *
-    * Stale takeover cannot be made race-free with delete+create alone:
-    * two breakers can both observe staleness, the first re-acquires,
-    * and the second would delete a FRESH lock (two holders). Two
-    * defenses close this:
-    *  - takeover captures the stale file by an ATOMIC_MOVE to a unique
-    *    tombstone (only one breaker can capture it) before deleting;
-    *  - `f` receives a token and must call [[stillHolds]] immediately
-    *    before its irreversible step — if a breaker stole the lock
-    *    despite the above (arbitrarily long pause between acquire and
-    *    commit), the victim observes foreign lock content and aborts.
-    * The residual window (holder verifies, then pauses > staleMs
-    * before the manifest move) is the same lease-expiry caveat every
-    * lock-without-storage-fencing has; an object-store deployment
-    * replaces this file dance with a conditional-put and loses the
-    * caveat too.
-    */
-  private def withLock[T](root: String, timeoutMs: Long = 30000,
-                          staleMs: Long = 60000)(f: String => T): T = {
-    val lock = Paths.get(root, "LOCK")
-    val token = s"$writerId-${UUID.randomUUID().toString.take(8)}"
-    val deadline = System.currentTimeMillis() + timeoutMs
-    var held = false
-    while (!held) {
-      try {
-        Files.write(lock,
-          s"$token ${System.currentTimeMillis()}".getBytes(StandardCharsets.UTF_8),
-          StandardOpenOption.CREATE_NEW)
-        held = true
-      } catch {
-        case _: FileAlreadyExistsException =>
-          val age = try System.currentTimeMillis() -
-            Files.getLastModifiedTime(lock).toMillis
-          catch { case _: java.io.IOException => 0L } // vanished — retry
-          if (age > staleMs) {
-            // capture-then-verify-then-delete: the atomic move admits
-            // exactly one breaker; if what we captured turns out FRESH
-            // (the holder re-acquired between our staleness check and
-            // the move) we restore it best-effort — and even when the
-            // restore loses a race, the falsely-evicted holder self-
-            // detects via stillHolds before committing
-            val tomb = Paths.get(root, s"LOCK.broken-$token")
-            try {
-              Files.move(lock, tomb, StandardCopyOption.ATOMIC_MOVE)
-              val content = new String(Files.readAllBytes(tomb), StandardCharsets.UTF_8)
-              val heldSince = content.split(" ").lift(1).flatMap(
-                t => scala.util.Try(t.toLong).toOption).getOrElse(0L)
-              if (System.currentTimeMillis() - heldSince > staleMs)
-                Files.deleteIfExists(tomb) // genuinely dead holder
-              else
-                try Files.move(tomb, lock, StandardCopyOption.ATOMIC_MOVE)
-                catch { case _: java.io.IOException => Files.deleteIfExists(tomb) }
-            } catch { case _: java.io.IOException => () } // lost the capture race
-          } else if (System.currentTimeMillis() > deadline)
-            throw new IllegalStateException(s"lock timeout on $lock")
-          else Thread.sleep(20)
-      }
+  /** Commit `m`: hard-link a fully written temp file to
+    * `manifests/<m.epoch>`. link(2) fails with EEXIST when the name is
+    * taken, so of all writers publishing one epoch exactly one wins;
+    * false means another commit took it. The winner then overwrites
+    * the `MANIFEST` hint, best effort. Temp files are named per call,
+    * not per JVM — threads of one JVM publish concurrently — and live
+    * in `root`, so `manifests/` holds epochs only. Package-visible for
+    * the race spec; every commit goes through [[optimisticCommit]]. */
+  private[graft] def publish(root: String, m: Manifest): Boolean = {
+    val dir = Paths.get(root)
+    val hist = Files.createDirectories(dir.resolve("manifests"))
+    val bytes = render(m).getBytes(StandardCharsets.UTF_8)
+    def temp() = dir.resolve(s".manifest-${m.epoch}-${UUID.randomUUID()}.tmp")
+    val tmp = Files.write(temp(), bytes)
+    // nothing after a won link may throw: the caller would take the
+    // commit for a lost race and delete the versions it just published
+    def bestEffort(f: => Any): Unit = try f catch { case _: java.io.IOException => () }
+    val won =
+      try { Files.createLink(hist.resolve(m.epoch.toString), tmp); true }
+      catch { case _: FileAlreadyExistsException => false }
+      finally bestEffort(Files.deleteIfExists(tmp))
+    if (won) {
+      val hint = temp()
+      bestEffort(
+        try Files.move(Files.write(hint, bytes), dir.resolve("MANIFEST"),
+          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+        finally Files.deleteIfExists(hint))
     }
-    try f(token) finally {
-      // delete only our own lock — if a breaker stole it, the current
-      // file belongs to someone else
-      if (stillHolds(root, token))
-        try Files.deleteIfExists(lock) catch { case _: java.io.IOException => () }
-    }
+    won
   }
-
-  /** True iff `root/LOCK` still carries this holder's token. */
-  private def stillHolds(root: String, token: String): Boolean =
-    try new String(Files.readAllBytes(Paths.get(root, "LOCK")),
-                   StandardCharsets.UTF_8).startsWith(token + " ")
-    catch { case _: java.io.IOException => false }
 
   // -- snapshot reads -------------------------------------------------
 
@@ -480,7 +467,7 @@ object ManifestState {
     * (JoinView, Scd2View) use as their production sink: rewrite ONLY
     * the buckets that `touchedKeys` (single-column frame named
     * `keyCol`, O(batch) rows by contract) hash to, committing through
-    * the same manifest/lock/GC protocol as [[mergeBatch]].
+    * the same manifest/GC protocol as [[mergeBatch]].
     *
     * `buildMerged` receives the CURRENT full content of the affected
     * buckets (zero rows of `schema` when the state is new) and
@@ -550,9 +537,9 @@ object ManifestState {
   }
 
   /** The shared optimistic heavy-phase + commit loop: read affected
-    * buckets, `buildMerged`, stage, per-bucket atomic move, manifest
-    * compare+swap under the lock, GC. False when the fence skipped a
-    * batch another commit applied first. */
+    * buckets, `buildMerged`, stage, per-bucket atomic move, exclusive
+    * manifest publish, GC. False when the fence skipped a batch another
+    * commit applied first. */
   private def optimisticCommit(spark: SparkSession, root: String,
                                affected: IndexedSeq[Int], nBuckets: Int,
                                keyCol: String, schema: StructType,
@@ -589,7 +576,7 @@ object ManifestState {
         }
       }
       try {
-        // heavy phase — no lock held
+        // heavy phase
         val current = readSnapshot(spark, root,
           base.buckets.filter { case (k, _) => affected.contains(k) }, schema)
         val merged = buildMerged(current)
@@ -613,15 +600,14 @@ object ManifestState {
         val emptied = affected.diff(written)
         FsUtil.deleteRecursively(Paths.get(tmp))
 
-        // commit phase — lock guards only the manifest compare+swap.
-        // Conflict detection is PER-BUCKET: a concurrent commit to
-        // disjoint buckets does not invalidate this one (a global
-        // epoch compare would make disjoint writers livelock under
-        // load). stillHolds closes the lease-theft edge (withLock doc).
-        committed = withLock(root) { token =>
+        // commit phase. Conflict detection is PER-BUCKET: a concurrent
+        // commit to disjoint buckets does not invalidate this one (a
+        // global epoch compare would make disjoint writers livelock
+        // under load). A publish lost to another commit of the same
+        // epoch re-runs the checks against the winner.
+        @tailrec def commit(): Boolean = {
           val now = readManifest(root)
-          // re-validate the bucket count UNDER the lock: two
-          // simultaneous FIRST writers with different counts and
+          // two simultaneous FIRST writers with different counts and
           // disjoint buckets would both pass the per-bucket conflict
           // check (the pre-loop require saw nb = None for both); the
           // loser must not stamp its count over the winner's state.
@@ -634,14 +620,13 @@ object ManifestState {
           val fenceConflict = batchId.exists(id => now.applied.exists(_ >= id))
           val conflict = nbConflict || fenceConflict || affected.exists(k =>
             now.buckets.get(k) != base.buckets.get(k))
-          if (!conflict && stillHolds(root, token)) {
-            writeManifest(root,
-              Manifest(now.epoch + 1,
-                now.buckets ++ written.map(k => k -> version) -- emptied,
-                Some(nBuckets), batchId.orElse(now.applied)))
-            true
-          } else false
+          if (conflict) false
+          else if (publish(root, Manifest(now.epoch + 1,
+              now.buckets ++ written.map(k => k -> version) -- emptied,
+              Some(nBuckets), batchId.orElse(now.applied)))) true
+          else commit()
         }
+        committed = commit()
       } catch {
         // a deterministic caller bug is not a race: buildMerged is
         // caller-supplied since the patchBuckets refactor, and a

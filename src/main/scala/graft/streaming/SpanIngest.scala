@@ -22,7 +22,7 @@ import graft.operators.{DupSpans, Winnow}
   * source column). Here the batch is grammed ONCE with the source
   * carried, materialized, and fed to both twins' merge bodies; the
   * coverage path ignores the extra column. Measured honestly
-  * (SpanIngestBench, 200- and 4000-doc batches): the shared pass
+  * (docs/probes/spaningest_r15.txt, 200- and 4000-doc batches): the shared pass
   * saves 2-4% of per-batch compute — each twin's own state
   * maintenance (candidate joins, interval unions, two bucket patches)
   * dominates — so the operational win is the composition itself: one
@@ -89,8 +89,7 @@ object SpanIngest {
     * candidate joins and seven bucket patches still dominate — the
     * operational win remains ONE source read, ONE checkpoint, one
     * at-least-once redelivery unit for all three accountings
-    * (SpanIngestBench's 3-way section measures the ratio; see
-    * docs/probes/spaningest3_r16.txt). */
+    * (docs/probes/spaningest3_r16.txt measures the ratio). */
   def mergeBatchAll(batch: DataFrame, textCol: String, idCol: String,
                     sourceCol: String,
                     covIndexDir: String, covDir: String,

@@ -389,4 +389,72 @@ class ManifestStateSpec extends SparkSpec {
     assert(ManifestState.readManifest(root).applied.contains(6L))
     assert(ids() == Seq("a", "c", "d"))
   }
+
+  test("racing publishers of one epoch: exactly one wins each round") {
+    val root = Files.createTempDirectory("mstate-race")
+    val (threads, rounds) = (4, 500)
+    val barrier = new java.util.concurrent.CyclicBarrier(threads)
+    val wins = new java.util.concurrent.atomic.AtomicIntegerArray(rounds + 1)
+    val pool = Executors.newFixedThreadPool(threads)
+    val runs = (0 until threads).map { t =>
+      pool.submit(new Runnable {
+        override def run(): Unit = (1 to rounds).foreach { r =>
+          barrier.await()
+          if (ManifestState.publish(root.toString,
+              ManifestState.Manifest(r.toLong, Map(0 -> s"v-$r-t$t")))) wins.incrementAndGet(r)
+        }
+      })
+    }
+    pool.shutdown()
+    assert(pool.awaitTermination(120, TimeUnit.SECONDS), "publishers timed out")
+    runs.foreach(_.get()) // surfaces a publisher's exception
+    val multi = (1 to rounds).filter(r => wins.get(r) != 1)
+    assert(multi.isEmpty, s"rounds without exactly one winner: ${multi.map(r => r -> wins.get(r))}")
+    assert(ManifestState.readManifest(root.toString).epoch == rounds)
+    // temp files are gone, and manifests/ holds epochs only
+    val left = Files.list(root).toArray.map(_.toString.split('/').last).sorted.toSeq
+    assert(left == Seq("MANIFEST", "manifests"), s"left in root: $left")
+    assert(Files.list(root.resolve("manifests")).toArray.length == rounds)
+  }
+
+  test("a stale MANIFEST hint over a pruned archive reads, and commits, at the newest epoch") {
+    val root = Files.createTempDirectory("mstate-hint").toString
+    val hint = Paths.get(root, "MANIFEST")
+    ManifestState.mergeBatch(changes(Seq(up("a", 1))), root, 2)
+    ManifestState.mergeBatch(changes(Seq(up("b", 2))), root, 2)
+    val old = Files.readAllBytes(hint)
+    ManifestState.mergeBatch(changes(Seq(up("c", 3))), root, 2)
+    ManifestState.mergeBatch(changes(Seq(up("d", 4))), root, 2)
+    // a crash between publish and hint, or a slower writer's late hint
+    Files.write(hint, old)
+    assert(ManifestState.readManifest(root).epoch == 4)
+    // ... whose own archive is pruned away
+    assert(ManifestState.pruneArchivedManifests(root, keepLast = 1) == 3L)
+    assert(ManifestState.readManifest(root).epoch == 4)
+    ManifestState.mergeBatch(changes(Seq(up("e", 5))), root, 2)
+    assert(ManifestState.readManifest(root).epoch == 5)
+    val ids = ManifestState.readView(spark, root).select("id").collect().map(_.getString(0)).sorted
+    assert(ids.toSeq == Seq("a", "b", "c", "d", "e"))
+  }
+
+  test("a state root with a URI scheme is refused, and nothing lands under the working directory") {
+    val roots = Seq("hdfs://nn:8020/graft/state" -> "hdfs", "s3a://bucket/graft/state" -> "s3a",
+      "file:/tmp/graft-state" -> "file", "file:///tmp/graft-state" -> "file")
+    roots.foreach { case (root, scheme) =>
+      def refused(f: => Any): Unit = {
+        val e = intercept[IllegalArgumentException](f)
+        assert(e.getMessage.contains(s"'$scheme'"), e.getMessage)
+      }
+      refused(ManifestState.mergeBatch(changes(Seq(up("a", 1))), root, 2))
+      refused(ManifestState.patchBuckets(root, 2, "id", changes(Seq(up("a", 1))).select("id"),
+        CdcStream.changeSchema)(identity))
+      refused(ManifestState.read(spark, root))
+      refused(ManifestState.readManifest(root))
+      refused(ManifestState.readManifestAt(root, 1))
+      refused(ManifestState.pruneArchivedManifests(root, 1))
+      refused(ManifestState.dataFileCount(root))
+      val local = Paths.get(s"$scheme:")
+      assert(!Files.exists(local), s"$local was created under the working directory")
+    }
+  }
 }

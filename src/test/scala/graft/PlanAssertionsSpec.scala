@@ -157,7 +157,7 @@ class PlanAssertionsSpec extends SparkSpec {
   }
 
   test("catalog-wide: NO query plans an unpartitioned WindowExec") {
-    // The standing invariant behind graft.WindowScan: every window in
+    // The standing invariant of docs/probes/windowscan_r16.txt: every window in
     // every catalog query carries a DEFINED partition spec — real keys
     // for corpus-grain windows, WindowPins.gpin for intentionally
     // single-group windows over bounded (grain-collapsed) frames. An
