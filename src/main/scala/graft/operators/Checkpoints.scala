@@ -112,4 +112,21 @@ object Checkpoints {
       if (q != null) drain(q)
     }
   }
+
+  /** Run `body` and unpersist exactly the frames it tracked on this
+    * thread, when it returns or throws. Frames the thread tracked
+    * before the scope stay tracked, and other threads' frames are never
+    * touched — the release for an operator that consumes everything it
+    * tracks before returning (the streaming ingest merges), where
+    * [[releaseAll]] would yank other threads' in-flight blocks. */
+  def scoped[T](body: => T): T = {
+    val t = Thread.currentThread()
+    val outer = live.remove(t)
+    try body
+    finally {
+      val inner = live.remove(t)
+      if (outer != null) live.put(t, outer)
+      if (inner != null) drain(inner)
+    }
+  }
 }

@@ -2,10 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.DupSpans
+import graft.operators.{Checkpoints, DupSpans}
+import graft.streaming.BucketedIngest.{DefaultBuckets, State, pin}
 
 /** Exact duplicated-span coverage ON INGEST: the streaming twin of
   * `q177_incremental_dupspan`, layered the way [[WinnowIngest]] twins
@@ -24,7 +24,7 @@ import graft.operators.DupSpans
   *      `covDir` (bucket by doc_id, min-merged content — see
   *      [[coverages]]) and the batch's per-gram (min_id, max_id) into
   *      the bucketed index at `indexDir` (ManifestState layout — see
-  *      the bucket notes on [[DefaultIndexBuckets]]).
+  *      the index notes below).
   *
   * Replay idempotence (at-least-once redelivery): the index stores
   * per-gram MIN and MAX document ids, not a bare hash set, and the
@@ -43,19 +43,17 @@ import graft.operators.DupSpans
   * stays ONE row per gram — a boilerplate gram carried by millions of
   * documents is still a single index row, so the probe join never
   * fans out by occurrence count.
+  *
+  * The gram index lives in [[ManifestState]]'s bucketed layout (bucket
+  * by h): each batch REWRITES only the buckets its grams hash to with
+  * pre-merged (h, min_id, max_id) content, instead of appending one
+  * parquet fragment per batch — so the file count is bounded by
+  * `nBuckets × (1 + keepGenerations)` forever, the probe reads only the
+  * batch's buckets, and nothing ever re-aggregates the whole index per
+  * batch (a thousand-batch stream would otherwise pay a thousand-file
+  * O(index) re-agg every batch).
   */
 object DupSpanIngest {
-
-  /** Index buckets. The gram index lives in [[ManifestState]]'s
-    * bucketed layout (bucket by h): each batch REWRITES only the
-    * buckets its grams hash to with pre-merged (h, min_id, max_id)
-    * content, instead of appending one parquet fragment per batch —
-    * so the file count is bounded by `nBuckets × (1 + keepGenerations)`
-    * forever, the probe reads only the batch's buckets, and nothing
-    * ever re-aggregates the whole index per batch (a thousand-batch
-    * stream would otherwise pay a thousand-file O(index) re-agg every
-    * batch). */
-  val DefaultIndexBuckets = 64
 
   private val IndexSchema =
     StructType.fromDDL("h BIGINT NOT NULL, min_id BIGINT NOT NULL, max_id BIGINT NOT NULL")
@@ -95,7 +93,7 @@ object DupSpanIngest {
     *
     * Replay precondition: redelivery is idempotent for the MOST RECENT
     * batch (structured streaming's at-least-once contract — exactly
-    * what the [[run]] path can replay). Re-merging an OLDER batch
+    * what a streaming driver can replay). Re-merging an OLDER batch
     * after later ingests re-scores it against an index that has since
     * gained carriers; the index itself stays correct (min/max merge is
     * order-independent), and [[coverages]]' min-merge keeps the
@@ -103,12 +101,12 @@ object DupSpanIngest {
     * re-score (spec-asserted). */
   def mergeBatch(batch: DataFrame, textCol: String, idCol: String,
                  indexDir: String, covDir: String, k: Int = 5,
-                 nBuckets: Int = DefaultIndexBuckets): Unit = {
-    val g = DupSpans.grams(batch, textCol, idCol, k)
-      .localCheckpoint() // three consumers below + the index patch
-    mergeFromGrams(batch, g, textCol, idCol, indexDir, covDir, k, nBuckets)
-    graft.operators.Iterate.unpersistCheckpoint(g)
-  }
+                 nBuckets: Int = DefaultBuckets): Unit =
+    Checkpoints.scoped {
+      // three consumers below + the index patch
+      val g = pin(DupSpans.grams(batch, textCol, idCol, k))
+      mergeFromGrams(batch, g, textCol, idCol, indexDir, covDir, k, nBuckets)
+    }
 
   /** The merge body over a PRECOMPUTED (and materialized) gram frame —
     * the seam [[SpanIngest]] uses to share ONE gram pass between this
@@ -121,24 +119,24 @@ object DupSpanIngest {
                  textCol: String, idCol: String,
                  indexDir: String, covDir: String, k: Int,
                  nBuckets: Int): Unit =
-    synchronized {
+    synchronized(Checkpoints.scoped {
       // ONE aggregation pass serves both per-gram consumers: the
       // index delta (min/max id) and the within-batch duplicate
       // predicate (distinct-doc count) — two separate groupBys would
       // shuffle the gram frame twice per batch for nothing.
-      val stats = g.groupBy(col("h"))
+      // bucket list + join + patch retries
+      val stats = pin(g.groupBy(col("h"))
         .agg(min(col(idCol)).as("min_id"), max(col(idCol)).as("max_id"),
-             countDistinct(col(idCol)).as("nd"))
-        .localCheckpoint() // probe bucket-list + join + patch retries
+             countDistinct(col(idCol)).as("nd")))
       val bagg = stats.select(col("h"), col("min_id"), col("max_id"))
       val perHash = stats.select(col("h"), col("nd"))
       // Probe ONLY the touched buckets: every history row relevant to
       // this batch has a gram hash the batch carries, and that hash
       // routes to a touched bucket by construction — per-batch read
       // cost follows the batch's bucket footprint, never index size.
-      val buckets = ManifestState.bucketsOf(bagg, "h", nBuckets)
-      val hist = ManifestState.readBucketsOf(
-        batch.sparkSession, indexDir, nBuckets, buckets, IndexSchema)
+      // The index patch below rewrites the same buckets.
+      val index = State(indexDir, "h", IndexSchema, nBuckets).touch(bagg)
+      val hist = index.read
       val dupPos = g
         .join(perHash, "h")
         .join(hist, Seq("h"), "left")
@@ -148,13 +146,12 @@ object DupSpanIngest {
         .select(col(idCol), col("pos"))
       val cov = DupSpans.intervalUnion(dupPos, Seq(idCol), k)
         .withColumnRenamed("tokens", "dup_tokens")
-      val rows = batch.filter(col(textCol).isNotNull)
+      val rows = pin(batch.filter(col(textCol).isNotNull)
         .select(col(idCol),
           graft.functions.TextFunctions.tokenCount(col(textCol)).as("n_tokens"))
         .join(cov, Seq(idCol), "left")
         .select(col(idCol).as("doc_id"), col("n_tokens"),
-          coalesce(col("dup_tokens"), lit(0L)).as("dup_tokens"))
-        .localCheckpoint() // bucket list + patch closure (and its retries)
+          coalesce(col("dup_tokens"), lit(0L)).as("dup_tokens")))
 
       // Patch the coverage state's touched buckets with pre-merged
       // content. min over the (dup_tokens, n_tokens) STRUCT, not each
@@ -164,9 +161,8 @@ object DupSpanIngest {
       // folding it into the patch equals the old read-time merge over
       // the full emission log — but the state stays one row per doc
       // and the reader never re-aggregates.
-      ManifestState.patchBuckets(covDir, nBuckets, "doc_id",
-        rows.select(col("doc_id")), CovSchema) { current =>
-        current.unionByName(rows)
+      State(covDir, "doc_id", CovSchema, nBuckets).patch(rows) {
+        _.unionByName(rows)
           .groupBy(col("doc_id"))
           .agg(min(struct(col("dup_tokens"), col("n_tokens"))).as("m"))
           .select(col("doc_id"), col("m.n_tokens").as("n_tokens"),
@@ -176,29 +172,10 @@ object DupSpanIngest {
       // merged new content. min/max are order-independent and
       // idempotent under re-merge, so a replayed batch commits the
       // identical bucket content.
-      ManifestState.patchBuckets(indexDir, nBuckets, "h",
-        bagg.select(col("h")), IndexSchema) { current =>
-        current.unionByName(bagg)
+      index.patch {
+        _.unionByName(bagg)
           .groupBy(col("h"))
           .agg(min(col("min_id")).as("min_id"), max(col("max_id")).as("max_id"))
       }
-      graft.operators.Iterate.unpersistCheckpoint(rows)
-      graft.operators.Iterate.unpersistCheckpoint(stats)
-    }
-
-  /** Wire the merge into a document stream (any streaming DataFrame
-    * with idCol + textCol). */
-  def run(docs: DataFrame, textCol: String, idCol: String,
-          checkpointDir: String, indexDir: String, covDir: String,
-          trigger: Trigger = Trigger.AvailableNow(),
-          k: Int = 5, nBuckets: Int = DefaultIndexBuckets,
-          retention: Option[ManifestState.Retention] = None): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(batch, textCol, idCol, indexDir, covDir, k, nBuckets)
-        retention.foreach(_.maybePrune(batchId + 1, Seq(indexDir, covDir)))
-      }
-      .start()
+    })
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.functions.{TextFunctions => TF}
+import graft.operators.Checkpoints
+import graft.streaming.BucketedIngest.{DefaultBuckets, State, pin}
 
 /** Dedup-on-ingest: exact content deduplication applied to a document
   * STREAM as it lands, instead of as a periodic batch sweep — the
@@ -27,8 +29,8 @@ import graft.functions.{TextFunctions => TF}
   *   2. CROSS-HORIZON / HISTORICAL: each micro-batch anti-joins the
   *      persistent fingerprint index of everything already ingested —
   *      a stream-static equi-join on the 32-byte key. The index IS a
-  *      bucketed table on fp ([[ManifestState]] layout, same
-  *      discipline as [[DupSpanIngest.DefaultIndexBuckets]]): the
+  *      bucketed table on fp ([[ManifestState]] layout, the
+  *      [[BucketedIngest]] discipline every ingest twin shares): the
   *      anti-join reads ONLY the buckets the batch's fingerprints
   *      hash to — any colliding history fp lives in a touched bucket
   *      by construction, so the restriction is exact — and the text
@@ -68,10 +70,10 @@ object IngestDedup {
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark("fp")
 
-  /** Index buckets (see the object doc's point 2/3). */
-  val DefaultIndexBuckets = 64
-
   private val IndexSchema = StructType.fromDDL("fp STRING")
+
+  private def index(indexDir: String, nBuckets: Int) =
+    State(indexDir, "fp", IndexSchema, nBuckets)
 
   /** The fingerprint index as a readable set — stored distinct in the
     * bucketed layout, so readers never re-aggregate. Empty frame if
@@ -92,11 +94,10 @@ object IngestDedup {
     * (read the fragments → seed them → this call) passes
     * `migrateInPlace = true` and must delete the fragments afterwards. */
   def addToIndex(fps: DataFrame, indexDir: String,
-                 nBuckets: Int = DefaultIndexBuckets,
+                 nBuckets: Int = DefaultBuckets,
                  migrateInPlace: Boolean = false): Unit = {
-    ManifestState.patchBuckets(indexDir, nBuckets, "fp", fps.select(col("fp")),
-      IndexSchema, migrateInPlace = migrateInPlace) { current =>
-      current.unionByName(fps.select(col("fp"))).distinct()
+    index(indexDir, nBuckets).patch(fps, migrateInPlace) {
+      _.unionByName(fps.select(col("fp"))).distinct()
     }
     ()
   }
@@ -107,7 +108,7 @@ object IngestDedup {
     * index. Public so the batch semantics are probe- and spec-visible
     * without a MemoryStream harness. */
   def mergeBatch(batch: DataFrame, outDir: String, indexDir: String,
-                 nBuckets: Int = DefaultIndexBuckets): Unit = synchronized {
+                 nBuckets: Int = DefaultBuckets): Unit = synchronized {
     // Collapse IN-BATCH duplicates first: the anti-join below screens
     // only against HISTORY, so a batch carrying two rows with one fp
     // would append both, violating the out-is-fp-unique contract. The
@@ -140,15 +141,13 @@ object IngestDedup {
         // would mis-resolve through the string path
         .select(batch.columns.map(c =>
           if (c == "fp") col("fp") else col("_r").getField(c).as(c)): _*)
-    val buckets = ManifestState.bucketsOf(batch.select(col("fp")), "fp", nBuckets)
-    val hist = ManifestState.readBucketsOf(
-      batch.sparkSession, indexDir, nBuckets, buckets, IndexSchema)
-    val fresh = unique
-      .join(hist, Seq("fp"), "left_anti")
-      .localCheckpoint() // two writes below; don't recompute the join
-    fresh.write.mode("append").parquet(outDir)
-    addToIndex(fresh.select(col("fp")), indexDir, nBuckets)
-    graft.operators.Iterate.unpersistCheckpoint(fresh)
+    val hist = index(indexDir, nBuckets).touch(batch).read
+    Checkpoints.scoped {
+      // two writes below; don't recompute the join
+      val fresh = pin(unique.join(hist, Seq("fp"), "left_anti"))
+      fresh.write.mode("append").parquet(outDir)
+      addToIndex(fresh, indexDir, nBuckets)
+    }
   }
 
   /** Full ingest pipeline: watermarked in-stream dedup → per-batch
@@ -160,20 +159,15 @@ object IngestDedup {
                 tsCol: String, watermark: String, checkpointDir: String,
                 outDir: String, indexDir: String,
                 trigger: Trigger = Trigger.ProcessingTime(0),
-                nBuckets: Int = DefaultIndexBuckets,
+                nBuckets: Int = DefaultBuckets,
                 retention: Option[ManifestState.Retention] = None): StreamingQuery =
-    dedupStream(docs, textCol, tsCol, watermark)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // The in-stream dedup guarantees fp-uniqueness only across
-        // the stateful horizon; a batch can still carry one row per
-        // fp that collides with history — and the index must be the
-        // CURRENT one (previous batches' patches included), so its
-        // touched buckets are read here, not captured at stream build.
-        mergeBatch(batch, outDir, indexDir, nBuckets)
-        retention.foreach(_.maybePrune(batchId + 1, Seq(indexDir)))
-      }
-      .start()
+    // The in-stream dedup guarantees fp-uniqueness only across the
+    // stateful horizon; a batch can still carry one row per fp that
+    // collides with history — and the index must be the CURRENT one
+    // (previous batches' patches included), so its touched buckets are
+    // read per batch, not captured at stream build.
+    BucketedIngest.run(dedupStream(docs, textCol, tsCol, watermark),
+        checkpointDir, trigger, Seq(indexDir), retention) { (batch, _) =>
+      mergeBatch(batch, outDir, indexDir, nBuckets)
+    }
 }

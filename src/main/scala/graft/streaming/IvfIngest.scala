@@ -3,11 +3,11 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 
 import graft.functions.{VectorFunctions => VF}
-import graft.operators.IvfAnn
+import graft.operators.{Checkpoints, IvfAnn}
+import graft.streaming.BucketedIngest.{DefaultBuckets, State, pin}
 
 /** IVF postings maintenance ON INGEST — the streaming freshness path
   * for the similarity-search index (round-15 verdict "what's missing
@@ -58,7 +58,6 @@ import graft.operators.IvfAnn
   */
 object IvfIngest {
 
-  val DefaultPostingsBuckets = 64
   private val QuantBuckets = 8 // centroids are nlist rows — tiny state
 
   private val PostingsSchema = StructType(Seq(
@@ -69,6 +68,9 @@ object IvfIngest {
     StructField("c_label", LongType, nullable = false),
     StructField("cv", ArrayType(DoubleType, containsNull = false))))
 
+  private def postingsState(postingsDir: String, nBuckets: Int) =
+    State(postingsDir, "label", PostingsSchema, nBuckets)
+
   /** The stored quantizer (c_label, cv); empty if never seeded. */
   def centroids(spark: SparkSession, quantDir: String): DataFrame =
     ManifestState.read(spark, quantDir, QuantSchema)
@@ -77,18 +79,31 @@ object IvfIngest {
   def postings(spark: SparkSession, postingsDir: String): DataFrame =
     ManifestState.read(spark, postingsDir, PostingsSchema)
 
-  private def commitQuantizer(cents: DataFrame, quantDir: String): Unit = {
-    // full replacement: touched keys = stored ∪ new labels, closure
-    // ignores current content (the quantizer is a unit, not a delta)
-    val spark = cents.sparkSession
-    val touched = cents.select(col("c_label"))
-      .unionByName(centroids(spark, quantDir).select(col("c_label")))
-      .distinct()
-    ManifestState.patchBuckets(quantDir, QuantBuckets, "c_label",
-      touched, QuantSchema) { _ =>
-      cents.select(col("c_label"), col("cv"))
-    }
-    ()
+  /** Fit the quantizer over `corpus` (vec_id, v) and commit both
+    * states: the centroids as a full replacement (touched keys = stored
+    * ∪ new labels, the closure ignores current content — the quantizer
+    * is a unit, not a delta), then the relabeled corpus's postings.
+    * `replace` rewrites every stored posting bucket with the relabeled
+    * rows (touched keys = old ∪ new labels, so every stored row's
+    * bucket is rewritten); otherwise the rows are unioned in. The fit's
+    * pins, its own tracked corpus pin included, are released on return
+    * — this thread's only. */
+  private def fitAndCommit(corpus: DataFrame, postingsDir: String, quantDir: String,
+                           nlist: Int, iters: Int, nBuckets: Int,
+                           replace: Boolean): Unit = Checkpoints.scoped {
+    val spark = corpus.sparkSession
+    val (labeled0, cents0) = IvfAnn.fitCellsWithCentroids(corpus, nlist, iters)
+    val labeled = pin(labeled0)
+    val cents = pin(cents0)
+    State(quantDir, "c_label", QuantSchema, QuantBuckets)
+      .patch(cents.select(col("c_label"))
+        .unionByName(centroids(spark, quantDir).select(col("c_label"))))(
+        _ => cents.select(col("c_label"), col("cv")))
+    val post = postingsState(postingsDir, nBuckets)
+    if (replace)
+      post.patch(labeled.select(col("label"))
+        .unionByName(postings(spark, postingsDir).select(col("label"))))(_ => labeled)
+    else post.patch(labeled)(_.unionByName(labeled).distinct())
   }
 
   /** Fit the quantizer on a seed corpus (vec_id, v) and commit BOTH
@@ -97,18 +112,10 @@ object IvfIngest {
     * over the same corpus commits identical content. */
   def seed(corpus: DataFrame, postingsDir: String, quantDir: String,
            nlist: Int, iters: Int = 5,
-           nBuckets: Int = DefaultPostingsBuckets): Unit = synchronized {
+           nBuckets: Int = DefaultBuckets): Unit = synchronized {
     require(ManifestState.readManifest(quantDir).buckets.isEmpty,
       s"seed requires an empty quantizer at $quantDir — use refit to re-quantize")
-    val (labeled0, cents0) = IvfAnn.fitCellsWithCentroids(corpus, nlist, iters)
-    val labeled = labeled0.localCheckpoint()
-    val cents = cents0.localCheckpoint()
-    commitQuantizer(cents, quantDir)
-    ManifestState.patchBuckets(postingsDir, nBuckets, "label",
-      labeled.select(col("label")), PostingsSchema)(
-      _.unionByName(labeled).distinct())
-    graft.operators.Checkpoints.releaseAll()
-    Seq(labeled, cents).foreach(graft.operators.Iterate.unpersistCheckpoint)
+    fitAndCommit(corpus, postingsDir, quantDir, nlist, iters, nBuckets, replace = false)
   }
 
   /** One micro-batch of arriving embeddings (vec_id, v): assign to the
@@ -116,18 +123,15 @@ object IvfIngest {
     * vectors (null / zero-norm) are excluded — the fitCells
     * contract. */
   def mergeBatch(batch: DataFrame, postingsDir: String, quantDir: String,
-                 nBuckets: Int = DefaultPostingsBuckets): Unit = synchronized {
-    val spark = batch.sparkSession
-    val cents = centroids(spark, quantDir)
-    require(!ManifestState.readManifest(quantDir).buckets.isEmpty,
-      s"no quantizer at $quantDir — seed one first")
-    val assigned = IvfAnn.assignTo(
-      batch.select(col("vec_id"), col("v")), cents).localCheckpoint()
-    ManifestState.patchBuckets(postingsDir, nBuckets, "label",
-      assigned.select(col("label")), PostingsSchema)(
-      _.unionByName(assigned).distinct())
-    graft.operators.Iterate.unpersistCheckpoint(assigned)
-  }
+                 nBuckets: Int = DefaultBuckets): Unit =
+    synchronized(Checkpoints.scoped {
+      val cents = centroids(batch.sparkSession, quantDir)
+      require(!ManifestState.readManifest(quantDir).buckets.isEmpty,
+        s"no quantizer at $quantDir — seed one first")
+      val assigned = pin(IvfAnn.assignTo(batch.select(col("vec_id"), col("v")), cents))
+      postingsState(postingsDir, nBuckets).patch(assigned)(
+        _.unionByName(assigned).distinct())
+    })
 
   /** Scheduled re-quantization: re-fit the quantizer over the CURRENT
     * postings and relabel them in place — quantizer first (atomic
@@ -137,21 +141,9 @@ object IvfIngest {
     * completes the relabel. */
   def refit(spark: SparkSession, postingsDir: String, quantDir: String,
             nlist: Int, iters: Int = 5,
-            nBuckets: Int = DefaultPostingsBuckets): Unit = synchronized {
-    val cur = postings(spark, postingsDir).select(col("vec_id"), col("v"))
-    val (relabeled0, cents0) = IvfAnn.fitCellsWithCentroids(cur, nlist, iters)
-    val relabeled = relabeled0.localCheckpoint()
-    val cents = cents0.localCheckpoint()
-    commitQuantizer(cents, quantDir)
-    // touched keys = old ∪ new labels so every stored row's bucket is
-    // rewritten (patchBuckets contract: replacement keys ⊆ touched)
-    val touched = relabeled.select(col("label"))
-      .unionByName(postings(spark, postingsDir).select(col("label")))
-      .distinct()
-    ManifestState.patchBuckets(postingsDir, nBuckets, "label",
-      touched, PostingsSchema)(_ => relabeled)
-    graft.operators.Checkpoints.releaseAll()
-    Seq(relabeled, cents).foreach(graft.operators.Iterate.unpersistCheckpoint)
+            nBuckets: Int = DefaultBuckets): Unit = synchronized {
+    fitAndCommit(postings(spark, postingsDir).select(col("vec_id"), col("v")),
+      postingsDir, quantDir, nlist, iters, nBuckets, replace = true)
   }
 
   /** ANN over the streamed state with PHYSICAL cell pruning: rank the
@@ -164,7 +156,7 @@ object IvfIngest {
     * when scan pruning is. */
   def topKCells(spark: SparkSession, postingsDir: String, quantDir: String,
                 queries: DataFrame, nprobe: Int, k: Int,
-                nBuckets: Int = DefaultPostingsBuckets): DataFrame = {
+                nBuckets: Int = DefaultBuckets): DataFrame = {
     val cents = centroids(spark, quantDir)
       .withColumn("cnrm", sqrt(VF.dot(col("cv"), col("cv"))))
     val q = queries.select(col("vec_id").as("qid"), col("v").as("qv"))
@@ -182,8 +174,7 @@ object IvfIngest {
       .select(col("qid"), col("qv"), col("qnrm"), col("c_label").as("label"))
     // file-level pruning: only the probed cells' buckets are read
     val cells = probes.select(col("label")).distinct()
-    val cand = ManifestState.readBucketsOf(spark, postingsDir, nBuckets,
-        ManifestState.bucketsOf(cells, "label", nBuckets), PostingsSchema)
+    val cand = postingsState(postingsDir, nBuckets).touch(cells).read
       .join(cells, Seq("label"), "left_semi")
       .withColumn("nrm", sqrt(VF.dot(col("v"), col("v"))))
     val sims = cand
@@ -195,21 +186,4 @@ object IvfIngest {
     sims.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
   }
-
-  /** Wire the merge into an embedding stream (vec_id, v), with the
-    * standard retention option. */
-  def run(vectors: DataFrame, checkpointDir: String,
-          postingsDir: String, quantDir: String,
-          trigger: Trigger = Trigger.AvailableNow(),
-          nBuckets: Int = DefaultPostingsBuckets,
-          retention: Option[ManifestState.Retention] = None): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(batch, postingsDir, quantDir, nBuckets)
-        retention.foreach(_.maybePrune(batchId + 1,
-          Seq(postingsDir, quantDir)))
-      }
-      .start()
 }

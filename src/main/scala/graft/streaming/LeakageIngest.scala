@@ -2,10 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.DupSpans
+import graft.operators.{Checkpoints, DupSpans}
+import graft.streaming.BucketedIngest.{DefaultBuckets, State, pin}
 
 /** Cross-source span leakage ON INGEST: the streaming twin of
   * `q176_source_leakage`, completing the dup-span family's symmetry
@@ -24,8 +24,8 @@ import graft.operators.DupSpans
   *      (doc_id, src, src_other, leaked_tokens) into the bucketed
   *      state at `leakDir` (bucket by doc_id, min-epoch content — see
   *      [[leakage]]) and the batch's (h, source) rows into the
-  *      bucketed index at `indexDir` ([[ManifestState]] layout, same
-  *      discipline as [[DupSpanIngest.DefaultIndexBuckets]]).
+  *      bucketed index at `indexDir` ([[ManifestState]] layout, the
+  *      same discipline as [[DupSpanIngest]]'s gram index).
   *
   * Replay idempotence (at-least-once redelivery of the LATEST batch):
   * the index at (h, source) grain is a SET contract — the patch
@@ -99,14 +99,13 @@ object LeakageIngest {
     * (epoch discipline, see object doc). */
   def mergeBatch(batch: DataFrame, textCol: String, idCol: String,
                  sourceCol: String, indexDir: String, leakDir: String,
-                 k: Int = 5,
-                 nBuckets: Int = DupSpanIngest.DefaultIndexBuckets): Unit = {
-    val g = DupSpans.grams(batch, textCol, idCol, k, carry = Seq(sourceCol))
-      .localCheckpoint() // counterpart build + leakage join
-    mergeFromGrams(batch, g, textCol, idCol, sourceCol, indexDir, leakDir,
-      k, nBuckets)
-    graft.operators.Iterate.unpersistCheckpoint(g)
-  }
+                 k: Int = 5, nBuckets: Int = DefaultBuckets): Unit =
+    Checkpoints.scoped {
+      // counterpart build + leakage join
+      val g = pin(DupSpans.grams(batch, textCol, idCol, k, carry = Seq(sourceCol)))
+      mergeFromGrams(batch, g, textCol, idCol, sourceCol, indexDir, leakDir,
+        k, nBuckets)
+    }
 
   /** The merge body over a PRECOMPUTED (and materialized) gram frame —
     * the seam [[SpanIngest]] uses to share ONE gram pass between this
@@ -116,18 +115,17 @@ object LeakageIngest {
                  textCol: String, idCol: String,
                  sourceCol: String, indexDir: String, leakDir: String,
                  k: Int, nBuckets: Int): Unit =
-    synchronized {
+    synchronized(Checkpoints.scoped {
       // The arrival clock: the index manifest epoch BEFORE this
       // batch's patch — every gram-bearing merge advances it, so a
       // later re-merge of this same batch stamps a higher epoch and
       // loses the reader's min-epoch filter.
       val epoch = ManifestState.readManifest(indexDir).epoch
-      val bySrc = g.select(col("h"), col(sourceCol).as("source")).distinct()
-        .localCheckpoint() // bucket list + counterpart union + patch retries
-      val buckets = ManifestState.bucketsOf(bySrc, "h", nBuckets)
-      val hist = ManifestState.readBucketsOf(
-        batch.sparkSession, indexDir, nBuckets, buckets, IndexSchema)
-      val counterpart = hist.unionByName(bySrc).distinct()
+      // bucket list + counterpart union + patch retries
+      val bySrc = pin(g.select(col("h"), col(sourceCol).as("source")).distinct())
+      // the probe and the index patch below share one bucket list
+      val index = State(indexDir, "h", IndexSchema, nBuckets).touch(bySrc)
+      val counterpart = index.read.unionByName(bySrc).distinct()
         .withColumnRenamed("source", "src_other")
       val leaked = g.join(counterpart, "h")
         .filter(col(sourceCol) =!= col("src_other"))
@@ -141,9 +139,7 @@ object LeakageIngest {
       val sentinel = batch.filter(col(textCol).isNotNull)
         .select(col(idCol).as("doc_id"), col(sourceCol).as("src"),
           col(sourceCol).as("src_other"), lit(0L).as("leaked_tokens"))
-      val rows = real.unionByName(sentinel)
-        .withColumn("epoch", lit(epoch))
-        .localCheckpoint() // bucket list + patch closure (and retries)
+      val rows = pin(real.unionByName(sentinel).withColumn("epoch", lit(epoch)))
 
       // Patch the leakage state's touched buckets. The closure IS the
       // min-epoch discipline: per doc, only the minimum-epoch rows
@@ -155,35 +151,12 @@ object LeakageIngest {
       // wholesale — identical outcomes to the old read-time filter
       // over the full log, because the state inductively holds each
       // doc's global min-epoch rows.
-      ManifestState.patchBuckets(leakDir, nBuckets, "doc_id",
-        rows.select(col("doc_id")), LeakSchema) { current =>
+      State(leakDir, "doc_id", LeakSchema, nBuckets).patch(rows) { current =>
         val u = current.unionByName(rows).distinct()
         val first = u.groupBy(col("doc_id")).agg(min(col("epoch")).as("epoch"))
         u.join(first, Seq("doc_id", "epoch"))
           .select(rows.columns.map(col): _*)
       }
-      ManifestState.patchBuckets(indexDir, nBuckets, "h",
-        bySrc.select(col("h")), IndexSchema) { current =>
-        current.unionByName(bySrc).distinct()
-      }
-      graft.operators.Iterate.unpersistCheckpoint(rows)
-      graft.operators.Iterate.unpersistCheckpoint(bySrc)
-    }
-
-  /** Wire the merge into a document stream (any streaming DataFrame
-    * with idCol + textCol + sourceCol). */
-  def run(docs: DataFrame, textCol: String, idCol: String,
-          sourceCol: String, checkpointDir: String, indexDir: String,
-          leakDir: String, trigger: Trigger = Trigger.AvailableNow(),
-          k: Int = 5,
-          nBuckets: Int = DupSpanIngest.DefaultIndexBuckets,
-          retention: Option[ManifestState.Retention] = None): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(batch, textCol, idCol, sourceCol, indexDir, leakDir, k, nBuckets)
-        retention.foreach(_.maybePrune(batchId + 1, Seq(indexDir, leakDir)))
-      }
-      .start()
+      index.patch(_.unionByName(bySrc).distinct())
+    })
 }

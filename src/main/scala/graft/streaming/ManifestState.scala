@@ -433,34 +433,24 @@ object ManifestState {
   /** Merge one micro-batch of decoded changes ([[CdcStream.classify]]
     * schema) into the manifest state. Safe for concurrent writers:
     * lost updates are prevented by the per-bucket check at commit; a
-    * loser recomputes against the winner's state and retries.
-    * `keepGenerations` superseded versions per bucket survive GC —
+    * loser recomputes against the winner's state and retries. It is a
+    * [[patchBuckets]] keyed by `id` whose closure keeps the latest
+    * change per id (`lsn`, then `ts_ms`); malformed rows never reach
+    * the state. `keepGenerations` superseded versions per bucket survive GC —
     * generation 1 is the reader grace window, more buys time travel
     * depth ([[readAt]]).
     */
   def mergeBatch(batch: DataFrame, root: String, nBuckets: Int,
                  maxRetries: Int = 20,
                  keepGenerations: Int = DefaultKeepGenerations): Unit = {
-    require(nBuckets > 0)
-    val spark = batch.sparkSession
-    checkRoot(spark, root, nBuckets, migrateInPlace = false)
-    val delta = batch.filter(col("event_type") =!= CdcStream.Malformed)
-      .withColumn("b", pmod(xxhash64(col("id")), lit(nBuckets)).cast("int"))
-      .cache()
-    try {
-      val affected = delta.select("b").distinct().collect().map(_.getInt(0)).sorted
-      if (affected.isEmpty) return
-      // partitionBy strips `b` into the directory name, so files read
-      // back from a version dir do NOT carry it — merge on the bare
-      // change schema and re-derive the bucket before writing
-      val bare = delta.drop("b")
-      optimisticCommit(spark, root, affected.toIndexedSeq, nBuckets, "id",
-        bare.schema, maxRetries, keepGenerations, batchId = None) { current =>
-        CdcMerge.latestWins(
-          current.unionByName(bare), Seq("id"),
-          Seq(col("lsn").desc_nulls_last, col("ts_ms").desc_nulls_last))
-      }
-    } finally delta.unpersist()
+    val delta = batch.filter(col("event_type") =!= CdcStream.Malformed).cache()
+    try patchBuckets(root, nBuckets, "id", delta, delta.schema, maxRetries,
+        keepGenerations) { current =>
+      CdcMerge.latestWins(
+        current.unionByName(delta), Seq("id"),
+        Seq(col("lsn").desc_nulls_last, col("ts_ms").desc_nulls_last))
+    }
+    finally delta.unpersist()
   }
 
   /** Generic bucketed PATCH — the schema-agnostic core the IVM views
@@ -493,17 +483,33 @@ object ManifestState {
                    keepGenerations: Int = DefaultKeepGenerations,
                    migrateInPlace: Boolean = false,
                    batchId: Option[Long] = None)
-                  (buildMerged: DataFrame => DataFrame): Boolean = {
+                  (buildMerged: DataFrame => DataFrame): Boolean =
+    patchAffected(touchedKeys.sparkSession, root, nBuckets, keyCol,
+      bucketsOf(touchedKeys, keyCol, nBuckets), schema, maxRetries,
+      keepGenerations, migrateInPlace, batchId)(buildMerged)
+
+  /** [[patchBuckets]] over a bucket list already computed from the
+    * touched keys ([[BucketedIngest.Touched]] carries one), so a probe
+    * read and the patch of the same keys share one listing job. The
+    * list is by-name: the checks and the fence run before it is
+    * computed. */
+  private[streaming] def patchAffected(spark: SparkSession, root: String,
+                                       nBuckets: Int, keyCol: String,
+                                       affected: => IndexedSeq[Int], schema: StructType,
+                                       maxRetries: Int = 20,
+                                       keepGenerations: Int = DefaultKeepGenerations,
+                                       migrateInPlace: Boolean = false,
+                                       batchId: Option[Long] = None)
+                                      (buildMerged: DataFrame => DataFrame): Boolean = {
     require(nBuckets > 0)
-    val m = checkRoot(touchedKeys.sparkSession, root, nBuckets, migrateInPlace)
+    val m = checkRoot(spark, root, nBuckets, migrateInPlace)
     // returns whether a commit actually happened — a replayed batch or
     // an empty delta is a no-op, and callers instrumenting commit
     // boundaries (crash-prefix replay seams) must not count it as one.
     // The fence comes first: a desynced id is refused whatever it touches.
     if (batchId.exists(fenced(root, m, _))) return false
-    val affected = bucketsOf(touchedKeys, keyCol, nBuckets)
-    if (affected.isEmpty) return false
-    optimisticCommit(touchedKeys.sparkSession, root, affected, nBuckets,
+    val buckets = affected
+    buckets.nonEmpty && optimisticCommit(spark, root, buckets, nBuckets,
       keyCol, schema, maxRetries, keepGenerations, batchId)(buildMerged)
   }
 

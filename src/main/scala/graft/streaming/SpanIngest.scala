@@ -3,15 +3,15 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.functions.{TextFunctions => TF}
-import graft.operators.{DupSpans, Winnow}
+import graft.operators.{Checkpoints, DupSpans, Winnow}
+import graft.streaming.BucketedIngest.{DefaultBuckets, pin}
 
 /** Fused span-level ingest: [[DupSpanIngest]] (per-doc duplicated-span
   * coverage) and [[LeakageIngest]] (cross-source leakage) over ONE
   * stream, one checkpoint, and one shared gram pass per micro-batch —
-  * and, via [[mergeBatchAll]]/[[runAll]], optionally [[WinnowIngest]]
+  * and, via [[mergeBatchAll]], optionally [[WinnowIngest]]
   * (span-overlap pairs) as a third consumer of the same pass.
   *
   * A pipeline that wants both accountings — the common case: q174's
@@ -29,6 +29,11 @@ import graft.operators.{DupSpans, Winnow}
   * source read, one checkpoint/offset log, and a single at-least-once
   * redelivery unit instead of two streams crashing at independent
   * offsets.
+  *
+  * Both entry points run one body: [[mergeBatch]] is [[mergeBatchAll]]
+  * without the winnow consumer. The shared frame's `fullk` slice is
+  * content-identical to [[DupSpans.grams]] with the source carried, so
+  * the two span twins see exactly what their solo merges build.
   *
   * State equivalence is exact, not approximate: each twin's merge
   * body is a deterministic function of (its stored state ∪ the gram
@@ -53,16 +58,9 @@ object SpanIngest {
                  sourceCol: String,
                  covIndexDir: String, covDir: String,
                  leakIndexDir: String, leakDir: String,
-                 k: Int = 5,
-                 nBuckets: Int = DupSpanIngest.DefaultIndexBuckets): Unit = {
-    val g = DupSpans.grams(batch, textCol, idCol, k, carry = Seq(sourceCol))
-      .localCheckpoint() // one pass, two twins, many consumers
-    DupSpanIngest.mergeFromGrams(batch, g, textCol, idCol,
-      covIndexDir, covDir, k, nBuckets)
-    LeakageIngest.mergeFromGrams(batch, g, textCol, idCol, sourceCol,
-      leakIndexDir, leakDir, k, nBuckets)
-    graft.operators.Iterate.unpersistCheckpoint(g)
-  }
+                 k: Int = 5, nBuckets: Int = DefaultBuckets): Unit =
+    fused(batch, textCol, idCol, sourceCol, covIndexDir, covDir,
+      leakIndexDir, leakDir, k, nBuckets, winnow = None)
 
   /** Fused merge of ALL THREE span-grain twins — coverage, leakage,
     * AND [[WinnowIngest]]'s span-overlap pairs — from ONE tokenize +
@@ -97,8 +95,23 @@ object SpanIngest {
                     winIndexDir: String, winPairsDir: String,
                     k: Int = 5, w: Int = 4, minShared: Long = 3L,
                     maxDf: Long = 20L,
-                    nBuckets: Int = DupSpanIngest.DefaultIndexBuckets): Unit = {
-    val gAll = batch
+                    nBuckets: Int = DefaultBuckets): Unit =
+    fused(batch, textCol, idCol, sourceCol, covIndexDir, covDir,
+      leakIndexDir, leakDir, k, nBuckets,
+      Some(Winnowing(winIndexDir, winPairsDir, w, minShared, maxDf)))
+
+  /** The winnow consumer's dirs and knobs. */
+  private final case class Winnowing(indexDir: String, pairsDir: String,
+                                     w: Int, minShared: Long, maxDf: Long)
+
+  private def fused(batch: DataFrame, textCol: String, idCol: String,
+                    sourceCol: String,
+                    covIndexDir: String, covDir: String,
+                    leakIndexDir: String, leakDir: String,
+                    k: Int, nBuckets: Int,
+                    winnow: Option[Winnowing]): Unit = Checkpoints.scoped {
+    // one pass, every twin, many consumers
+    val gAll = pin(batch
       .filter(col(textCol).isNotNull)
       .withColumn("fullk", TF.tokenCount(col(textCol)) >= k)
       .select(col(idCol), col(sourceCol), col("fullk"),
@@ -106,8 +119,7 @@ object SpanIngest {
       .toDF(idCol, sourceCol, "fullk", "pos0", "gram")
       .select(col(idCol), col(sourceCol), col("fullk"),
         (col("pos0") + 1).cast("long").as("pos"),
-        Winnow.gramHash(col("gram")).as("h"))
-      .localCheckpoint() // one pass, three twins, many consumers
+        Winnow.gramHash(col("gram")).as("h")))
     // The fullk slice IS DupSpans.grams(batch, …, carry = source):
     // same filters, same 1-based long positions, same hash.
     val gSpan = gAll.filter(col("fullk"))
@@ -116,64 +128,19 @@ object SpanIngest {
       covIndexDir, covDir, k, nBuckets)
     LeakageIngest.mergeFromGrams(batch, gSpan, textCol, idCol, sourceCol,
       leakIndexDir, leakDir, k, nBuckets)
-    // Winnow selection over the WHOLE frame (< k docs included): the
-    // trailing-w-window minimum per doc — Winnow.selectedPositions'
-    // window verbatim; 1-based vs 0-based pos orders identically.
-    val wm = Window.partitionBy(col(idCol)).orderBy(col("pos"))
-      .rowsBetween(-(w - 1), Window.currentRow)
-    val sel = gAll
-      .withColumn("wmin", min(col("h")).over(wm))
-      .filter(col("h") === col("wmin"))
-      .select(col(idCol).as("doc_id"), col("h")).distinct()
-      .localCheckpoint() // probed, paired, and stored; compute once
-    WinnowIngest.mergeFromSelection(batch.sparkSession, sel,
-      winIndexDir, winPairsDir, minShared, maxDf, nBuckets)
-    graft.operators.Iterate.unpersistCheckpoint(gAll)
+    winnow.foreach { win =>
+      // Winnow selection over the WHOLE frame (< k docs included): the
+      // trailing-w-window minimum per doc — Winnow.selectedPositions'
+      // window verbatim; 1-based vs 0-based pos orders identically.
+      val wm = Window.partitionBy(col(idCol)).orderBy(col("pos"))
+        .rowsBetween(-(win.w - 1), Window.currentRow)
+      // probed, paired, and stored; compute once
+      val sel = pin(gAll
+        .withColumn("wmin", min(col("h")).over(wm))
+        .filter(col("h") === col("wmin"))
+        .select(col(idCol).as("doc_id"), col("h")).distinct())
+      WinnowIngest.mergeFromSelection(batch.sparkSession, sel,
+        win.indexDir, win.pairsDir, win.minShared, win.maxDf, nBuckets)
+    }
   }
-
-  /** Wire [[mergeBatchAll]] into a document stream: one stream, one
-    * checkpoint, SIX state dirs (coverage + leakage + winnow). */
-  def runAll(docs: DataFrame, textCol: String, idCol: String,
-             sourceCol: String, checkpointDir: String,
-             covIndexDir: String, covDir: String,
-             leakIndexDir: String, leakDir: String,
-             winIndexDir: String, winPairsDir: String,
-             trigger: Trigger = Trigger.AvailableNow(),
-             k: Int = 5, w: Int = 4, minShared: Long = 3L,
-             maxDf: Long = 20L,
-             nBuckets: Int = DupSpanIngest.DefaultIndexBuckets,
-             retention: Option[ManifestState.Retention] = None): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatchAll(batch, textCol, idCol, sourceCol,
-          covIndexDir, covDir, leakIndexDir, leakDir,
-          winIndexDir, winPairsDir, k, w, minShared, maxDf, nBuckets)
-        retention.foreach(_.maybePrune(batchId + 1,
-          Seq(covIndexDir, covDir, leakIndexDir, leakDir) ++
-            WinnowIngest.stateRoots(winIndexDir, winPairsDir)))
-      }
-      .start()
-
-  /** Wire the fused merge into a document stream (idCol + textCol +
-    * sourceCol). One stream, one checkpoint, four state dirs. */
-  def run(docs: DataFrame, textCol: String, idCol: String,
-          sourceCol: String, checkpointDir: String,
-          covIndexDir: String, covDir: String,
-          leakIndexDir: String, leakDir: String,
-          trigger: Trigger = Trigger.AvailableNow(),
-          k: Int = 5,
-          nBuckets: Int = DupSpanIngest.DefaultIndexBuckets,
-          retention: Option[ManifestState.Retention] = None): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(batch, textCol, idCol, sourceCol,
-          covIndexDir, covDir, leakIndexDir, leakDir, k, nBuckets)
-        retention.foreach(_.maybePrune(batchId + 1,
-          Seq(covIndexDir, covDir, leakIndexDir, leakDir)))
-      }
-      .start()
 }

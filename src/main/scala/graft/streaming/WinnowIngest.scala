@@ -2,10 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.Winnow
+import graft.operators.{Checkpoints, Winnow}
+import graft.streaming.BucketedIngest.{DefaultBuckets, State, pin}
 
 /** Span-level dup detection ON INGEST: the streaming twin of
   * `q149_winnow_spans`, layered the same way [[IngestDedup]] twins
@@ -85,12 +85,16 @@ object WinnowIngest {
 
   private def byH(indexDir: String) = s"$indexDir/byh"
   private def byDoc(indexDir: String) = s"$indexDir/bydoc"
+  private def hState(indexDir: String, nBuckets: Int) =
+    State(byH(indexDir), "h", HSchema, nBuckets)
+  private def docState(indexDir: String, nBuckets: Int) =
+    State(byDoc(indexDir), "doc_id", DocSchema, nBuckets)
 
   /** The twin's ManifestState roots, for retention sweeps
     * ([[ManifestState.Retention]]) — the sub-state layout under
     * `indexDir` is private. */
-  private[streaming] def stateRoots(indexDir: String,
-                                    pairsDir: String): Seq[String] =
+  private[graft] def stateRoots(indexDir: String,
+                                pairsDir: String): Seq[String] =
     Seq(byH(indexDir), byDoc(indexDir), pairsDir)
 
   /** Test seam: invoked after each of [[mergeBatch]]'s three state
@@ -140,24 +144,21 @@ object WinnowIngest {
     * the fragments → seed them → this call) passes
     * `migrateInPlace = true` and must delete the fragments after. */
   def seedIndex(fps: DataFrame, indexDir: String, maxDf: Long = 20L,
-                nBuckets: Int = DupSpanIngest.DefaultIndexBuckets,
-                migrateInPlace: Boolean = false): Unit = {
-    val spark = fps.sparkSession
-    require(ManifestState.readManifest(byH(indexDir)).buckets.isEmpty,
+                nBuckets: Int = DefaultBuckets,
+                migrateInPlace: Boolean = false): Unit = Checkpoints.scoped {
+    val hs = hState(indexDir, nBuckets)
+    require(hs.isEmpty,
       s"seedIndex requires an empty state at $indexDir — merge batches instead")
-    if (!migrateInPlace) requireNoLegacyIndex(spark, indexDir)
-    val s = fps.select(col("doc_id"), col("h")).distinct().localCheckpoint()
-    val hot = s.groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxDf).select(col("h")).localCheckpoint()
-    val live = s.join(hot, Seq("h"), "left_anti").localCheckpoint()
+    if (!migrateInPlace) requireNoLegacyIndex(fps.sparkSession, indexDir)
+    val s = pin(fps.select(col("doc_id"), col("h")).distinct())
+    val hot = pin(s.groupBy(col("h")).agg(count(lit(1)).as("df"))
+      .filter(col("df") > maxDf).select(col("h")))
+    val live = pin(s.join(hot, Seq("h"), "left_anti"))
     val hRows = live.select(col("h"), col("doc_id"))
       .unionByName(hot.select(col("h"), lit(null).cast("long").as("doc_id")))
-    ManifestState.patchBuckets(byH(indexDir), nBuckets, "h",
-      hRows.select(col("h")), HSchema)(_.unionByName(hRows))
-    ManifestState.patchBuckets(byDoc(indexDir), nBuckets, "doc_id",
-      live.select(col("doc_id")), DocSchema)(
+    hs.patch(hRows)(_.unionByName(hRows))
+    docState(indexDir, nBuckets).patch(live)(
       _.unionByName(live.select(col("doc_id"), col("h"))))
-    Seq(live, hot, s).foreach(graft.operators.Iterate.unpersistCheckpoint)
   }
 
   /** Flagged pairs so far: (doc_a, doc_b, n_shared, overlap_r),
@@ -186,9 +187,8 @@ object WinnowIngest {
     * against synthetic double-emissions. */
   private[graft] def patchPairs(newPairs: DataFrame, pairsDir: String,
                                 nBuckets: Int): Unit = {
-    ManifestState.patchBuckets(pairsDir, nBuckets, "doc_a",
-      newPairs.select(col("doc_a")), PairsSchema) { current =>
-      current.unionByName(newPairs)
+    State(pairsDir, "doc_a", PairsSchema, nBuckets).patch(newPairs) {
+      _.unionByName(newPairs)
         .groupBy(col("doc_a"), col("doc_b"))
         .agg(max(struct(col("n_shared"), col("overlap_r"))).as("s"))
         .select(col("doc_a"), col("doc_b"),
@@ -203,16 +203,17 @@ object WinnowIngest {
                  indexDir: String, pairsDir: String,
                  k: Int = 5, w: Int = 4, minShared: Long = 3L,
                  maxDf: Long = 20L,
-                 nBuckets: Int = DupSpanIngest.DefaultIndexBuckets): Unit = {
-    val batchSel = Winnow.selectFingerprints(batch, textCol, idCol, k, w)
-      .withColumnRenamed(idCol, "doc_id")
-      .localCheckpoint() // probed, paired, and stored; compute once
-    mergeFromSelection(batch.sparkSession, batchSel, indexDir, pairsDir,
-      minShared, maxDf, nBuckets)
-  }
+                 nBuckets: Int = DefaultBuckets): Unit =
+    Checkpoints.scoped {
+      // probed, paired, and stored; compute once
+      val batchSel = pin(Winnow.selectFingerprints(batch, textCol, idCol, k, w)
+        .withColumnRenamed(idCol, "doc_id"))
+      mergeFromSelection(batch.sparkSession, batchSel, indexDir, pairsDir,
+        minShared, maxDf, nBuckets)
+    }
 
-  /** Merge a precomputed winnow SELECTION — (doc_id, h) rows, caller-
-    * localCheckpointed (unpersisted here) — into the states. The seam
+  /** Merge a precomputed winnow SELECTION — (doc_id, h) rows, pinned
+    * by the caller — into the states. The seam
     * [[SpanIngest]]'s fused path uses to derive the selection from its
     * shared gram frame instead of re-tokenizing; [[mergeBatch]]
     * delegates here, so the two paths cannot diverge semantically. */
@@ -220,33 +221,32 @@ object WinnowIngest {
                  batchSel: DataFrame,
                  indexDir: String, pairsDir: String,
                  minShared: Long, maxDf: Long,
-                 nBuckets: Int): Unit = synchronized {
+                 nBuckets: Int): Unit = synchronized(Checkpoints.scoped {
     // refuse before the first of the three commits: the pair log is
     // only patched last, after bydoc and byh have committed
     requireNoLegacyIndex(spark, indexDir)
     ManifestState.requireNoLegacyLayout(spark, pairsDir, pairsDir)
-    val hKeys = batchSel.select(col("h")).distinct().localCheckpoint()
+    val hKeys = pin(batchSel.select(col("h")).distinct())
 
     // Only the batch's fingerprints can change state (df is untouched
-    // elsewhere) — read exactly their buckets, restricted to them.
-    val buckets = ManifestState.bucketsOf(hKeys, "h", nBuckets)
-    val stored = ManifestState.readBucketsOf(
-        spark, byH(indexDir), nBuckets, buckets, HSchema)
-      .join(hKeys, Seq("h"), "left_semi")
+    // elsewhere) — read exactly their buckets, restricted to them; the
+    // byh patch below rewrites the same buckets.
+    val byh = hState(indexDir, nBuckets).touch(hKeys)
+    val stored = byh.read.join(hKeys, Seq("h"), "left_semi")
     val hotAlready = stored.filter(col("doc_id").isNull)
       .select(col("h")).distinct()
     // occurrences of an already-hot fingerprint neither pair nor store
     val liveBatch = batchSel.join(hotAlready, Seq("h"), "left_anti")
-    val seen = stored.filter(col("doc_id").isNotNull)
+    // df aggregate + pair join + both patches
+    val seen = pin(stored.filter(col("doc_id").isNotNull)
       .select(col("h"), col("doc_id"))
       .unionByName(liveBatch.select(col("h"), col("doc_id")))
-      .distinct()
-      .localCheckpoint() // df aggregate + pair join + both patches
+      .distinct())
     // Emission-time guard over stored ∪ batch — exact: every
     // occurrence of a batch fingerprint lives in a touched bucket.
-    val newlyHot = seen.groupBy(col("h")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxDf).select(col("h")).localCheckpoint()
-    val live = seen.join(newlyHot, Seq("h"), "left_anti").localCheckpoint()
+    val newlyHot = pin(seen.groupBy(col("h")).agg(count(lit(1)).as("df"))
+      .filter(col("df") > maxDf).select(col("h")))
+    val live = pin(seen.join(newlyHot, Seq("h"), "left_anti"))
 
     // 1) bydoc FIRST: the replacement keyed by document. A (doc, h)
     //    row with h in the batch exists only for docs in `seen`
@@ -262,9 +262,9 @@ object WinnowIngest {
     //    committed first, a crash in between replays with the carriers
     //    still live in byh, re-deriving the same `seen` set and
     //    re-committing identical bydoc content (set semantics).
-    ManifestState.patchBuckets(byDoc(indexDir), nBuckets, "doc_id",
-      seen.select(col("doc_id")), DocSchema) { current =>
-      current.join(hKeys, Seq("h"), "left_anti")
+    val bydoc = docState(indexDir, nBuckets)
+    bydoc.patch(seen) {
+      _.join(hKeys, Seq("h"), "left_anti")
         .unionByName(live.select(col("doc_id"), col("h")))
     }
     onPatchCommitted()
@@ -272,9 +272,8 @@ object WinnowIngest {
     //    survive, hot fingerprints collapse to one null-doc marker.
     val hotMarkers = hotAlready.unionByName(newlyHot).distinct()
       .select(col("h"), lit(null).cast("long").as("doc_id"))
-    ManifestState.patchBuckets(byH(indexDir), nBuckets, "h",
-      hKeys, HSchema) { current =>
-      current.join(hKeys, Seq("h"), "left_anti")
+    byh.patch {
+      _.join(hKeys, Seq("h"), "left_anti")
         .unionByName(live.select(col("h"), col("doc_id")))
         .unionByName(hotMarkers)
     }
@@ -284,7 +283,7 @@ object WinnowIngest {
     // batch; a < b orientation dedups batch-vs-batch pairs counted
     // from both sides.
     val gBatch = liveBatch.join(newlyHot, Seq("h"), "left_anti")
-    val rawPairs = gBatch.select(col("doc_id").as("p"), col("h"))
+    val rawPairs = pin(gBatch.select(col("doc_id").as("p"), col("h"))
       .join(live.select(col("doc_id").as("q"), col("h")), "h")
       .filter(col("p") =!= col("q"))
       .select(least(col("p"), col("q")).as("doc_a"),
@@ -292,8 +291,7 @@ object WinnowIngest {
       .distinct()
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
-      .localCheckpoint()
+      .filter(col("n_shared") >= minShared))
     // sel_n (the overlap denominator) = each pair doc's CURRENT
     // guarded-fingerprint count — a bucket-local count over bydoc,
     // read AFTER the patch so batch arrivals and this batch's hot
@@ -302,42 +300,17 @@ object WinnowIngest {
     val pairDocs = rawPairs.select(col("doc_a").as("doc_id"))
       .unionByName(rawPairs.select(col("doc_b").as("doc_id")))
       .distinct()
-    val docBuckets = ManifestState.bucketsOf(pairDocs, "doc_id", nBuckets)
-    val selN = ManifestState.readBucketsOf(
-        spark, byDoc(indexDir), nBuckets, docBuckets, DocSchema)
+    val selN = bydoc.touch(pairDocs).read
       .join(pairDocs, Seq("doc_id"), "left_semi")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("sel_n"))
-    val newPairs = rawPairs
+    // bucket list + patch closure
+    val newPairs = pin(rawPairs
       .join(selN.select(col("doc_id").as("doc_a"), col("sel_n").as("na")), "doc_a")
       .join(selN.select(col("doc_id").as("doc_b"), col("sel_n").as("nb")), "doc_b")
       .select(col("doc_a"), col("doc_b"), col("n_shared"),
         round(col("n_shared").cast("double") /
-          least(col("na"), col("nb")).cast("double"), 4).as("overlap_r"))
-      .localCheckpoint() // bucket list + patch closure
+          least(col("na"), col("nb")).cast("double"), 4).as("overlap_r")))
     patchPairs(newPairs, pairsDir, nBuckets)
     onPatchCommitted()
-    Seq(newPairs, rawPairs, live, newlyHot, seen, hKeys, batchSel)
-      .foreach(graft.operators.Iterate.unpersistCheckpoint)
-  }
-
-  /** Wire the merge into a document stream (any streaming DataFrame
-    * with idCol + textCol); the winnowing/guard knobs forward to
-    * every batch so stream and batch-test configurations agree. */
-  def run(docs: DataFrame, textCol: String, idCol: String,
-          checkpointDir: String, indexDir: String, pairsDir: String,
-          trigger: Trigger = Trigger.AvailableNow(),
-          k: Int = 5, w: Int = 4, minShared: Long = 3L,
-          maxDf: Long = 20L,
-          nBuckets: Int = DupSpanIngest.DefaultIndexBuckets,
-          retention: Option[ManifestState.Retention] = None): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(batch, textCol, idCol, indexDir, pairsDir,
-          k, w, minShared, maxDf, nBuckets)
-        retention.foreach(_.maybePrune(batchId + 1,
-          stateRoots(indexDir, pairsDir)))
-      }
-      .start()
+  })
 }
